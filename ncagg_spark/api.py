@@ -6,7 +6,14 @@ reference's ``aggregate(files, output, config=None)`` entry point
 Lifecycle mapping (SURVEY.md §3): the reference's plan phase becomes an
 unexecuted DataFrame composition (Catalyst is the planner); the execute
 phase is one write action. Attribute reduction runs as its own tiny job
-over the file manifest, exactly like the reference's finalize.
+over the file manifest, exactly like the reference's finalize. As the
+reference's result is its one output file, the aggregate entry points
+return a scan of the rows written to ``output``, not the lineage that
+built them: later actions read the sink instead of re-running decode,
+dedup and gap-fill. The scan's columns have the lineage's names, types
+and order, all nullable (as on any Parquet read). Its file list is fixed
+when it is returned, so once ``output`` is overwritten its actions fail
+with FILE_NOT_EXIST; read ``output`` again for the new rows.
 """
 
 from __future__ import annotations
@@ -111,7 +118,9 @@ def aggregate(
     representative element, and fills carry synthesized inner-cadence
     arrays (the reference's ``-u udim:ivar:hz:hz``).
 
-    Returns the result DataFrame (already written to ``output``).
+    Returns a scan of the rows written to ``output`` (see the module
+    docstring): nullable columns, and stale once ``output`` is
+    overwritten.
     """
     return _aggregate_df(
         spark,
@@ -163,6 +172,10 @@ def aggregate_nc(
     the name is absent from the granule — creates a new unlimited dim
     carrying every dimensionless variable (the crota per-file-scalar
     case). See sources/nc_granules.py:_promote_record_dim.
+
+    Returns a scan of the rows written to ``output``, as ``aggregate``
+    does: exporting it (``write_nc_aggregate_streamed``) reads the
+    Parquet sink, not the granules.
     """
     from ncagg_spark.functions.time import cf_to_timestamp
     from ncagg_spark.sources.nc_granules import (
@@ -267,7 +280,14 @@ def _aggregate_df(
     (array) time variable: ordering/dedup/gap-fill run on the
     representative element (``<ivar>_rep``, kept in the output) and
     fill rows get synthesized inner-cadence arrays. ``inner_size``
-    defaults to the widest observed array."""
+    defaults to the widest observed array.
+
+    Returns ``spark.read.schema(...).parquet(output)`` projected to the
+    regularized columns: the rows written, with the lineage's column
+    names, types and order, all nullable. The explicit schema skips
+    Parquet schema inference (no extra job) and the projection drops the
+    ``dt`` directory column of ``partition_by_date``. The file list is
+    fixed here; once ``output`` is overwritten, read it again."""
     # validate BEFORE any projection adds declared-but-absent columns as
     # nulls (P4): a typo'd index_by must raise here, not silently drop
     # every row downstream
@@ -390,7 +410,12 @@ def _aggregate_df(
         num_files=num_files,
         partition_by_date=partition_by_date,
     )
-    return out
+    # the rows just written, not the lineage: a later action (the .nc
+    # export's persist + spec pass) reads the small sink instead of
+    # re-running decode -> dedup -> gap-fill
+    return (
+        spark.read.schema(out.schema).parquet(output).select(*out.columns)
+    )
 
 
 @dataclass
@@ -428,7 +453,9 @@ def aggregate_multi(
     overlap on heavy columns or the source is remote; at very large
     scale prefer the default and let pruning do the work.
 
-    Returns {grain name -> result DataFrame} (each already written).
+    Returns {grain name -> scan of the rows written to that grain's
+    output}, as ``aggregate`` does. The scans do not depend on the
+    ``share_scan`` persist, so they stay usable after it is released.
     """
     src = read_granules(spark, files)
     if share_scan:

@@ -238,7 +238,7 @@ def main(argv: list[str] | None = None) -> int:
                 anchor=args.anchor,
             )
         spark = get_spark(app_name="ncagg-aggregate", cpus=args.cpus)
-        aggregate_multi(
+        written = aggregate_multi(
             spark,
             src,
             grains,
@@ -246,7 +246,7 @@ def main(argv: list[str] | None = None) -> int:
             num_files=args.num_files,
         )
         for name, g in grains.items():
-            n = spark.read.parquet(g.output).count()
+            n = written[name].count()
             print(f"wrote {n} records to {g.output}", file=sys.stderr)
         return 0
 
@@ -340,7 +340,7 @@ def main(argv: list[str] | None = None) -> int:
             record_chunksize=rec_chunk,
             compression=args.complevel,
         )
-    n = spark.read.parquet(parquet_dst).count()
+    n = out.count()
     print(f"wrote {n} records to {args.dst}", file=sys.stderr)
     return 0
 

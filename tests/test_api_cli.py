@@ -18,6 +18,7 @@ from ncagg_spark.api import (
 )
 from ncagg_spark.cli import main as cli_main, parse_bounds
 from ncagg_spark.config import AggregationConfig
+from tests.conftest import assert_same_columns, assert_scan_of
 
 T0_US = 1_704_153_600_000_000  # 2024-01-02T00:00:00Z
 
@@ -306,3 +307,69 @@ def test_typoed_index_raises_before_planning(spark, granule_dir, tmp_path):
             cfg,
             columns=["tss", "value"],
         )
+
+
+# ---------------------------------------------------------------------------
+# return contract: the aggregate entry points hand back a scan of the rows
+# they wrote, so later actions never re-run the build
+# ---------------------------------------------------------------------------
+
+
+def test_aggregate_returns_scan_of_output(
+    spark, granule_dir, tmp_path, written_lineage
+):
+    out_path = str(tmp_path / "scan_out")
+    got = aggregate(
+        spark,
+        [f"{granule_dir}/g{i}.parquet" for i in range(3)],
+        out_path,
+        _day_cfg(),
+    )
+    assert_scan_of(got, out_path)
+    assert_same_columns(got, written_lineage[0])
+    # the rows written are the rows the lineage built
+    assert got.exceptAll(written_lineage[0]).count() == 0
+    assert written_lineage[0].exceptAll(got).count() == 0
+
+
+def test_aggregate_partition_by_date_scan_has_no_dt(
+    spark, granule_dir, tmp_path, written_lineage
+):
+    out_path = str(tmp_path / "dt_out")
+    got = aggregate(
+        spark,
+        [f"{granule_dir}/g{i}.parquet" for i in range(3)],
+        out_path,
+        _day_cfg(),
+        partition_by_date=True,
+    )
+    assert "dt" in spark.read.parquet(out_path).columns  # directory column
+    assert "dt" not in got.columns
+    assert_scan_of(got, out_path)
+    assert_same_columns(got, written_lineage[0])
+    assert got.count() == 60
+
+
+def test_aggregate_multi_share_scan_results_outlive_unpersist(
+    spark, two_grain_dir, tmp_path
+):
+    """The share_scan persist is released in aggregate_multi's finally;
+    the returned scans read the written grains, not the released cache."""
+    from ncagg_spark.api import GrainSpec, aggregate_multi
+
+    cfg_a, cfg_b = _grain_cfgs()
+    multi = str(tmp_path / "multi_scan")
+    got = aggregate_multi(
+        spark,
+        [f"{two_grain_dir}/g{i}.parquet" for i in range(2)],
+        {
+            "a": GrainSpec(f"{multi}/a", cfg_a, columns=["ts_a", "val_a"]),
+            "b": GrainSpec(f"{multi}/b", cfg_b, columns=["ts_b", "val_b"]),
+        },
+        share_scan=True,
+    )
+    for name, n in (("a", 60), ("b", 30)):
+        assert_scan_of(got[name], f"{multi}/{name}")
+        rows = got[name].collect()
+        assert len(rows) == n
+        assert sum(not r["is_fill"] for r in rows) == n

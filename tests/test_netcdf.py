@@ -24,6 +24,7 @@ from ncagg_spark.sources.netcdf3 import (
     read_netcdf3,
     write_netcdf3,
 )
+from tests.conftest import assert_same_columns, assert_scan_of
 
 T0 = 1_704_153_600.0  # 2024-01-02 UTC, seconds
 
@@ -496,3 +497,61 @@ def test_write_nc_granules_netcdf4(spark, tmp_path):
     # and the engine's own reader ingests the .nc4 granules back
     back = read_nc_granules(spark, [m["path"] for m in man])
     assert back.count() == 8
+
+
+# ---------------------------------------------------------------------------
+# return contract: aggregate_nc hands back a scan of the rows it wrote, so
+# the single-file export reads the sink instead of re-decoding granules
+# ---------------------------------------------------------------------------
+
+
+def _jittered_granules(tmp_path):
+    """Three 1 Hz granules off the grid phase: g1 overlaps g0 by two
+    records, and a 7 s gap precedes g2."""
+    return [
+        _granule(tmp_path / "g0.nc", T0 + 0.2, 10),
+        _granule(tmp_path / "g1.nc", T0 + 8.2, 10),
+        _granule(tmp_path / "g2.nc", T0 + 25.3, 5),
+    ]
+
+
+def _prev_cfg():
+    return AggregationConfig(
+        index_by="time", cadence_hz=1.0, min_bound=T0, max_bound=T0 + 32
+    )
+
+
+def test_aggregate_nc_returns_scan_of_output(
+    spark, tmp_path, written_lineage
+):
+    out = str(tmp_path / "agg")
+    got = aggregate_nc(
+        spark, _jittered_granules(tmp_path), out, _prev_cfg(),
+        anchor="previous",
+    )
+    assert_scan_of(got, out)
+    assert_same_columns(got, written_lineage[0])
+    assert got.exceptAll(written_lineage[0]).count() == 0
+    assert written_lineage[0].exceptAll(got).count() == 0
+
+
+@pytest.mark.parametrize("fmt", ["classic", "netcdf4"])
+def test_export_of_returned_scan_matches_lineage_export(
+    spark, tmp_path, written_lineage, fmt
+):
+    """Exporting aggregate_nc's return value writes the same bytes as
+    exporting the regularize lineage built from the same inputs."""
+    from ncagg_spark.sources.nc_granules import write_nc_aggregate_streamed
+
+    got = aggregate_nc(
+        spark, _jittered_granules(tmp_path), str(tmp_path / "agg"),
+        _prev_cfg(), anchor="previous",
+    )
+    n_fill = got.filter(F.col("is_fill")).count()
+    assert n_fill > 0 and got.count() > n_fill  # gaps filled, data kept
+    scan, lineage = tmp_path / "scan.nc", tmp_path / "lineage.nc"
+    write_nc_aggregate_streamed(got, str(scan), index_col="time", fmt=fmt)
+    write_nc_aggregate_streamed(
+        written_lineage[0], str(lineage), index_col="time", fmt=fmt
+    )
+    assert scan.read_bytes() == lineage.read_bytes()

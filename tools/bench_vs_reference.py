@@ -117,17 +117,18 @@ def run_engine(spark, files, cfg, out_dir, inner_hz, repeats):
         # output-format parity: ALSO export the materialized sink to the
         # single-file .nc the reference produces (streamed classic
         # writer) and report that wall time separately — engine_sec is
-        # the native-sink pipeline, engine_nc_sec adds the .nc artifact
+        # the native-sink pipeline, engine_nc_sec adds the .nc artifact.
+        # aggregate_nc returns a scan of the sink it wrote, so df is
+        # exported as is
         from ncagg_spark.sources.nc_granules import (
             write_nc_aggregate_streamed,
         )
 
         idx = cfg.index_by
-        exp = spark.read.parquet(f"{out_dir}/run{i}")
-        if f"{idx}_rep" in exp.columns:
+        if f"{idx}_rep" in df.columns:
             # multidim result: export on the representative element
             idx = f"{idx}_rep"
-        write_nc_aggregate_streamed(exp, f"{out_dir}/run{i}.nc",
+        write_nc_aggregate_streamed(df, f"{out_dir}/run{i}.nc",
                                     index_col=idx)
         dt_nc = time.time() - t0
         rows = df.count()  # verification, outside the timed region

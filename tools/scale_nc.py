@@ -81,9 +81,8 @@ def main() -> None:
     )
     out = f"{tmp}/agg"
     t0 = time.time()
-    aggregate_nc(spark, paths, out, cfg)
+    got = aggregate_nc(spark, paths, out, cfg)  # a scan of the sink
     t_agg = time.time() - t0
-    got = spark.read.parquet(out)
     print(
         f"aggregate_nc end-to-end: {t_agg:.2f}s = "
         f"{n_rows/t_agg/1e6:.2f}M rows/s "
@@ -93,7 +92,7 @@ def main() -> None:
 
     t0 = time.time()
     manifest = write_nc_granules(
-        spark.read.parquet(out).drop("is_fill"),
+        got.drop("is_fill"),
         f"{tmp}/export",
         index_col="time",
         interval_us=3_600_000_000,  # hourly granules out
@@ -112,7 +111,7 @@ def main() -> None:
     one = f"{tmp}/aggregate.nc"
     t0 = time.time()
     write_nc_aggregate_streamed(
-        spark.read.parquet(out).drop("is_fill"), one, index_col="time"
+        got.drop("is_fill"), one, index_col="time"
     )
     t_one = time.time() - t0
     import os
@@ -128,7 +127,7 @@ def main() -> None:
     one4 = f"{tmp}/aggregate.nc4"
     t0 = time.time()
     write_nc_aggregate_streamed(
-        spark.read.parquet(out).drop("is_fill"),
+        got.drop("is_fill"),
         one4,
         index_col="time",
         fmt="netcdf4",
