@@ -22,57 +22,46 @@ Spark-first shape:
 Cosine ranking via the unit-sphere identity: for unit vectors,
 ||a - b||^2 = 2 - 2 cos(a, b), so L2-PQ over normalized vectors ranks by
 cosine and `approx_cosine = 1 - dist2 / 2` recovers the score scale.
+
+Every search here is candidate generation followed by the shared spine
+of pipeline/topk.py: ADC (Arrow ``partial_topk`` per batch, or the
+relational ``_adc_expr`` fold) proposes the k*expand best candidates
+per query under ``rank_per_query``'s tie rule, and an exact cosine
+rerank (``_exact_rerank`` / ``_rerank_by_query`` — two vector-fetch
+join shapes) ends in the same ``cosine`` / ``cosine_topk`` tail as the
+exact searches of pipeline/similarity.py. The IVF coarse quantizer
+reuses similarity.py's centroid scoring, so the index and the
+relational path assign cells by the same quantized rule.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ncagg_spark.functions.vectors import l2_norm, norm_guard
+from ncagg_spark.pipeline.similarity import (
+    _cell_scores,
+    _centroid_matrix,
+    _larger_cell_argmax,
+    _stack,
+    assign_cells,
+    quantized_probe_col,
+    sample_centroids,
+)
+from ncagg_spark.pipeline.topk import (
+    cosine,
+    cosine_topk,
+    partial_topk,
+    rank_per_query,
+)
+
 
 def _unit_rows(X: np.ndarray) -> np.ndarray:
     n = np.linalg.norm(X, axis=1, keepdims=True)
     return X / np.maximum(n, 1e-300)
-
-
-def _topk_ties_by_id(
-    key: np.ndarray, nids: np.ndarray, take: int, pre=None
-) -> np.ndarray:
-    """Row indices of the ``take`` smallest keys, ties broken by
-    neighbor id ascending — deterministic under ANY input row order.
-    A bare argpartition can pick either of two boundary-tied rows, so
-    the truncated candidate set would depend on partitioning; ties are
-    REAL here (PQ maps near-replica vectors to identical codes, so
-    their ADC distances are bit-equal). Stable argsorts (not lexsort)
-    so string ids work; n is one Arrow batch.
-
-    Near-linear (ADVICE r10): an O(n) partition finds the take-th
-    smallest key, the EXACT threshold superset (``key <= thr`` keeps
-    every boundary-tied row, so determinism is unchanged) is selected
-    in O(n), and the two stable tie-break sorts run only on that
-    usually-tiny subset. ``pre`` optionally passes the id pre-sort
-    ``np.argsort(nids, kind="stable")`` hoisted once per batch —
-    measured (1M rows, take=20): subset path 9.3 ms/query vs 276 ms
-    for the old two-full-argsort form; the hoisted-pre variant is
-    slightly SLOWER (10.9 ms + 118 ms once) because its O(n) boolean
-    gather beats nothing once the subset sort is tiny, so call sites
-    omit it when take << n."""
-    n = len(key)
-    if take <= 0:
-        return np.empty(0, dtype=np.intp)
-    if take < n:
-        thr = np.partition(key, take - 1)[take - 1]
-        if pre is not None:
-            keep = key <= thr
-            sub = pre[keep[pre]]
-        else:
-            sel = np.flatnonzero(key <= thr)
-            sub = sel[np.argsort(nids[sel], kind="stable")]
-    else:
-        sub = pre if pre is not None else np.argsort(nids, kind="stable")
-    order = sub[np.argsort(key[sub], kind="stable")]
-    return order[:take]
 
 
 def pq_train(
@@ -163,11 +152,7 @@ def pq_encode(
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = _unit_rows(
-                np.asarray(
-                    [np.asarray(x, dtype="float64") for x in pdf["__vec"]]
-                )
-            )
+            X = _unit_rows(_stack(pdf["__vec"]))
             codes = np.empty((len(X), m), dtype="int32")
             for s in range(m):
                 Xs = X[:, s * sub : (s + 1) * sub]
@@ -203,8 +188,6 @@ def pq_topk(
     partitions x queries x k rows. Returns (query_id, neighbor_id, rank,
     approx_cosine).
     """
-    import builtins
-
     query_id_col = query_id_col or id_col
     n_type = {
         f.name: f.dataType.simpleString() for f in codes_df.schema.fields
@@ -250,31 +233,18 @@ def pq_topk(
             dist2 = np.zeros((len(codes), len(qids)), dtype="float64")
             for s in range(m):
                 dist2 += LUT[s][:, codes[:, s]].T
-            dist2[nids[:, None] == qids[None, :]] = np.inf
-            take = builtins.min(kk, dist2.shape[0])
-            qi, ni, cs = [], [], []
-            for j in range(dist2.shape[1]):
-                rows = _topk_ties_by_id(dist2[:, j], nids, take)
-                qi.extend([qids[j]] * len(rows))
-                ni.extend(nids[rows])
-                cs.extend(1.0 - dist2[rows, j] / 2.0)
-            out = pd.DataFrame(
+            qi, ni, d = partial_topk(dist2, nids, qids, kk)
+            yield pd.DataFrame(
                 {
                     "query_id": qi,
                     "neighbor_id": ni,
-                    "approx_cosine": cs,
+                    "approx_cosine": 1.0 - d / 2.0,
                 }
             )
-            yield out[np.isfinite(out["approx_cosine"])]
 
     partial = codes_df.mapInPandas(score, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "approx_cosine")
+    return rank_per_query(partial, "approx_cosine", k).select(
+        "query_id", "neighbor_id", "rank", "approx_cosine"
     )
 
 
@@ -394,28 +364,45 @@ def _exact_rerank(
     candidate set against the raw corpus vectors — the scan that touches
     full vectors is proportional to the candidate count, not the corpus
     (the candidate side broadcasts)."""
-    from ncagg_spark.functions.vectors import dot, l2_norm, norm_guard
-
     cvecs = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__nvec"),
     )
     scored = cvecs.join(F.broadcast(cands), on="neighbor_id").withColumn(
         "cosine",
-        F.round(
-            dot("__qvec", "__nvec")
-            / (norm_guard(l2_norm("__qvec")) * norm_guard(l2_norm("__nvec"))),
-            6,
+        cosine(
+            "__qvec",
+            "__nvec",
+            norm_guard(l2_norm("__qvec")),
+            norm_guard(l2_norm("__nvec")),
         ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    return cosine_topk(scored, k)
+
+
+def _adc_rerank(
+    corpus: DataFrame,
+    pairs: DataFrame,
+    books: list[list[float]],
+    *,
+    m: int,
+    sub: int,
+    k: int,
+    expand: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The relational PQ search tail: ADC-score the (query_id, __qvec,
+    neighbor_id, __code_*) candidate pairs, keep the ``k * expand``
+    smallest distances per query (ties by neighbor id), then exact
+    cosine rerank them."""
+    scored = pairs.withColumn(
+        "__dist2", F.expr(_adc_expr(books, m=m, sub=sub, qvec_col="__qvec"))
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    cands = rank_per_query(
+        scored, "__dist2", k * expand, ascending=True
+    ).select("query_id", "neighbor_id", "__qvec")
+    return _exact_rerank(corpus, cands, k=k, id_col=id_col, vec_col=vec_col)
 
 
 def pq_topk_relational(
@@ -493,22 +480,14 @@ def pq_topk_relational(
     q = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
     )
-    joined = enc.join(
+    # -- ADC scoring, then exact cosine rerank of the candidates --
+    pairs = enc.join(
         F.broadcast(q), F.col("neighbor_id") != F.col("query_id")
-    ).withColumn(
-        "__dist2", F.expr(_adc_expr(books, m=m, sub=sub, qvec_col="__qvec"))
     )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("__dist2").asc(), F.col("neighbor_id").asc()
+    return _adc_rerank(
+        corpus, pairs, books, m=m, sub=sub, k=k, expand=expand,
+        id_col=id_col, vec_col=vec_col,
     )
-    cands = (
-        joined.withColumn("__rn", F.row_number().over(w_adc))
-        .filter(F.col("__rn") <= k * expand)
-        .select("query_id", "neighbor_id", "__qvec")
-    )
-
-    # -- exact cosine rerank of the candidate set --
-    return _exact_rerank(corpus, cands, k=k, id_col=id_col, vec_col=vec_col)
 
 
 def _rerank_by_query(
@@ -525,8 +504,6 @@ def _rerank_by_query(
     the production rerank shared by ``pq_topk_rerank`` and
     ``ivf_pq_topk`` (one contract: round-6 cosine, ties by neighbor id,
     candidate-bounded vector fetch via broadcast joins)."""
-    from ncagg_spark.functions.vectors import dot, l2_norm, norm_guard
-
     cand_vecs = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
@@ -538,19 +515,9 @@ def _rerank_by_query(
         norm_guard(l2_norm(vec_col)).alias("q_norm"),
     )
     scored = cand_vecs.join(F.broadcast(q), on="query_id").withColumn(
-        "cosine",
-        F.round(
-            dot("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm")), 6
-        ),
+        "cosine", cosine("q_vec", "c_vec", "q_norm", "c_norm")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return cosine_topk(scored, k)
 
 
 def pq_topk_rerank(
@@ -643,12 +610,6 @@ def ivf_pq_topk_relational(
     touches ~n_probe/n_cells of the codes. Production throughput path =
     ``build_ivf_pq_index`` + ``ivf_pq_topk`` (Arrow batch math).
     """
-    from ncagg_spark.pipeline.similarity import (
-        assign_cells,
-        quantized_probe_col,
-        sample_centroids,
-    )
-
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sub = dim // m
@@ -706,24 +667,14 @@ def ivf_pq_topk_relational(
         ).alias("cell"),
     )
 
-    # -- ADC within probed cells only --
-    joined = (
-        enc.join(F.broadcast(q), on="cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "__dist2",
-            F.expr(_adc_expr(books, m=m, sub=sub, qvec_col="__qvec")),
-        )
+    # -- ADC within probed cells only, then exact cosine rerank --
+    pairs = enc.join(F.broadcast(q), on="cell").filter(
+        F.col("neighbor_id") != F.col("query_id")
     )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("__dist2").asc(), F.col("neighbor_id").asc()
+    return _adc_rerank(
+        corpus, pairs, books, m=m, sub=sub, k=k, expand=expand,
+        id_col=id_col, vec_col=vec_col,
     )
-    cands = (
-        joined.withColumn("__rn", F.row_number().over(w_adc))
-        .filter(F.col("__rn") <= k * expand)
-        .select("query_id", "neighbor_id", "__qvec")
-    )
-    return _exact_rerank(corpus, cands, k=k, id_col=id_col, vec_col=vec_col)
 
 
 def build_ivf_pq_index(
@@ -733,7 +684,6 @@ def build_ivf_pq_index(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign: str = "quantized",
 ) -> DataFrame:
     """Build the compressed IVFADC index: (id, cell, codes) in ONE Arrow
     pass over the corpus — cell = BLAS argmax against unit centroids
@@ -742,27 +692,14 @@ def build_ivf_pq_index(
     No join, no shuffle; at real scale persist the result partitioned
     BY CELL so a probe filter prunes partitions at the scan.
 
-    ``assign="quantized"`` (default, ADVICE r10): both sides quantized
-    to integers (floor(x*1e6), floor(c_unit*1e6)) so the BLAS dot is
-    EXACT in any summation order — cell assignment matches
-    ``assign_cells(method="quantized")`` bit-for-bit, so a production
-    index and the relational/oracle path agree even on near-tie
-    vectors. ``assign="float"`` keeps the raw float dot (reassociation
-    can flip near-ties vs the quantized rule; recall-only impact)."""
-    from ncagg_spark.pipeline.similarity import _unit_scale
-
-    if assign not in ("quantized", "float"):
-        raise ValueError(f"unknown assign: {assign!r}")
+    Cell scores are the quantized integer dot (ADVICE r10: floor(x*1e6)
+    against floor(c_unit*1e6)), EXACT in any summation order — cell
+    assignment matches ``assign_cells(method="quantized")`` bit-for-bit,
+    so a production index and the relational/oracle path agree even on
+    near-tie vectors."""
     m = len(codebooks)
     sub = len(codebooks[0][0])
-    cents_s = sorted(centroids, key=lambda cv: int(cv[0]))
-    cell_ids = np.array([int(c) for c, _ in cents_s], dtype="int64")
-    Cu = np.array(
-        [_unit_scale(v) for _, v in cents_s], dtype="float64"
-    ).T  # dim x cells
-    if assign == "quantized":
-        Cu = np.floor(Cu * 1_000_000.0)
-    quantized = assign == "quantized"
+    cell_ids, Cq = _centroid_matrix(centroids, quantized=True)
     CB = [np.asarray(b, dtype="float64") for b in codebooks]
     CBn = [np.sum(c * c, axis=1) for c in CB]
     id_type = {
@@ -773,16 +710,9 @@ def build_ivf_pq_index(
         for pdf in batches:
             if not len(pdf):
                 continue
-            raw = np.asarray(
-                [np.asarray(x, dtype="float64") for x in pdf["__vec"]]
-            )
-            # row norm divides all cells equally -> argmax unaffected
-            if quantized:
-                scores = np.floor(raw * 1_000_000.0) @ Cu  # exact ints
-            else:
-                scores = raw @ Cu
-            rev = scores[:, ::-1].argmax(axis=1)
-            cells = cell_ids[scores.shape[1] - 1 - rev]  # ties -> larger
+            raw = _stack(pdf["__vec"])
+            scores = _cell_scores(raw, Cq, quantized=True)
+            cells = cell_ids[_larger_cell_argmax(scores)]
             X = _unit_rows(raw)
             codes = np.empty((len(X), m), dtype="int32")
             for s in range(m):
@@ -818,7 +748,6 @@ def ivf_pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str | None = None,
-    adc_mode: str = "masked",
 ) -> DataFrame:
     """Production IVFADC search over a ``build_ivf_pq_index`` table:
     probe each query's n_probe nearest cells, ADC-score codes ONLY in
@@ -827,28 +756,16 @@ def ivf_pq_topk(
     the k*expand survivors against the raw vectors. Shuffle carries
     only partitions x queries x (k*expand) candidate rows.
 
-    ``adc_mode`` picks the per-batch compute shape (measured round 10,
-    SCALE.md "IVFADC build/search split"):
-
-      * ``"masked"`` (default): one LUT gather over the whole batch,
-        then non-probed (row, query) pairs masked to inf. The gather is
-        a single contiguous numpy fancy-index per subspace — memory-
-        bandwidth-bound and measurably optimal at every locally
-        testable size (<=2M x 100 queries); the over-computed 75% costs
-        less than breaking the batch apart. The probed-fraction saving
-        at this setting comes from the ``cell IN`` SCAN pruning, which
-        is the dominant cost once the index exceeds page cache.
-      * ``"grouped"``: sort the batch by cell and compute each
-        (cell, probing-queries) block only — arithmetic strictly
-        proportional to the probed fraction. The right shape when cell
-        groups are large (index stored sorted by cell, cells >> batch
-        granularity, thousands of queries per pass); at small group
-        sizes the per-group overhead exceeds the saved arithmetic.
+    Per batch: one LUT gather over the whole batch, then non-probed
+    (row, query) pairs masked to inf. The gather is a single contiguous
+    numpy fancy-index per subspace — memory-bandwidth-bound and
+    measurably optimal at every locally testable size (<=2M x 100
+    queries; SCALE.md "IVFADC build/search split" measured a per-cell
+    grouped shape losing to it at every size); the over-computed 75%
+    costs less than breaking the batch apart. The probed-fraction
+    saving comes from the ``cell IN`` SCAN pruning, which is the
+    dominant cost once the index exceeds page cache.
     """
-    import builtins
-
-    from ncagg_spark.pipeline.similarity import _unit_scale
-
     query_id_col = query_id_col or id_col
     n_type = {
         f.name: f.dataType.simpleString() for f in index.schema.fields
@@ -870,11 +787,11 @@ def ivf_pq_topk(
     Q = _unit_rows(Qraw)
 
     # -- probe ranking: n_probe nearest cells per query (BLAS) --
-    cents_s = sorted(centroids, key=lambda cv: int(cv[0]))
-    cell_ids = np.array([int(c) for c, _ in cents_s], dtype="int64")
-    Cu = np.array([_unit_scale(v) for _, v in cents_s], dtype="float64").T
-    npr = builtins.min(int(n_probe), len(cents_s))
-    order = np.argsort(-(Qraw @ Cu), axis=1, kind="stable")[:, :npr]
+    cell_ids, Cu = _centroid_matrix(centroids, quantized=False)
+    npr = min(int(n_probe), len(cell_ids))
+    order = np.argsort(
+        -_cell_scores(Qraw, Cu, quantized=False), axis=1, kind="stable"
+    )[:, :npr]
     probed = cell_ids[order]  # nq x n_probe
     union_cells = sorted({int(c) for row in probed for c in row})
     # probe mask over the union-cell axis: mask[cell_idx, qi]
@@ -898,14 +815,6 @@ def ivf_pq_topk(
     kk = int(k) * int(expand)
 
     union_arr = np.asarray(union_cells, dtype="int64")
-    # cell -> indices of the queries probing it (grouped mode)
-    probers: dict[int, np.ndarray] = {
-        int(c): np.nonzero(mask[cell_pos[int(c)], :])[0]
-        for c in union_cells
-    }
-    if adc_mode not in ("masked", "grouped"):
-        raise ValueError(f"unknown adc_mode: {adc_mode!r}")
-    grouped = adc_mode == "grouped"
 
     def score(batches):
         for pdf in batches:
@@ -916,53 +825,21 @@ def ivf_pq_topk(
             codes = np.asarray(
                 [np.asarray(c, dtype="int64") for c in pdf["codes"]]
             )
-            qi, ni, cs = [], [], []
-            if grouped:
-                order = np.argsort(cells, kind="stable")
-                bounds = np.flatnonzero(np.diff(cells[order])) + 1
-                per_q_d: dict[int, list] = {}
-                per_q_n: dict[int, list] = {}
-                for grp in np.split(order, bounds):
-                    qs = probers.get(int(cells[grp[0]]))
-                    if qs is None or not len(qs):
-                        continue
-                    cod = codes[grp]
-                    # dist2 block: rows-in-cell x probing-queries only
-                    d2 = np.zeros((len(grp), len(qs)), dtype="float64")
-                    for s in range(m):
-                        d2 += LUT[s][np.ix_(qs, cod[:, s])].T
-                    d2[nids[grp][:, None] == qids[qs][None, :]] = np.inf
-                    for j, qidx in enumerate(qs):
-                        per_q_d.setdefault(qidx, []).append(d2[:, j])
-                        per_q_n.setdefault(qidx, []).append(nids[grp])
-                for qidx, chunks in per_q_d.items():
-                    d = np.concatenate(chunks)
-                    nn = np.concatenate(per_q_n[qidx])
-                    take = builtins.min(kk, len(d))
-                    rows = _topk_ties_by_id(d, nn, take)
-                    qi.extend([qids[qidx]] * len(rows))
-                    ni.extend(nn[rows])
-                    cs.extend(1.0 - d[rows] / 2.0)
-            else:
-                dist2 = np.zeros((len(codes), len(qids)), dtype="float64")
-                for s in range(m):
-                    dist2 += LUT[s][:, codes[:, s]].T
-                # probe mask: candidates outside a query's probed cells
-                # are invisible to it (cells are already IN the union —
-                # the pre-filter below guarantees searchsorted hits)
-                idx = np.searchsorted(union_arr, cells)
-                dist2[~mask[idx, :]] = np.inf
-                dist2[nids[:, None] == qids[None, :]] = np.inf
-                take = builtins.min(kk, dist2.shape[0])
-                for j in range(dist2.shape[1]):
-                    rows = _topk_ties_by_id(dist2[:, j], nids, take)
-                    qi.extend([qids[j]] * len(rows))
-                    ni.extend(nids[rows])
-                    cs.extend(1.0 - dist2[rows, j] / 2.0)
-            out = pd.DataFrame(
-                {"query_id": qi, "neighbor_id": ni, "approx_cosine": cs}
+            dist2 = np.zeros((len(codes), len(qids)), dtype="float64")
+            for s in range(m):
+                dist2 += LUT[s][:, codes[:, s]].T
+            # probe mask: candidates outside a query's probed cells are
+            # invisible to it (cells are already IN the union — the
+            # pre-filter below guarantees searchsorted hits)
+            dist2[~mask[np.searchsorted(union_arr, cells), :]] = np.inf
+            qi, ni, d = partial_topk(dist2, nids, qids, kk)
+            yield pd.DataFrame(
+                {
+                    "query_id": qi,
+                    "neighbor_id": ni,
+                    "approx_cosine": 1.0 - d / 2.0,
+                }
             )
-            yield out[np.isfinite(out["approx_cosine"])]
 
     # cell IN (union) — pushed to the scan; with the index stored
     # partitioned by cell this prunes whole partitions, making search
@@ -971,13 +848,8 @@ def ivf_pq_topk(
         F.col("cell").isin([int(c) for c in union_cells])
     )
     partial = scanned.mapInPandas(score, schema=out_schema)
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    cands = (
-        partial.withColumn("__rn", F.row_number().over(w_adc))
-        .filter(F.col("__rn") <= kk)
-        .select("query_id", "neighbor_id")
+    cands = rank_per_query(partial, "approx_cosine", kk).select(
+        "query_id", "neighbor_id"
     )
     # exact cosine re-rank against raw vectors (candidate-bounded)
     return _rerank_by_query(
@@ -1025,7 +897,6 @@ def append_ivf_pq_index(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign: str = "quantized",
 ) -> None:
     """Incremental index maintenance (VERDICT r10 #2): encode ONLY the
     new vectors against the FROZEN centroids/codebooks and append their
@@ -1039,11 +910,6 @@ def append_ivf_pq_index(
     the trainer only when recall drift says the frozen model has aged.
     """
     delta = build_ivf_pq_index(
-        new_vectors,
-        centroids,
-        codebooks,
-        id_col=id_col,
-        vec_col=vec_col,
-        assign=assign,
+        new_vectors, centroids, codebooks, id_col=id_col, vec_col=vec_col
     )
     write_ivf_pq_index(delta, path, mode="append")

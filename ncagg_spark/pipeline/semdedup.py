@@ -42,9 +42,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ncagg_spark.functions.vectors import dot, l2_norm, norm_guard
+from ncagg_spark.functions.vectors import l2_norm, norm_guard
 from ncagg_spark.pipeline.dedup import near_dedup
 from ncagg_spark.pipeline.similarity import assign_cells
+from ncagg_spark.pipeline.topk import cosine
 
 
 def semantic_duplicate_pairs(
@@ -136,12 +137,7 @@ def semantic_duplicate_pairs(
         pairs = (
             a.join(b, on="cell")
             .filter(F.col("id_a") < F.col("id_b"))
-            .withColumn(
-                "cosine",
-                F.round(
-                    dot("va", "vb") / (F.col("na") * F.col("nb")), 6
-                ),
-            )
+            .withColumn("cosine", cosine("va", "vb", "na", "nb"))
             .filter(F.col("cosine") >= float(threshold))
             .select("id_a", "id_b", "cell", "cosine")
         )

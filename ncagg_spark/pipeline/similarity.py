@@ -18,6 +18,16 @@
 
 Hyperplanes/centroids are generated driver-side from a fixed seed and
 broadcast as literal arrays — deterministic, no fit state.
+
+Every method is one spine: it only generates candidate (query,
+neighbor) pairs — a broadcast cross join, an SRP bucket join, an IVF
+cell join, or a per-batch BLAS partial top-k — and hands them to the
+shared ``cosine`` score and ``cosine_topk`` rank tail in
+pipeline/topk.py (cosine rounded to 6 places, ties by neighbor id
+ascending, k per query). Centroid scoring (sorted unit or quantized
+centroid matrix, larger-cell-wins argmax) is shared the same way by
+``assign_cells``, ``quantized_probe_col`` and the IVF+PQ index
+(pipeline/pq.py).
 """
 
 from __future__ import annotations
@@ -25,11 +35,19 @@ from __future__ import annotations
 import itertools
 import math
 import random
+from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame, Window
+import numpy as np
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ncagg_spark.functions.vectors import dot, dot_const_sql, l2_norm, norm_guard
+from ncagg_spark.functions.vectors import dot_const_sql, l2_norm, norm_guard
+from ncagg_spark.pipeline.topk import (
+    cosine,
+    cosine_topk,
+    partial_topk,
+    round_cosine,
+)
 
 # distinguishes kmeans_centroids calls in Spark job-group names (the
 # status tracker accumulates job ids per group for the app lifetime);
@@ -103,24 +121,18 @@ def brute_force_topk_relational(
         F.col(vec_col).alias("c_vec"),
         norm_guard(l2_norm(vec_col)).alias("c_norm"),
     )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                dot("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm")), 6
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
+    return _exact_topk(F.broadcast(q).crossJoin(c), k)
+
+
+def _exact_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact cosine top-k of candidate pairs — (query_id, q_vec, q_norm)
+    joined to (neighbor_id, c_vec, c_norm) — with self-matches dropped:
+    the shared tail of the relational brute, SRP and IVF searches."""
+    return cosine_topk(
+        pairs.filter(F.col("query_id") != F.col("neighbor_id")).withColumn(
+            "cosine", cosine("q_vec", "c_vec", "q_norm", "c_norm")
+        ),
+        k,
     )
 
 
@@ -233,25 +245,7 @@ def srp_lsh_topk(
             else srp_bucket(vec_col, planes)
         ).alias("bucket"),
     )
-    scored = (
-        F.broadcast(q)
-        .join(c, on="bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                dot("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm")), 6
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _exact_topk(F.broadcast(q).join(c, on="bucket"), k)
 
 
 def sample_centroids(
@@ -305,7 +299,6 @@ def brute_force_topk_matmul(
     Queries are collected to the driver and broadcast — the query set is
     small by contract (that is what makes it the *query* side).
     """
-    import numpy as np
     import pandas as pd
 
     query_id_col = query_id_col or id_col
@@ -334,45 +327,24 @@ def brute_force_topk_matmul(
         for pdf in batches:
             if not len(pdf):
                 continue
-            nids = pdf["__nid"].to_numpy()
-            X = np.asarray(
-                [np.asarray(x, dtype="float64") for x in pdf["__vec"]]
-            )
+            X = _stack(pdf["__vec"])
             S = X @ Qt
             S /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
-            # exclude self-matches before the partial top-k
-            S[nids[:, None] == qids[None, :]] = -np.inf
             # partial top-(k) per query within this batch; score ties
             # broken by neighbor id asc IN the truncation (a bare
             # argpartition could keep either of two boundary-tied
             # rows, making the result depend on partitioning — ties
             # are real: replica vectors score identically)
-            from ncagg_spark.pipeline.pq import _topk_ties_by_id
-
-            take = min(kk, S.shape[0])
-            qi, ni, cs = [], [], []
-            for j in range(S.shape[1]):
-                rows = _topk_ties_by_id(-S[:, j], nids, take)
-                qi.extend([qids[j]] * len(rows))
-                ni.extend(nids[rows])
-                cs.extend(S[rows, j])
-            out = pd.DataFrame(
-                {"query_id": qi, "neighbor_id": ni, "cosine": cs}
+            nids = pdf["__nid"].to_numpy()
+            qi, ni, key = partial_topk(-S, nids, qids, kk)
+            yield pd.DataFrame(
+                {"query_id": qi, "neighbor_id": ni, "cosine": -key}
             )
-            yield out[out["cosine"] > -np.inf]
 
     partial = corpus.select(
         F.col(id_col).alias("__nid"), F.col(vec_col).alias("__vec")
     ).mapInPandas(score, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.withColumn("cosine", F.round("cosine", 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return cosine_topk(partial.withColumn("cosine", round_cosine("cosine")), k)
 
 
 def assign_cells(
@@ -421,57 +393,16 @@ def assign_cells(
     near-tie — a different but self-consistent, exactly-replicable
     rule.
     """
-    if method == "quantized":
-        import numpy as np
+    if method in ("arrow", "quantized"):
         import pandas as pd
         from pyspark.sql import types as T
 
-        Q = 1_000_000.0
-        cents_s = sorted(centroids, key=lambda cv: int(cv[0]))
-        ids = np.array([int(c) for c, _ in cents_s], dtype="int64")
-        Cq = np.floor(
-            np.array(
-                [_unit_scale(v) for _, v in cents_s], dtype="float64"
-            )
-            * Q
-        ).T  # dim x cells, integer-valued
-
-        def _assign_q(v: pd.Series) -> pd.Series:
-            X = np.floor(
-                np.asarray(
-                    [np.asarray(x, dtype="float64") for x in v]
-                )
-                * Q
-            )
-            scores = X @ Cq  # exact: integer-valued float64 < 2^53
-            rev = scores[:, ::-1].argmax(axis=1)
-            idx = scores.shape[1] - 1 - rev  # ties -> larger cell
-            return pd.Series(ids[idx].astype("int32"))
-
-        _assign_q.__annotations__ = {"v": pd.Series, "return": pd.Series}
-        udf = F.pandas_udf(T.IntegerType())(_assign_q)
-        return df.withColumn(out_col, udf(F.col(vec_col)))
-    if method == "arrow":
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        # cell-id ascending so "last max in order" == "largest cell id",
-        # matching the sql path's struct-comparison tiebreak exactly
-        cents = sorted(centroids, key=lambda cv: int(cv[0]))
-        ids = np.array([int(c) for c, _ in cents], dtype="int64")
-        C = np.array(
-            [_unit_scale(v) for _, v in cents], dtype="float64"
-        ).T  # dim x cells
+        quantized = method == "quantized"
+        ids, C = _centroid_matrix(centroids, quantized=quantized)
 
         def _assign(v: pd.Series) -> pd.Series:
-            X = np.asarray([np.asarray(x, dtype="float64") for x in v])
-            scores = X @ C
-            # ties -> larger cell id: argmax on the reversed axis picks
-            # the LAST max in original order
-            rev = scores[:, ::-1].argmax(axis=1)
-            idx = scores.shape[1] - 1 - rev
-            return pd.Series(ids[idx].astype("int32"))
+            scores = _cell_scores(_stack(v), C, quantized=quantized)
+            return pd.Series(ids[_larger_cell_argmax(scores)].astype("int32"))
 
         # hints given as real objects (pandas imported in this scope), so
         # eval-type inference sees Series -> Series
@@ -491,6 +422,68 @@ def assign_cells(
 def _unit_scale(vec: list[float]) -> list[float]:
     n = math.sqrt(sum(float(x) * float(x) for x in vec)) or 1.0
     return [float(x) / n for x in vec]
+
+
+# quantization scale of the exact-integer centroid scores (assign_cells
+# method="quantized", quantized_probe_col, build_ivf_pq_index)
+_QUANT = 1_000_000.0
+
+
+def _stack(vecs) -> np.ndarray:
+    """One Arrow batch of array cells as a rows x dim float64 matrix."""
+    return np.asarray([np.asarray(x, dtype="float64") for x in vecs])
+
+
+def _centroid_matrix(
+    centroids: list[tuple[int, list[float]]], *, quantized: bool
+) -> tuple[np.ndarray, np.ndarray]:
+    """(cell ids ascending, dim x cells matrix of the unit centroids in
+    that order). ``quantized`` floors the matrix to floor(c_unit * 1e6)
+    integers — the centroid side of the exact-integer score."""
+    cents = sorted(centroids, key=lambda cv: int(cv[0]))
+    ids = np.array([int(c) for c, _ in cents], dtype="int64")
+    C = np.array([_unit_scale(v) for _, v in cents], dtype="float64").T
+    return ids, np.floor(C * _QUANT) if quantized else C
+
+
+def _cell_scores(
+    X: np.ndarray, C: np.ndarray, *, quantized: bool
+) -> np.ndarray:
+    """rows x cells dot scores against a ``_centroid_matrix``. The row
+    norm is skipped: it divides every cell equally, so no ranking moves.
+    Quantized: both sides are integer-valued doubles and every product
+    and partial sum stays below 2^53, so the scores are EXACT integers
+    in any BLAS summation order."""
+    return (np.floor(X * _QUANT) if quantized else X) @ C
+
+
+def _larger_cell_argmax(scores: np.ndarray) -> np.ndarray:
+    """Column of each row's max score, ties -> the LAST max (with
+    columns in ascending cell id, the larger cell) — the sql path's
+    struct-comparison tiebreak: argmax on the reversed axis."""
+    return scores.shape[1] - 1 - scores[:, ::-1].argmax(axis=1)
+
+
+# the local properties ``SparkContext.setJobGroup`` sets
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
+
+@contextmanager
+def _job_group(sc, group: str, description: str):
+    """Run the block's jobs in ``group``, then give the caller's job
+    group, description and interrupt flag back — so a caller's
+    ``cancelJobGroup`` still reaches its later jobs."""
+    saved = [sc.getLocalProperty(p) for p in _JOB_GROUP_PROPS]
+    sc.setJobGroup(group, description)
+    try:
+        yield
+    finally:
+        for prop, value in zip(_JOB_GROUP_PROPS, saved):
+            sc.setLocalProperty(prop, value)
 
 
 def kmeans_centroids(
@@ -593,7 +586,6 @@ def kmeans_centroids(
         # (integer addition is associative -> centroids bit-exact under
         # any partitioning; pytest-pinned).
         def _partials(batches):
-            import numpy as np
             import pandas as pd
 
             acc_p: dict = {}
@@ -601,9 +593,7 @@ def kmeans_centroids(
                 if not len(pdf):
                     continue
                 cells_np = pdf["cell"].to_numpy()
-                X = np.asarray(
-                    [np.asarray(x, dtype="float64") for x in pdf["v"]]
-                )
+                X = _stack(pdf["v"])
                 if q:
                     X = np.floor(X * q).astype("int64")
                 for c in np.unique(cells_np):
@@ -619,18 +609,16 @@ def kmeans_centroids(
                 )
 
         out_t = "array<long>" if q else "array<double>"
-        sc.setJobGroup(
+        with _job_group(
+            sc,
             f"kmeans_{run_id}_iter_{it}",
             "kmeans Lloyd iteration (single fused assign+update job)",
-        )
-        try:
+        ):
             stats = (
                 assigned.select("cell", "v")
                 .mapInPandas(_partials, schema=f"cell int, sums {out_t}")
                 .collect()
             )
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
         acc: dict[int, list] = {}
         for r in stats:
             if r["cell"] in acc:
@@ -668,29 +656,14 @@ def quantized_probe_col(
     ``ivf_topk`` and the IVF+PQ composition (pipeline/pq.py). Also avoids
     the O(n_cells x dim)-literal SQL expression of the "sql" probe path,
     which at sqrt(N) cell counts becomes a megabyte-scale plan."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    Qf = 1_000_000.0
-    cents_s = sorted(cents, key=lambda cv: int(cv[0]))
-    pids = np.array([int(c) for c, _ in cents_s], dtype="int64")
-    Cq = np.floor(
-        np.array(
-            [_unit_scale(v) for _, v in cents_s], dtype="float64"
-        )
-        * Qf
-    ).T
+    pids, Cq = _centroid_matrix(cents, quantized=True)
     npr = int(n_probe)
 
     def _probes(v: pd.Series) -> pd.Series:
-        X = np.floor(
-            np.asarray(
-                [np.asarray(x, dtype="float64") for x in v]
-            )
-            * Qf
-        )
-        scores = X @ Cq  # exact integers (see assign_cells)
+        scores = _cell_scores(_stack(v), Cq, quantized=True)
         # stable argsort of -scores: ties keep ascending cell order
         order = np.argsort(-scores, axis=1, kind="stable")[:, :npr]
         return pd.Series(list(pids[order].astype("int32")))
@@ -782,22 +755,4 @@ def ivf_topk(
         norm_guard(l2_norm(vec_col)).alias("q_norm"),
         probe_col,
     )
-    scored = (
-        F.broadcast(q)
-        .join(c, on="cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                dot("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm")), 6
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _exact_topk(F.broadcast(q).join(c, on="cell"), k)

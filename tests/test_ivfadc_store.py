@@ -193,10 +193,9 @@ def test_append_work_is_batch_sized(clustered, model, tmp_path):
 
 def test_build_assign_matches_assign_cells_quantized(clustered, model):
     """ADVICE r10: the production index's cell assignment is the
-    quantized integer dot by default — bit-for-bit the same cells as
+    quantized integer dot — bit-for-bit the same cells as
     assign_cells(method='quantized'), so the persisted index and the
-    relational/oracle path agree even on near-ties. The float mode is
-    still available and may differ only on near-ties."""
+    relational/oracle path agree even on near-ties."""
     from ncagg_spark.pipeline.similarity import assign_cells
 
     cents, books = model
@@ -211,14 +210,3 @@ def test_build_assign_matches_assign_cells_quantized(clustered, model):
         ).collect()
     }
     assert got == want
-    # float mode still produces a valid assignment over the same cells
-    got_f = {
-        r["vec_id"]: r["cell"]
-        for r in build_ivf_pq_index(
-            clustered, cents, books, assign="float"
-        ).collect()
-    }
-    cells = {int(c) for c, _ in cents}
-    assert set(got_f.values()) <= cells
-    agree = sum(1 for k in got if got[k] == got_f[k]) / len(got)
-    assert agree > 0.99  # differs on near-ties only

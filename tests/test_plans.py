@@ -12,6 +12,7 @@ SCALE.md must be visible in the plans, not just asserted in prose.
 from __future__ import annotations
 
 import io
+import re
 from contextlib import redirect_stdout
 
 import pytest
@@ -96,6 +97,98 @@ def test_flagship_pushes_time_range(plans):
     pushed = plan.split("PushedFilters", 1)[1].splitlines()[0]
     assert "GreaterThanOrEqual(ts" in pushed
     assert "LessThan(ts" in pushed
+
+
+# Physical operator sequence of every emb_* query at sf0.001, in the
+# numbered order of ``explain("formatted")``. The ANN methods share one
+# cosine, rerank and per-query rank tail (pipeline/topk.py); these pins
+# show that sharing it leaves every plan unchanged.
+EMB_PLAN_FINGERPRINTS = {
+    "emb_brute_topk": (
+        "Scan parquet, Filter, Project, BroadcastExchange, "
+        "Scan parquet, Filter, Project, BroadcastNestedLoopJoin, "
+        "Project, Sort, WindowGroupLimit, Exchange, Sort, "
+        "WindowGroupLimit, Window, Filter, Project, "
+        "AdaptiveSparkPlan"
+    ),
+    "emb_ivf_kmeans_topk": (
+        "Scan parquet, Filter, Generate, Project, BroadcastExchange, "
+        "Scan parquet, Filter, Project, BroadcastHashJoin, Project, "
+        "Sort, WindowGroupLimit, Exchange, Sort, WindowGroupLimit, "
+        "Window, Filter, Project, AdaptiveSparkPlan"
+    ),
+    "emb_ivf_topk": (
+        "Scan parquet, Filter, ArrowEvalPython, Generate, Filter, "
+        "Project, BroadcastExchange, Scan parquet, Filter, "
+        "ArrowEvalPython, Filter, Project, ArrowEvalPython, Project, "
+        "BroadcastHashJoin, Project, Sort, WindowGroupLimit, "
+        "Exchange, Sort, WindowGroupLimit, Window, Filter, Project, "
+        "AdaptiveSparkPlan"
+    ),
+    "emb_ivfpq_topk": (
+        "Scan parquet, Filter, Project, Scan parquet, Filter, "
+        "ArrowEvalPython, Filter, Project, Project, Exchange, "
+        "ArrowEvalPython, Project, Scan parquet, Filter, "
+        "ArrowEvalPython, Generate, Filter, Project, "
+        "BroadcastExchange, BroadcastHashJoin, Project, Sort, "
+        "WindowGroupLimit, Exchange, Sort, WindowGroupLimit, Window, "
+        "Filter, Project, BroadcastExchange, BroadcastHashJoin, "
+        "Project, Sort, WindowGroupLimit, Exchange, Sort, "
+        "WindowGroupLimit, Window, Filter, Project, "
+        "AdaptiveSparkPlan"
+    ),
+    "emb_near_dup": (
+        "Scan parquet, Filter, Project, BroadcastExchange, "
+        "Scan parquet, Filter, Project, BroadcastNestedLoopJoin, "
+        "Project, AdaptiveSparkPlan"
+    ),
+    "emb_pq_topk": (
+        "Scan parquet, Filter, Project, Scan parquet, Filter, "
+        "Project, Exchange, Project, Scan parquet, Filter, Project, "
+        "BroadcastExchange, BroadcastNestedLoopJoin, Project, Sort, "
+        "WindowGroupLimit, Exchange, Sort, WindowGroupLimit, Window, "
+        "Filter, Project, BroadcastExchange, BroadcastHashJoin, "
+        "Project, Sort, WindowGroupLimit, Exchange, Sort, "
+        "WindowGroupLimit, Window, Filter, Project, "
+        "AdaptiveSparkPlan"
+    ),
+    "emb_semdedup": (
+        "Scan parquet, Filter, LocalTableScan, BroadcastExchange, "
+        "BroadcastHashJoin, LocalTableScan, BroadcastExchange, "
+        "LocalTableScan, HashAggregate, Exchange, HashAggregate, "
+        "BroadcastHashJoin, Project, BroadcastExchange, "
+        "BroadcastHashJoin, Project, AdaptiveSparkPlan"
+    ),
+    "emb_srp_topk": (
+        "Scan parquet, Filter, Generate, Filter, Project, "
+        "BroadcastExchange, Scan parquet, Filter, Project, "
+        "BroadcastHashJoin, Project, Sort, WindowGroupLimit, "
+        "Exchange, Sort, WindowGroupLimit, Window, Filter, Project, "
+        "AdaptiveSparkPlan"
+    ),
+}
+
+
+def _operator_sequence(plan: str) -> str:
+    """Operator names from the numbered detail headers of a formatted
+    plan, e.g. ``(12) Project [codegen id : 3]`` -> ``Project``. The
+    headers carry no expression ids; the codegen stage suffix is dropped
+    too, so only the operator sequence is compared."""
+    ops = [
+        re.sub(r"\s*\[codegen id : \d+\]$", "", m.group(1)).strip()
+        for m in re.finditer(r"^\(\d+\) (.+)$", plan, re.M)
+    ]
+    return ", ".join(ops)
+
+
+@pytest.mark.parametrize("name", sorted(EMB_PLAN_FINGERPRINTS))
+def test_emb_plan_fingerprint(plans, name):
+    assert _operator_sequence(plans[name]) == EMB_PLAN_FINGERPRINTS[name]
+
+
+def test_emb_plan_fingerprints_cover_every_emb_query():
+    emb = {n for n in entry_mod.queries() if n.startswith("emb_")}
+    assert emb == set(EMB_PLAN_FINGERPRINTS)
 
 
 SF1 = "/root/repo/.scale/sf1.0"

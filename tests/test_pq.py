@@ -260,28 +260,6 @@ def test_ivf_pq_production_index_and_search(clustered):
         assert cell_of[r["neighbor_id"]] in set(cids[order])
 
 
-def test_ivf_pq_adc_modes_agree(clustered):
-    """masked vs grouped ADC are two compute shapes of the SAME search:
-    identical results bit-for-bit (same LUT sums, same tiebreaks)."""
-    rows, df = clustered
-    queries = df.filter("vec_id < 10")
-    from ncagg_spark.pipeline.pq import build_ivf_pq_index, ivf_pq_topk
-    from ncagg_spark.pipeline.similarity import sample_centroids
-
-    cents = sample_centroids(df, 16)
-    books = pq_train(df, dim=DIM, m=8, n_codes=64)
-    index = build_ivf_pq_index(df, cents, books)
-    a = ivf_pq_topk(
-        index, cents, books, df, queries, k=5, expand=6, n_probe=6,
-        adc_mode="masked",
-    ).collect()
-    b = ivf_pq_topk(
-        index, cents, books, df, queries, k=5, expand=6, n_probe=6,
-        adc_mode="grouped",
-    ).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
 def test_ivf_pq_truncation_deterministic_under_ties(spark):
     """Round-10 review fix: ADC candidate truncation breaks distance
     ties by neighbor id, so results cannot depend on row order or
@@ -309,13 +287,11 @@ def test_ivf_pq_truncation_deterministic_under_ties(spark):
     index = build_ivf_pq_index(df, cents, books)
     got = {}
     for parts in (1, 7, 32):
-        idx_p = index.repartition(parts)
-        for mode in ("masked", "grouped"):
-            res = ivf_pq_topk(
-                idx_p, cents, books, df, queries,
-                k=5, expand=2, n_probe=2, adc_mode=mode,
-            ).collect()
-            got[(parts, mode)] = sorted(map(tuple, res))
+        res = ivf_pq_topk(
+            index.repartition(parts), cents, books, df, queries,
+            k=5, expand=2, n_probe=2,
+        ).collect()
+        got[parts] = sorted(map(tuple, res))
     first = next(iter(got.values()))
     assert all(v == first for v in got.values()), {
         k: len(v) for k, v in got.items()
@@ -327,37 +303,3 @@ def test_ivf_pq_truncation_deterministic_under_ties(spark):
     assert [r[1] for r in sorted(per_q0, key=lambda r: r[2])] == [
         4, 8, 12, 16, 20
     ]
-
-
-def test_topk_ties_by_id_fast_path_matches_spec():
-    """Round-11 ADVICE: the threshold-subset fast path (O(n) partition
-    + tiny tie-break sorts) must equal the naive two-full-stable-sort
-    spec on every shape — real boundary ties, inf-masked rows, string
-    ids, take edge cases, and the optional hoisted pre-sort."""
-    import numpy as np
-
-    from ncagg_spark.pipeline.pq import _topk_ties_by_id
-
-    def spec(key, nids, take):
-        pre = np.argsort(nids, kind="stable")
-        return pre[np.argsort(key[pre], kind="stable")][:take]
-
-    rng = np.random.default_rng(42)
-    for trial in range(20):
-        n = int(rng.integers(1, 500))
-        # coarse quantization -> plenty of REAL key ties
-        key = np.floor(rng.random(n) * 10)
-        key[rng.integers(0, n, size=n // 4)] = np.inf  # masked rows
-        nids = rng.permutation(n).astype("int64")
-        for take in (0, 1, 3, n // 2, n, n + 5):
-            want = spec(key, nids, min(take, n))
-            got = _topk_ties_by_id(key, nids, take)
-            assert np.array_equal(got, want), (trial, take)
-            pre = np.argsort(nids, kind="stable")
-            got_pre = _topk_ties_by_id(key, nids, take, pre=pre)
-            assert np.array_equal(got_pre, want), (trial, take, "pre")
-    # string neighbor ids (documents table) sort lexically
-    key = np.array([1.0, 1.0, 0.5, 1.0, 2.0])
-    nids = np.array(["d9", "d1", "d5", "d10", "d0"])
-    got = _topk_ties_by_id(key, nids, 3)
-    assert nids[got].tolist() == ["d5", "d1", "d10"]

@@ -254,6 +254,39 @@ def test_kmeans_one_spark_job_per_iteration(spark, tmp_path):
         )
 
 
+def test_kmeans_restores_callers_job_group(spark):
+    """kmeans_centroids labels each Lloyd iteration with its own job
+    group, then must hand the caller's group, description and
+    interrupt flag back: the caller's later jobs stay in its group (so
+    its cancelJobGroup still reaches them) and keep its label."""
+    from ncagg_spark.pipeline.similarity import kmeans_centroids
+
+    rng = random.Random(9)
+    rows = [
+        (i, [rng.gauss(0.0, 1.0) for _ in range(DIM)]) for i in range(N)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    sc = spark.sparkContext
+    group = "outer_kmeans_caller"
+    sc.setJobGroup(group, "outer caller", interruptOnCancel=True)
+    try:
+        kmeans_centroids(df, 3, max_iter=2, tol=0.0, init="mult")
+        assert sc.getLocalProperty("spark.jobGroup.id") == group
+        assert sc.getLocalProperty("spark.job.description") == "outer caller"
+        assert sc.getLocalProperty("spark.job.interruptOnCancel") == "true"
+        tracker = sc.statusTracker()
+        before = len(tracker.getJobIdsForGroup(group))
+        spark.range(3).count()
+        assert len(tracker.getJobIdsForGroup(group)) > before
+    finally:
+        for prop in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(prop, None)
+
+
 def test_assign_cells_quantized_matches_sql_and_is_stable(spark):
     """Quantized assignment must (a) agree with the exact sql method
     wherever quantization (1e-6 relative) cannot flip the argmax —

@@ -105,40 +105,73 @@ def main() -> None:
             )
 
     names = [os.path.basename(d.rstrip("/")) for d in sf_dirs]
+    verdict = decade_verdict(results, sizes, names)
     print("\n| query | " + " | ".join(names) + " | " + " | ".join(
         f"alpha {a}->{b}" for a, b in zip(names, names[1:])
     ) + " | alpha overall |")
     print("|" + "---|" * (len(names) + len(names)))
-    verdict = {"docs": sizes, "queries": {}}
-    for q in HEAVY:
-        have = [n for n in names if n in results[q]]
-        ts = [results[q][n] for n in have]
-        ns = [sizes[n] for n in have]
-        alphas = [
-            round(math.log(t2 / t1) / math.log(n2 / n1), 2)
-            for (t1, t2, n1, n2) in zip(ts, ts[1:], ns, ns[1:])
-        ]
-        overall = round(
-            math.log(ts[-1] / ts[0]) / math.log(ns[-1] / ns[0]), 2
+    for q, v in verdict["queries"].items():
+        steps = v["alphas"] or {}
+        print(
+            f"| {q} | "
+            + " | ".join(f"{v['wall_s'].get(n, '-')}" for n in names)
+            + " | "
+            + " | ".join(
+                f"{steps.get(f'{a}->{b}', '-')}"
+                for a, b in zip(names, names[1:])
+            )
+            + f" | {v['alpha_overall']} |"
         )
+    print("DECADE_VERDICT " + json.dumps(verdict), flush=True)
+
+
+def decade_verdict(
+    results: dict[str, dict[str, float]],
+    sizes: dict[str, int],
+    names: list[str],
+) -> dict:
+    """Per-query log-log exponents from the measured cells only.
+
+    ``results[q][name]`` holds the wall seconds of each cell that ran
+    (skipped and failed cells are absent), ``sizes[name]`` the doc
+    count of each scale in ``names`` order. ``wall_s`` is keyed by the
+    scales measured; ``alphas`` maps each step between consecutive
+    measured scales ("a->b") to its exponent. A query with fewer than 2
+    measured cells gets null ``alphas`` and ``alpha_overall`` and is left
+    out of ``worst_alpha_overall`` (null when no query has 2 cells)."""
+    verdict: dict = {"docs": sizes, "queries": {}}
+    for q, cells in results.items():
+        have = [n for n in names if n in cells]
+        ts = [cells[n] for n in have]
+        ns = [sizes[n] for n in have]
+        alphas = overall = None
+        if len(have) >= 2:
+            alphas = {
+                f"{a}->{b}": _alpha(t1, t2, n1, n2)
+                for a, b, t1, t2, n1, n2 in zip(
+                    have, have[1:], ts, ts[1:], ns, ns[1:]
+                )
+            }
+            overall = _alpha(ts[0], ts[-1], ns[0], ns[-1])
         verdict["queries"][q] = {
-            "wall_s": dict(zip(names, ts)),
+            "wall_s": dict(zip(have, ts)),
             "alphas": alphas,
             "alpha_overall": overall,
         }
-        print(
-            f"| {q} | "
-            + " | ".join(f"{t}" for t in ts)
-            + " | "
-            + " | ".join(f"{a}" for a in alphas)
-            + f" | {overall} |"
-        )
-    worst = max(
-        v["alpha_overall"] for v in verdict["queries"].values()
-    )
+    measured = [
+        v["alpha_overall"]
+        for v in verdict["queries"].values()
+        if v["alpha_overall"] is not None
+    ]
+    worst = max(measured) if measured else None
     verdict["worst_alpha_overall"] = worst
-    verdict["sublinear_all"] = bool(worst <= 1.0)
-    print("DECADE_VERDICT " + json.dumps(verdict), flush=True)
+    verdict["sublinear_all"] = None if worst is None else bool(worst <= 1.0)
+    return verdict
+
+
+def _alpha(t1: float, t2: float, n1: int, n2: int) -> float:
+    """Exponent of t ~ N^alpha between two measured cells."""
+    return round(math.log(t2 / t1) / math.log(n2 / n1), 2)
 
 
 if __name__ == "__main__":
