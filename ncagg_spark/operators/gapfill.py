@@ -81,7 +81,8 @@ def gap_fill(
     if anchor not in ("grid", "previous"):
         raise ValueError(f"unknown anchor mode: {anchor}")
 
-    if anchor == "previous" and _plan_bytes(df) >= _materialize_min_bytes():
+    est = _plan_bytes(df) if anchor == "previous" else None
+    if est is not None and est >= _materialize_min_bytes():
         # The "previous" mode consumes ``df`` THREE times (the grid
         # join, the per-block last-real aggregate, the first-real
         # aggregate) and Catalyst shares nothing across the branches:
@@ -103,7 +104,8 @@ def gap_fill(
         # ~3 MB); above it each duplicated evaluation is a full
         # scan+shuffle and materializing O(n_buckets) rows wins. The
         # estimate is the optimizer's own input-size statistic, so the
-        # path choice scales with the data, not with a local[] tuning.
+        # path choice scales with the data, not with a local[] tuning;
+        # a failed estimate (None) keeps the lazy path.
         df = df.localCheckpoint(eager=True)
 
     grid = spark.range(n_buckets).withColumnRenamed("id", bucket_col)

@@ -528,9 +528,14 @@ def connected_components(
 
     Iterative min-label propagation, the idiomatic Spark formulation of an
     algorithm the reference's single-pass design cannot express: each
-    round, every node takes the min of its own label and its neighbors';
-    converges in O(graph diameter) rounds (near-dup clusters are shallow —
-    a handful of rounds in practice). Per round: one shuffle
+    round, every node takes the min of its own label and its neighbors',
+    then jumps to its label's label. Near-dup clusters are shallow and
+    converge in a handful of rounds, but the round count has no
+    diameter-based bound: a graph of three 1,000-node cycles is still
+    unconverged after 60 rounds (ROADMAP direction 3). When
+    ``max_iter`` rounds end with the labels still changing, the loop
+    raises ``RuntimeError`` instead of returning partial clusters.
+    Per round: one shuffle
     (edges ⋈ labels on src, both sides hash-partitioned by node id) + one
     map-side-combining groupBy. ``localCheckpoint`` truncates the lineage
     so plan size stays constant across iterations, and the convergence
@@ -673,10 +678,10 @@ def connected_components(
                 .agg(F.min("label").alias("label"))
             )
             # path compression (pointer jumping): replace each label by
-            # ITS label, squaring the propagation distance per round —
-            # O(log diameter) rounds instead of O(diameter), the
-            # difference between 5 and 50 shuffles on chain-shaped
-            # duplicate clusters
+            # ITS label. On chain-shaped duplicate clusters this cuts
+            # the rounds from O(diameter) to about log(diameter); on
+            # cycle-shaped graphs it gives no such bound (ROADMAP
+            # direction 3), hence the non-convergence error below
             jump = propagated.select(
                 F.col("node").alias("label"), F.col("label").alias("jumped")
             )
@@ -709,6 +714,15 @@ def connected_components(
             if cur_sum == prev_sum:
                 break
             prev_sum = cur_sum
+        else:
+            n_edges = edges.count()
+            edges.unpersist()
+            labels.unpersist()
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} "
+                f"rounds over {n_edges} edge rows: the labels still "
+                f"changed in the last round; raise max_iter"
+            )
 
     edges.unpersist()
     if raw is not None:
@@ -850,10 +864,13 @@ def simhash_near_duplicates(
     # size estimate of the signature subtree: ~35 bytes per (id, sig)
     # row (measured stable sf0.001-sf100), ~28 bytes per probe struct
     # row, targeting ~64 MiB of probe rows per task. Only widens (the
-    # session width stands when it is already enough), so small-scale
-    # plans are byte-identical.
-    n_probe_rows = max(1, plan_bytes(sigs) // 35) * len(combos)
-    gather_width = -(-n_probe_rows * 28 // (64 * 1024 * 1024))
+    # session width stands when it is already enough, or when the
+    # estimate failed), so small-scale plans are byte-identical.
+    sig_bytes = plan_bytes(sigs)
+    gather_width = 0
+    if sig_bytes is not None:
+        n_probe_rows = max(1, sig_bytes // 35) * len(combos)
+        gather_width = -(-n_probe_rows * 28 // (64 * 1024 * 1024))
     session_width = int(
         sigs.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )

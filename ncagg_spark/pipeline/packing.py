@@ -95,7 +95,9 @@ def token_offsets(
     # than compute; the gate reads the estimate of the SOURCE subtree
     # (with the text column), not the narrow projection — what the
     # re-derivations cost is the source pass.
-    if plan_bytes(docs) >= materialize_min_bytes(
+    # (a failed estimate, None, still materializes)
+    est = plan_bytes(docs)
+    if est is None or est >= materialize_min_bytes(
         "NCAGG_PACK_MATERIALIZE_MIN_BYTES", default=0
     ):
         counts = counts.localCheckpoint(eager=True)

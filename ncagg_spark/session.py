@@ -21,19 +21,29 @@ _DEFAULT_CONF = {
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
     "spark.sql.shuffle.partitions": "32",
     # Reduce-side width is a CEILING, not a constant (guide §2.2/§9):
-    # AQE plans every exchange at this initial width and coalesces down
-    # to the 64 MiB advisory target, so small shuffles still run 1-4
-    # tasks while a genuinely large one (e.g. the simhash candidate
-    # DISTINCT at 5M docs: ~0.5B surviving pairs) gets hundreds of
-    # partitions instead of 32 x 14M-row hash-aggregate states that OOM
-    # an 8 GiB JVM (measured, r16 sf100 third-decade run). Sort-based
-    # shuffle writes one indexed file per map task regardless of this
-    # value, so a high ceiling costs only scheduler/planning overhead
-    # on queries AQE coalesces anyway. Env-parameterised for clusters
-    # (set it to ~2-3x total cores there).
+    # AQE plans every exchange at this initial width and coalesces the
+    # post-shuffle partitions, so a genuinely large shuffle (e.g. the
+    # simhash candidate DISTINCT at 5M docs: ~0.5B surviving pairs) gets
+    # hundreds of partitions instead of 32 x 14M-row hash-aggregate
+    # states that OOM an 8 GiB JVM (measured, r16 sf100 third-decade
+    # run). Env-parameterised for clusters (set it to ~2-3x total cores
+    # there). Whether 512 beats leaving it unset, and what
+    # coalescePartitions.parallelismFirst does to the 64 MiB advisory
+    # target, is not yet measured (ROADMAP carried item 1).
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum": (
         os.environ.get("SPARK_GRAFT_INITIAL_SHUFFLE_PARTITIONS", "512")
     ),
+    # Coalescing reaches cached plans too. Without this Spark keeps a
+    # persisted plan's output partitioning as planned, so every
+    # persist()/cache() of a post-shuffle frame held all 512 partitions
+    # and every consumer of it ran 512 tasks. Measured on 4 vCPUs
+    # (SCALE.md, "Cached relations coalesce"): perfbench dedup_and_ann
+    # runs 1,572 -> 42 tasks in the same 28 jobs, peak RSS -10%; the
+    # 82-query registry at sf0.01 runs 15,948 -> 616 tasks, and no
+    # query's widest stage exceeds 4. Explicit repartition(n, col)
+    # widths (the CC loop's co-partitioned edge cache) are never
+    # coalesced.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.files.maxPartitionBytes": "128m",
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.sql.parquet.filterPushdown": "true",

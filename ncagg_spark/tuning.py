@@ -30,6 +30,7 @@ brackets with a lock) before doing that.
 
 from __future__ import annotations
 
+import logging
 import os
 from contextlib import contextmanager
 from typing import Iterator
@@ -37,6 +38,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 
 _KEY = "spark.sql.shuffle.partitions"
+
+_log = logging.getLogger("ncagg_spark")
 
 # Size gate shared by the "materialize a multiply-consumed subtree once"
 # optimizations (operators/gapfill.py anchor="previous",
@@ -63,16 +66,18 @@ def materialize_min_bytes(
     return int(os.environ.get(env_var, default))
 
 
-def plan_bytes(df: DataFrame) -> int:
-    """Optimizer size estimate for ``df``'s plan (bytes). Unknown ->
-    huge, so failure to estimate errs on the side of materializing
-    (correct at scale, slightly conservative locally)."""
+def plan_bytes(df: DataFrame) -> int | None:
+    """Optimizer size estimate for ``df``'s plan (bytes), or ``None``
+    with one logged warning when the estimate fails. Callers keep their
+    default path on ``None``: a failed estimate must not read as "huge"
+    and switch every size gate on."""
     try:
         return int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-    except Exception:
-        return 1 << 62
+    except Exception as e:
+        _log.warning("plan_bytes: size estimate failed: %s", e)
+        return None
 
 
 _INITIAL_KEY = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"

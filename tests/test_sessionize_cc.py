@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from ncagg_spark.operators.sessionize import session_summary, sessionize
@@ -140,6 +141,48 @@ def test_connected_components_long_chain_converges(spark):
     labels = {r["cluster_id"] for r in out.collect()}
     assert labels == {100}
     assert out.count() == 25
+
+
+def test_connected_components_unconverged_loop_raises(spark):
+    # pointer jumping gives no diameter-based round bound: this graph
+    # is three 1,000-node cycles (plus self-paired node 500), and in
+    # round 25 the labels still split the cycles into 45 clusters
+    pairs = spark.createDataFrame(
+        [(i, (7 * i + 1) % 3001) for i in range(3000)],
+        "id_a long, id_b long",
+    )
+    with pytest.raises(
+        RuntimeError, match=r"did not converge in 25 rounds over \d+ edge"
+    ):
+        connected_components(pairs, num_partitions=2)
+
+
+def test_cc_driver_gate_stages_take_coalesced_width(spark):
+    # the driver-gate path persists the shuffled edge list; its cached
+    # plan must coalesce like an executed one, so no stage runs at the
+    # session's 512-wide initialPartitionNum ceiling
+    from ncagg_spark.pipeline.similarity import _job_group
+    from tools.check_oracle import job_group_stats
+
+    sc = spark.sparkContext
+    # two input partitions: the symmetric edge union doubles the scan
+    # width (and one would make the edge distinct shuffle-free), while
+    # only the shuffle-read side is sized by configuration
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
+    ).coalesce(2)
+    group = "test_cc_driver_gate_width"
+    with _job_group(sc, group, "cc driver gate width"):
+        got = {
+            r["node"]: r["cluster_id"]
+            for r in connected_components(
+                pairs, num_partitions=None
+            ).collect()
+        }
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    jobs, _tasks, widest = job_group_stats(sc, group)
+    assert jobs > 0
+    assert widest <= sc.defaultParallelism, widest
 
 
 def test_cc_agrees_with_union_find_oracle(spark):

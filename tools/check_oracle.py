@@ -520,6 +520,28 @@ def check_one(name, sdf, con, oracle, budget_sec=None):
     return "PASS", [f"{len(spdf)} rows"]
 
 
+def job_group_stats(sc, group: str) -> tuple[int, int, int]:
+    """(jobs, tasks, widest stage) of the Spark jobs run in ``group``.
+    Skipped stages (their shuffle output was reused) ran no tasks and
+    count towards neither total; a stage's width is its task count."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(group)
+    stage_ids = set()
+    for j in job_ids:
+        info = tracker.getJobInfo(j)
+        if info is not None:
+            stage_ids.update(info.stageIds)
+    tasks = widest = 0
+    for sid in stage_ids:
+        st = tracker.getStageInfo(sid)
+        if st is None or st.numCompletedTasks + st.numFailedTasks == 0:
+            continue
+        tasks += st.numTasks
+        widest = max(widest, st.numTasks)
+    return len(job_ids), tasks, widest
+
+
 def check_cc_unionfind(name, sdf, spark, sf_dir, qs, cache):
     """VERDICT r9 #6: official union-find oracle mode for the CC family.
 
@@ -692,14 +714,26 @@ def main():
         oracles.update(ITER_CC_ORACLES)
     n_pass = n_fail = 0
     uf_cache: dict = {}
+    sc = spark.sparkContext
+
+    def jobs_line(group: str) -> str:
+        # a stage sized by configuration (a session width, a cached
+        # plan's output partitioning) shows up as tasks / widest here
+        jobs, tasks, widest = job_group_stats(sc, group)
+        return f"jobs {jobs}, tasks {tasks}, widest {widest}"
+
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        group = f"check_oracle:{name}"
+        sc.setJobGroup(group, name)
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
         except Exception as e:
-            print(f"FAIL {name}: spark build error: {e}")
+            print(
+                f"FAIL {name}: spark build error: {e} {jobs_line(group)}"
+            )
             n_fail += 1
             continue
         if cc_uf and name in ("doc_dup_clusters", "doc_near_dedup"):
@@ -711,10 +745,13 @@ def main():
                 status, msgs = "FAIL", [f"union-find oracle error: {e}"]
             dt = time.time() - t0
             if status == "PASS_UF":
-                print(f"PASS {name} (uf: {'; '.join(msgs)}) [{dt:.1f}s]")
+                print(
+                    f"PASS {name} (uf: {'; '.join(msgs)}) [{dt:.1f}s] "
+                    f"{jobs_line(group)}"
+                )
                 n_pass += 1
             else:
-                print(f"FAIL {name} [{dt:.1f}s]")
+                print(f"FAIL {name} [{dt:.1f}s] {jobs_line(group)}")
                 for m in msgs:
                     print("   ", m)
                 n_fail += 1
@@ -733,7 +770,8 @@ def main():
                 print(
                     f"FAIL {name}: --sample predicate set but oracle is "
                     f"callable ({type(ora).__name__}) — cannot push the "
-                    "sample filter into a callable oracle"
+                    f"sample filter into a callable oracle "
+                    f"{jobs_line(group)}"
                 )
                 n_fail += 1
                 continue
@@ -778,16 +816,25 @@ def main():
         if sampled:
             msgs = msgs + [f"sampled-verify ({sampled})"]
         if status == "FAIL":
-            print(f"FAIL {name} [{dt:.1f}s]")
+            print(f"FAIL {name} [{dt:.1f}s] {jobs_line(group)}")
             for m in msgs:
                 print("   ", m)
             n_fail += 1
         elif status == "BUDGET":
-            print(f"BDGT {name}: {'; '.join(msgs)} [{dt:.1f}s]")
+            print(
+                f"BDGT {name}: {'; '.join(msgs)} [{dt:.1f}s] "
+                f"{jobs_line(group)}"
+            )
         elif status == "ROWS_ONLY":
-            print(f"----  {name}: rows-only: {'; '.join(msgs)} [{dt:.1f}s]")
+            print(
+                f"----  {name}: rows-only: {'; '.join(msgs)} [{dt:.1f}s] "
+                f"{jobs_line(group)}"
+            )
         else:
-            print(f"PASS {name} ({'; '.join(msgs)}) [{dt:.1f}s]")
+            print(
+                f"PASS {name} ({'; '.join(msgs)}) [{dt:.1f}s] "
+                f"{jobs_line(group)}"
+            )
             n_pass += 1
     print(f"\n{n_pass} passed, {n_fail} failed")
     return 1 if n_fail else 0
