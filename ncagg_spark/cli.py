@@ -202,6 +202,27 @@ def main(argv: list[str] | None = None) -> int:
             file=sys.stderr,
         )
         return 2
+    # parse and range-check the netCDF-4 knobs before any Spark job: a
+    # bad value otherwise surfaces only after the whole aggregate ran
+    # (-c 0 even fell back to default chunking silently)
+    rec_chunk = None
+    if args.chunksize:
+        n = args.chunksize.rsplit(":", 1)[-1]
+        rec_chunk = int(n) if n.isdigit() else 0
+        if rec_chunk < 1:
+            print(
+                f"error: -c/--chunksize wants [DIM:]N with N >= 1, got "
+                f"{args.chunksize!r}",
+                file=sys.stderr,
+            )
+            return 2
+    if args.complevel is not None and args.complevel not in range(10):
+        print(
+            f"error: --complevel wants a zlib level 0-9, got "
+            f"{args.complevel}",
+            file=sys.stderr,
+        )
+        return 2
     if args.grain and nc_dst:
         print(
             "error: multi-grain (-u) writes one parquet dataset per "
@@ -315,7 +336,6 @@ def main(argv: list[str] | None = None) -> int:
         # DST ending in .nc/.nc4: single-file NetCDF export, the
         # reference's own output contract (one aggregate file)
         from ncagg_spark.sources.nc_granules import (
-            write_nc_aggregate,
             write_nc_aggregate_streamed,
         )
 
@@ -326,12 +346,8 @@ def main(argv: list[str] | None = None) -> int:
             if args.inner_hz is not None
             else cfg.index_by
         )
-        # bounded-memory streamed export for BOTH formats: classic is
-        # byte-identical to the in-memory path, netCDF-4 value-equal
-        # (chunks land first, metadata after — invisible to readers)
-        rec_chunk = None
-        if args.chunksize:
-            rec_chunk = int(args.chunksize.rsplit(":", 1)[-1])
+        # the one single-file export, bounded driver memory for both
+        # containers (netCDF-4 chunks land first, metadata after)
         write_nc_aggregate_streamed(
             out,
             args.dst,

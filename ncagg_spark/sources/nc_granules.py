@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator, Sequence
 
+import math
 import os
 import shutil
 import tempfile
@@ -467,270 +468,6 @@ def _cf_encode_timestamps(
     return df.select(*out_cols), var_attributes
 
 
-def write_nc_aggregate(
-    df: DataFrame,
-    path: str,
-    *,
-    index_col: str,
-    cf_units: str = "seconds since 1970-01-01",
-    attributes: dict | None = None,
-    var_attributes: dict[str, dict] | None = None,
-    record_dim: str | None = None,
-    fmt: str = "classic",
-    chunksizes: dict[str, tuple[int, ...]] | None = None,
-    record_chunksize: int | None = None,
-    compression: int | None = None,
-) -> None:
-    """Write an aggregate DataFrame as ONE NetCDF file — the
-    reference's output format (it initializes and appends to a single
-    .nc, ncagg/aggregator.py:239-417).
-
-    ``fmt="classic"`` emits CDF-1/2/5 (sources/netcdf3.py) through the
-    STREAMED path (VERDICT r6 #7): executors encode record blocks,
-    the driver holds one block — byte-identical to the in-memory
-    form (pytest-asserted) but safe at any aggregate size.
-    ``fmt="netcdf4"`` emits an HDF5-container netCDF-4 file
-    (sources/hdf5_writer.py) honoring per-variable ``chunksizes`` and
-    zlib ``compression`` level — the reference's actual output settings
-    (chunksizes + zlib level 7, ncagg/aggregator.py:362-417,
-    ncagg/cli.py:207-218); this path lays out the whole HDF5 object
-    graph on the driver (bounded day-file sizes; for large netCDF-4
-    exports use ``write_nc_aggregate_streamed(fmt="netcdf4")``, which
-    is value-equal but allocates data-first).
-
-    A TimestampType index encodes back to CF numeric time using
-    ``cf_units``; array columns become (record, inner) 2-D variables;
-    the record dimension is named after the index column by default.
-    """
-    if fmt == "classic":
-        if chunksizes is not None:
-            raise ValueError(
-                "chunksizes require fmt='netcdf4' (classic NetCDF has "
-                "no chunking)"
-            )
-        # public default: the bounded-memory streamed writer
-        return write_nc_aggregate_streamed(
-            df,
-            path,
-            index_col=index_col,
-            cf_units=cf_units,
-            attributes=attributes,
-            var_attributes=var_attributes,
-            record_dim=record_dim,
-            fmt="classic",
-            record_chunksize=record_chunksize,
-            compression=compression,
-        )
-    return _write_nc_aggregate_inmem(
-        df,
-        path,
-        index_col=index_col,
-        cf_units=cf_units,
-        attributes=attributes,
-        var_attributes=var_attributes,
-        record_dim=record_dim,
-        fmt=fmt,
-        chunksizes=chunksizes,
-        record_chunksize=record_chunksize,
-        compression=compression,
-    )
-
-
-def _write_nc_aggregate_inmem(
-    df: DataFrame,
-    path: str,
-    *,
-    index_col: str,
-    cf_units: str = "seconds since 1970-01-01",
-    attributes: dict | None = None,
-    var_attributes: dict[str, dict] | None = None,
-    record_dim: str | None = None,
-    fmt: str = "classic",
-    chunksizes: dict[str, tuple[int, ...]] | None = None,
-    record_chunksize: int | None = None,
-    compression: int | None = None,
-) -> None:
-    """Driver-side in-memory writer (the pre-r7 public form): builds
-    every variable as a numpy array via toPandas(). Required for
-    ``fmt="netcdf4"`` (the HDF5 writer lays out the whole object graph)
-    and for classic-with-chunksizes validation; the byte-identity tests
-    pin it against the streamed path."""
-    attributes = attributes or {}
-    var_attributes = dict(var_attributes or {})
-    record_dim = record_dim or index_col
-
-    df2, var_attributes = _cf_encode_timestamps(df, cf_units, var_attributes)
-    pdf = df2.orderBy(index_col).toPandas()
-
-    dims: list[tuple[str, int]] = [(record_dim, 0)]
-    variables: dict[str, tuple[list[str], np.ndarray]] = {}
-    for name in pdf.columns:
-        col = pdf[name]
-        first = next((v for v in col if v is not None), None)
-        if isinstance(first, (list, np.ndarray)) and any(
-            isinstance(e, (list, np.ndarray))
-            for v in col
-            if v is not None
-            for e in v
-        ):
-            # NESTED array column (2-D per record, e.g. MAG's
-            # amb_mag_EPN (report, samples, 3)): becomes a 3-D
-            # (record, dim1, dim2) variable. Widths from the widest
-            # non-null row / element; short rows and elements pad NaN.
-            w1 = max((len(v) for v in col if v is not None), default=0)
-            w2 = max(
-                (
-                    len(e)
-                    for v in col
-                    if v is not None
-                    for e in v
-                    if e is not None
-                ),
-                default=0,
-            )
-            if w1 == 0 or w2 == 0:
-                raise ValueError(
-                    f"nested array column {name!r} has no non-empty "
-                    "rows — cannot derive fixed inner dimensions"
-                )
-            full = True
-            mat = np.full((len(col), w1, w2), np.nan, dtype="float64")
-            for i, v in enumerate(col):
-                if v is None:
-                    full = False
-                    continue
-                if len(v) < w1:
-                    full = False
-                for j, e in enumerate(v):
-                    if e is None:
-                        full = False
-                        continue
-                    if len(e) < w2:
-                        full = False
-                    # leaf-level nulls: numpy silently maps None -> NaN
-                    # for float64, and a later astype("int64") would turn
-                    # that NaN into INT64_MIN garbage (ADVICE r6) — demote
-                    # the column to float64/NaN instead.
-                    if any(x is None for x in e):
-                        full = False
-                    a = np.asarray(
-                        [np.nan if x is None else x for x in e],
-                        dtype="float64",
-                    )
-                    mat[i, j, : len(a)] = a
-            el0 = next(
-                (
-                    e[0]
-                    for v in col
-                    if v is not None
-                    for e in v
-                    if e is not None and len(e) > 0
-                ),
-                None,
-            )
-            is_int = isinstance(el0, (int, np.integer)) and not isinstance(
-                el0, bool
-            )
-            if is_int and full:
-                mat = mat.astype("int64")
-            d1, d2 = f"{name}_dim1", f"{name}_dim2"
-            dims.append((d1, w1))
-            dims.append((d2, w2))
-            variables[name] = ([record_dim, d1, d2], mat)
-            continue
-        if isinstance(first, (list, np.ndarray)):
-            # inner width from the widest non-null row (the first row may
-            # be an empty list); short rows pad with NaN
-            inner = max((len(v) for v in col if v is not None), default=0)
-            if inner == 0:
-                raise ValueError(
-                    f"array column {name!r} has no non-empty rows — "
-                    "cannot derive a fixed inner dimension"
-                )
-            dim_name = f"{name}_dim1"
-            dims.append((dim_name, inner))
-            # int64 only when every row is present and integral: null rows
-            # AND null leaf elements fill with NaN, which int64 cannot
-            # represent (ADVICE r4, r6)
-            has_null = any(
-                v is None
-                or len(v) < inner
-                or any(x is None for x in v)
-                for v in col
-            )
-            is_int = (
-                len(first) > 0
-                and isinstance(first[0], (int, np.integer))
-                and not isinstance(first[0], bool)
-            )
-            fill = [np.nan] * inner
-            mat = np.array(
-                [
-                    list(v) + [np.nan] * (inner - len(v))
-                    if v is not None
-                    else fill
-                    for v in col
-                ],
-                dtype="int64" if (is_int and not has_null) else "float64",
-            )
-            variables[name] = ([record_dim, dim_name], mat)
-        elif col.dtype == object and isinstance(first, str):
-            # fixed-width char matrix (the classic-format string idiom);
-            # width in UTF-8 BYTES so multi-byte chars never truncate
-            width = max(
-                (len(s.encode("utf-8")) for s in col if s is not None),
-                default=1,
-            )
-            dim_name = f"{name}_str_len"
-            dims.append((dim_name, max(width, 1)))
-            mat = np.zeros((len(col), max(width, 1)), dtype="S1")
-            for i, s in enumerate(col):
-                b = (s or "").encode("utf-8")[: max(width, 1)]
-                mat[i, : len(b)] = [bytes([c]) for c in b]
-            variables[name] = ([record_dim, dim_name], mat)
-        elif str(col.dtype) == "bool":
-            variables[name] = ([record_dim], col.to_numpy().astype("int8"))
-        else:
-            arr = col.to_numpy()
-            if arr.dtype == object:  # nullable ints etc.
-                arr = col.astype("float64").to_numpy()
-            variables[name] = ([record_dim], arr)
-
-    if fmt == "netcdf4":
-        from ncagg_spark.sources.hdf5_writer import write_hdf5
-
-        enums = _extract_enums(
-            var_attributes,
-            {
-                n: np.asarray(a).dtype.kind in "iu"
-                for n, (_, a) in variables.items()
-            },
-        )
-        write_hdf5(
-            path,
-            dims=dims,
-            variables=variables,
-            attributes=attributes,
-            var_attributes=var_attributes,
-            chunksizes=chunksizes,
-            record_chunksize=record_chunksize,
-            compression=compression,
-            enums=enums or None,
-        )
-        return
-    if fmt != "classic":
-        raise ValueError(f"unknown NetCDF format {fmt!r}")
-    from ncagg_spark.sources.netcdf3 import write_netcdf3
-
-    write_netcdf3(
-        path,
-        dims=dims,
-        variables=variables,
-        attributes=attributes,
-        var_attributes=var_attributes,
-    )
-
-
 def _extract_enums(
     var_attributes: dict[str, dict], int_ok: dict[str, bool]
 ) -> dict[str, dict[str, int]]:
@@ -813,12 +550,13 @@ def _streamed_col_specs(df: DataFrame):
 
     Returns (numrecs, specs) where each spec is
     (name, kind, np_dtype_str, inner_width):
-      kind 'scalar' | 'array' | 'string'.
-    The dtype decisions replicate ``write_nc_aggregate``'s pandas-side
-    rules exactly (byte-identical output is pytest-asserted): integer
-    columns with any null -> float64; array columns -> int64 only when
-    the element type is integral and every row is present & full-width;
-    strings -> fixed width = max length.
+      kind 'scalar' | 'array' | 'array2' | 'string'.
+    This is the single-file export's one dtype policy, shared by the
+    classic and netCDF-4 encoders: integer and boolean columns with any
+    null -> float64; array columns -> int64 only when the element type
+    is integral and every row and leaf is present & full-width; strings
+    -> fixed width = max UTF-8 byte length; all-null string/array
+    columns -> float64 NaN scalars.
     """
     aggs = [F.count(F.lit(1)).alias("__n")]
     for f in df.schema.fields:
@@ -859,9 +597,9 @@ def _streamed_col_specs(df: DataFrame):
                     ).alias(f"ne__{c}")
                 )
         elif isinstance(f.dataType, T.StringType):
-            # UTF-8 byte width (octet_length), matching the pandas
-            # paths' s.encode('utf-8') sizing — a char-count width
-            # would truncate multi-byte chars mid-codepoint
+            # UTF-8 byte width (octet_length), matching the encoders'
+            # s.encode('utf-8') — a char-count width would truncate
+            # multi-byte chars mid-codepoint
             aggs.append(F.max(F.octet_length(c)).alias(f"xw__{c}"))
     row = df.agg(*aggs).collect()[0].asDict()
     numrecs = int(row["__n"])
@@ -878,15 +616,15 @@ def _streamed_col_specs(df: DataFrame):
         if all_null and isinstance(
             f.dataType, (T.ArrayType, T.StringType)
         ):
-            # mirror the pandas path: an all-null object column decodes
-            # to a float64 NaN scalar variable (byte-identical contract)
+            # an all-null string/array column has no width or element
+            # type to derive: it exports as a float64 NaN scalar
             specs.append((c, "scalar", "float64", 0))
             continue
         if isinstance(f.dataType, T.ArrayType) and isinstance(
             f.dataType.elementType, T.ArrayType
         ):
-            # nested (2-D per record) array -> 3-D variable; mirrors the
-            # pandas path's widths-from-widest + int64-only-when-full
+            # nested (2-D per record) array -> 3-D variable: widths
+            # from the widest row/element, int64 only when full
             if isinstance(
                 f.dataType.elementType.elementType, T.ArrayType
             ):
@@ -957,19 +695,17 @@ def write_nc_aggregate_streamed(
     record_dim: str | None = None,
     target_block_bytes: int = 64 << 20,
     fmt: str = "classic",
+    chunksizes: dict[str, tuple[int, ...]] | None = None,
     record_chunksize: int | None = None,
     compression: int | None = None,
     shuffle: bool = True,
     spill_dir: str | None = None,
 ) -> None:
-    """Bounded-memory single-file NetCDF export (classic or netCDF-4).
-
-    ``write_nc_aggregate`` materializes the whole aggregate on the
-    driver (fine for the reference's day-file sizes, a driver OOM at
-    100x). This variant keeps the single-file contract with bounded
-    driver memory — the reference itself streams records to the output
-    at a running offset (ncagg/aggregator.py:291-335); this is the
-    distributed equivalent:
+    """Write an aggregate DataFrame as ONE NetCDF file (classic or
+    netCDF-4) at bounded driver memory — the reference's output format:
+    it initializes one .nc and streams records to it at a running
+    offset (ncagg/aggregator.py:239-417, 291-335). This is the
+    distributed equivalent, and the engine's only single-file export:
 
       1. one aggregate pass derives column specs (dtypes, inner widths,
          null-driven promotions) and the record count — no data on the
@@ -986,8 +722,10 @@ def write_nc_aggregate_streamed(
          bounded copy buffer — peak driver memory is the copy buffer,
          never a block, never the dataset.
 
-    Byte-identical to ``write_nc_aggregate`` on the same input
-    (pytest-asserted), so readers cannot tell which path wrote the file.
+    A TimestampType index encodes back to CF numeric time using
+    ``cf_units``; array columns become (record, inner) 2-D variables
+    (nested arrays 3-D); the record dimension is named after the index
+    column by default. Column dtypes follow ``_streamed_col_specs``.
 
     The spill-file transport (r13) replaced the cached-runs +
     ``toLocalIterator`` drain: multi-MB encoded blocks riding task
@@ -1015,11 +753,27 @@ def write_nc_aggregate_streamed(
     global dense index, chunk-grid-aligned groups encode + compress
     each variable's chunk ON THE EXECUTORS, the driver appends payloads
     to the file as they arrive (peak driver memory = one chunk) and the
-    metadata (B-trees, headers, superblock) assembles after the data —
-    value-equal to ``write_nc_aggregate(fmt="netcdf4")``.
+    metadata (B-trees, headers, superblock) assembles after the data.
+    It honors zlib ``compression`` (0-9), ``record_chunksize`` (records
+    per chunk, >= 1) and per-variable ``chunksizes`` — the reference's
+    output settings (chunksizes + zlib 7, ncagg/aggregator.py:362-417,
+    ncagg/cli.py:207-218). ``chunksizes[name]`` is
+    ``(records_per_chunk, *inner)`` as ``write_hdf5`` takes it; chunks
+    run along the record dimension only, so any inner extents must be
+    the variable's full widths.
     """
     from ncagg_spark.sources.netcdf3 import _DTYPES, _NP_TO_NC, write_netcdf3
 
+    # range checks before any job: a bad level otherwise fails in the
+    # executors' zlib (or the driver's filter message) after the encode
+    if compression is not None and compression not in range(10):
+        raise ValueError(
+            f"compression must be a zlib level 0-9, got {compression!r}"
+        )
+    if record_chunksize is not None and record_chunksize < 1:
+        raise ValueError(
+            f"record_chunksize must be >= 1, got {record_chunksize!r}"
+        )
     if fmt == "netcdf4":
         return _write_nc4_streamed(
             df,
@@ -1029,6 +783,7 @@ def write_nc_aggregate_streamed(
             attributes=attributes,
             var_attributes=var_attributes,
             record_dim=record_dim,
+            chunksizes=chunksizes,
             record_chunksize=record_chunksize,
             compression=compression,
             shuffle=shuffle,
@@ -1036,12 +791,16 @@ def write_nc_aggregate_streamed(
         )
     if fmt != "classic":
         raise ValueError(f"unsupported fmt {fmt!r}")
-    if compression is not None or record_chunksize is not None:
+    if (
+        compression is not None
+        or record_chunksize is not None
+        or chunksizes is not None
+    ):
         # classic files have no compression/chunking — silently dropping
         # the flags would write the wrong container
         raise ValueError(
-            "compression/record_chunksize require fmt='netcdf4' "
-            "(classic NetCDF has neither)"
+            "compression/record_chunksize/chunksizes require "
+            "fmt='netcdf4' (classic NetCDF has neither)"
         )
 
     attributes = attributes or {}
@@ -1359,13 +1118,12 @@ def _fill_chunk_block(
 ):
     """One (height x width) chunk block from ``n`` rows of column
     values, null rows NaN/zero-filled and rows beyond ``n`` zeroed (the
-    HDF5 edge-chunk padding contract, matching the in-memory writer's
-    np.zeros blocks).
+    HDF5 edge-chunk padding, as ``write_hdf5`` pads its own chunks).
 
-    Third sibling of write_nc_aggregate's pandas fill and the classic
-    streamed encode — deliberately NOT unified with them: the classic
-    paths are byte-contract-frozen (big-endian, vsize padding), and the
-    value-equality tests pin all three against each other.
+    The netCDF-4 sibling of the classic encoder's ``_encode_rows``,
+    kept apart because the classic record stream is big-endian with
+    per-variable vsize padding; both take their dtypes and widths from
+    ``_streamed_col_specs``.
     """
     if kind == "array2":
         # nested (2-D per record) column -> (height, w1, w2) chunk
@@ -1418,6 +1176,13 @@ def _fill_chunk_block(
     return block
 
 
+# Bytes of records one netCDF-4 export task encodes: the streamed
+# writer groups chunks into ~this much per applyInPandas group, and
+# per-variable chunksizes may not force a group past it (or past one
+# default chunk row of records, when that is larger).
+_NC4_GROUP_BYTES = 64 << 20
+
+
 def _write_nc4_streamed(
     df: DataFrame,
     path: str,
@@ -1427,6 +1192,7 @@ def _write_nc4_streamed(
     attributes: dict | None,
     var_attributes: dict[str, dict] | None,
     record_dim: str | None,
+    chunksizes: dict[str, tuple[int, ...]] | None,
     record_chunksize: int | None,
     compression: int | None,
     shuffle: bool,
@@ -1439,22 +1205,28 @@ def _write_nc4_streamed(
 
       1. specs + record count from one aggregate pass (no data moves);
       2. a distributed dense record index (global_position) makes the
-         chunk grid computable: chunk_id = pos // chunk_records;
-      3. each chunk-id group (exactly chunk_records rows) encodes EVERY
-         variable's chunk block and runs the filter pipeline
-         (shuffle+deflate) ON THE EXECUTORS — the expensive part stays
-         distributed — appending the payloads to one spill file per
-         group (r13: payloads never ride task results, so a pressured
-         driver heap cannot lose one);
+         chunk grid computable: variable v's chunks start every L_v
+         records (its record chunk length);
+      3. each row group spans a common multiple of every L_v, so no
+         chunk straddles two groups; a group encodes EVERY variable's
+         chunk blocks and runs the filter pipeline (shuffle+deflate)
+         ON THE EXECUTORS — the expensive part stays distributed —
+         appending the payloads, ordered by chunk start row and then
+         column order, to one spill file per group (r13: payloads
+         never ride task results, so a pressured driver heap cannot
+         lose one);
       4. the driver collects the tiny per-chunk metadata, splices each
          spill file's payloads into the output (peak memory = one
          stored chunk), records their addresses, then writes the
          metadata (chunk B-trees, object headers, superblock) AFTER
-         the data via write_hdf5's ChunkedData seam.
+         the data via write_hdf5's ChunkedData seam — allocation order
+         (data first) differs from write_hdf5's own, which HDF5
+         readers never see.
 
-    Value-equal to ``write_nc_aggregate(fmt="netcdf4")`` (dims, attrs,
-    decoded values — asserted in tests); the byte layout differs only
-    in allocation order (data first), which HDF5 readers never see.
+    A group spans M = lcm(L_v) records, at least. Explicit
+    ``chunksizes`` whose M records outweigh ``_NC4_GROUP_BYTES`` (or one
+    default chunk row, if larger) raise ``ValueError`` instead of
+    sending up to the whole export through one task.
     """
     from ncagg_spark.operators.flatten import global_position
     from ncagg_spark.sources.hdf5_writer import (
@@ -1466,6 +1238,19 @@ def _write_nc4_streamed(
         write_hdf5,
     )
 
+    chunksizes = dict(chunksizes or {})
+    for name, want in chunksizes.items():
+        # name and record-length checks need no data: fail before a job
+        if name not in df.columns:
+            raise ValueError(
+                f"chunksizes names {name!r}, which is not a column of "
+                "the exported frame"
+            )
+        if not want or want[0] < 1:
+            raise ValueError(
+                f"chunksizes[{name!r}] = {want!r}: the record chunk "
+                "length must be >= 1"
+            )
     attributes = attributes or {}
     record_dim = record_dim or index_col
     df2, var_attributes = _cf_encode_timestamps(
@@ -1500,13 +1285,14 @@ def _write_nc4_streamed(
             default=1,
         )
         if record_chunksize:
-            C = max(1, record_chunksize)
+            C = record_chunksize
         else:
             # target ~4 MiB total per chunk row-group (tiny chunks measured
             # 4x slower end-to-end), capped at 16 MiB for the widest var
             C = max(4096, (4 << 20) // max(row_bytes, 1))
             C = max(1, min(C, (16 << 20) // max(max_var_row_bytes, 1)))
-        # encoder blocks and declared chunk metadata must agree: clamp once
+        # encoder blocks and declared chunk metadata must agree: clamp
+        # every record chunk length to numrecs once
         C = min(C, max(numrecs, 1))
 
         dims: list[tuple[str, int]] = [(record_dim, 0)]
@@ -1529,21 +1315,41 @@ def _write_nc4_streamed(
                 inner, vdims = (width,), [record_dim, dn]
             else:
                 inner, vdims = (), [record_dim]
-            chunk = (C,) + inner  # C already clamped to numrecs above
+            want = chunksizes.get(name)
+            if want is None:
+                chunk = (C,) + inner
+            elif tuple(want[1:]) in ((), inner):
+                chunk = (min(int(want[0]), max(numrecs, 1)),) + inner
+            else:
+                raise ValueError(
+                    f"chunksizes[{name!r}] = {tuple(want)}: chunks run "
+                    "along the record dimension only, so the inner "
+                    f"extents must be the full widths {inner}"
+                )
             _validate_chunk_bytes(chunk, base.itemsize)
             meta[name] = (kind, base, inner, chunk, vdims)
 
         # group MANY chunks per task: one python-worker invocation per
         # ~target block, not per chunk (overhead would dominate)
-        per_group = max(1, (64 << 20) // max(C * row_bytes, 1))
+        M = math.lcm(*(m[3][0] for m in meta.values()))
+        span = min(M, max(numrecs, 1)) * row_bytes
+        if span > max(_NC4_GROUP_BYTES, C * row_bytes):
+            raise ValueError(
+                f"chunksizes record lengths have least common multiple "
+                f"{M}; one task would encode {span} bytes of records, "
+                f"above the {_NC4_GROUP_BYTES}-byte group bound — pick "
+                "record chunk lengths that divide one another"
+            )
+        G = M * max(1, _NC4_GROUP_BYTES // max(M * row_bytes, 1))
 
         pos = global_position(df2, index_col, position_col="__pos")
-        grouped = pos.withColumn(
-            "__cid", (F.col("__pos") / F.lit(C)).cast("long")
-        ).withColumn("__gid", (F.col("__cid") / F.lit(per_group)).cast("long"))
+        grouped = pos.withColumn("__gid", F.expr(f"__pos div {G}"))
 
-        specs_c = list(specs)
-        comp, shuf, C_c = compression, shuffle, C
+        # (column index, spec, record chunk length) per variable
+        cols_c = [
+            (i, spec, meta[spec[0]][3][0]) for i, spec in enumerate(specs)
+        ]
+        comp, shuf = compression, shuffle
         # spill-file transport (r13, same mechanism as the classic
         # path): each group writes its compressed chunk payloads to ONE
         # spill file beside the output (atomic rename) and returns only
@@ -1559,10 +1365,17 @@ def _write_nc4_streamed(
         def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
             pdf = pdf.sort_values("__pos")
             gid = int(pdf["__gid"].iloc[0])
+            g0, n_rows = gid * G, len(pdf)  # dense: rows g0 .. g0+n-1
             tmp = os.path.join(
                 spill_tmp, f"group-{gid}.{uuid.uuid4().hex}.tmp"
             )
-            cids, names, offs, lens = [], [], [], []
+            # chunk-major payload order: chunk start row, then column
+            order = sorted(
+                (r, i, spec, L)
+                for i, spec, L in cols_c
+                for r in range(0, n_rows, L)
+            )
+            starts, names, offs, lens = [], [], [], []
             off = 0
             try:
                 fh_ctx = open(tmp, "wb")
@@ -1571,44 +1384,41 @@ def _write_nc4_streamed(
                     _SPILL_OPEN_HINT.format(dir=spill_tmp, err=e)
                 ) from e
             with fh_ctx as fh:
-                for cid, sub in pdf.groupby("__cid", sort=True):
-                    n = len(sub)
-                    for name, kind, dt, width in specs_c:
-                        base = np.dtype(dt)
-                        block = _fill_chunk_block(
-                            sub[name], n, kind, base, width, C_c
-                        )
-                        raw = block.astype(
-                            base.newbyteorder("<")
-                        ).tobytes()
-                        payload = _encode_chunk_bytes(
-                            raw, base.itemsize,
-                            compression=comp, shuffle=shuf,
-                            fletcher32=False,
-                        )
-                        fh.write(payload)
-                        cids.append(int(cid))
-                        names.append(name)
-                        offs.append(off)
-                        lens.append(len(payload))
-                        off += len(payload)
+                for r, _, (name, kind, dt, width), L in order:
+                    base = np.dtype(dt)
+                    sub = pdf[name].iloc[r : r + L]
+                    block = _fill_chunk_block(
+                        sub, len(sub), kind, base, width, L
+                    )
+                    raw = block.astype(base.newbyteorder("<")).tobytes()
+                    payload = _encode_chunk_bytes(
+                        raw, base.itemsize,
+                        compression=comp, shuffle=shuf,
+                        fletcher32=False,
+                    )
+                    fh.write(payload)
+                    starts.append(g0 + r)
+                    names.append(name)
+                    offs.append(off)
+                    lens.append(len(payload))
+                    off += len(payload)
             final = os.path.join(spill_tmp, f"group-{gid}.bin")
             os.replace(tmp, final)
             return pd.DataFrame(
                 {
-                    "cid": cids,
+                    "start": starts,
                     "var": names,
                     "off": offs,
                     "len": lens,
-                    "path": [final] * len(cids),
-                    "gid": [gid] * len(cids),
+                    "path": [final] * len(starts),
+                    "gid": [gid] * len(starts),
                 }
             )
 
         enc = grouped.groupBy("__gid").applyInPandas(
             encode_group,
             schema=(
-                "cid long, var string, off long, len long, "
+                "start long, var string, off long, len long, "
                 "path string, gid long"
             ),
         )
@@ -1630,7 +1440,8 @@ def _write_nc4_streamed(
             fbd = _FileBuilderDisk(f)
             # splice in NUMERIC gid order (ADVICE r13: lexicographic
             # path order puts group-10 before group-2), so chunk entries
-            # append in cid order and the data layout is deterministic.
+            # append in start-row order and the data layout is
+            # deterministic.
             # ChunkedData.__init__ also sorts its entries, but the
             # B-tree build should not depend on that coupling.
             for p in sorted(by_path, key=gid_of.__getitem__):
@@ -1648,7 +1459,7 @@ def _write_nc4_streamed(
                         kind, base, inner, chunk, vdims = meta[
                             row["var"]
                         ]
-                        offs = (int(row["cid"]) * C,) + (0,) * len(inner)
+                        offs = (int(row["start"]),) + (0,) * len(inner)
                         entries[row["var"]].append(
                             (offs, addr, len(payload))
                         )
@@ -1702,7 +1513,7 @@ def write_nc_granules(
     selects classic (default) or ``"netcdf4"`` (chunked, optional zlib
     — each granule is one task's in-memory write, fine at granule size).
 
-    The scale-correct counterpart of ``write_nc_aggregate``'s bounded
+    The many-file counterpart of ``write_nc_aggregate_streamed``'s
     single-file contract: each interval group is written by ITS OWN task
     (applyInPandas), so export parallelism = granule count — the same
     shape as the ingest side. ``out_dir`` must be a filesystem every
@@ -1711,40 +1522,16 @@ def write_nc_granules(
     Returns a manifest DataFrame (granule, path, n_records) — an action
     on it performs the export.
     """
-    import os
-
-    from ncagg_spark.functions.time import _parse_units, epoch_us
+    from ncagg_spark.functions.time import _parse_units
     from ncagg_spark.sources.netcdf3 import write_netcdf3
 
     attributes = dict(attributes or {})
-    var_attributes = dict(var_attributes or {})
+    work, var_attributes = _cf_encode_timestamps(
+        df, cf_units, dict(var_attributes or {})
+    )
+    # the CF-encoded index -> epoch microseconds, for the interval key
     scale, epoch = _parse_units(cf_units)
     epoch_off_us = int(round(epoch.timestamp() * 1_000_000))
-
-    work = df
-    for f in df.schema.fields:
-        c = f.name
-        if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType)):
-            work = work.withColumn(
-                c,
-                (epoch_us(c) - F.lit(epoch_off_us)) / F.lit(scale * 1e6),
-            )
-        elif isinstance(f.dataType, T.ArrayType) and isinstance(
-            f.dataType.elementType, (T.TimestampType, T.TimestampNTZType)
-        ):
-            work = work.withColumn(
-                c,
-                F.transform(
-                    F.col(c),
-                    lambda v: (epoch_us(v) - F.lit(epoch_off_us))
-                    / F.lit(scale * 1e6),
-                ),
-            )
-        else:
-            continue
-        va = dict(var_attributes.get(c, {}))
-        va.setdefault("units", cf_units)
-        var_attributes[c] = va
     unit_us = scale * 1e6
     work = work.withColumn(
         "__granule_idx",

@@ -119,6 +119,31 @@ def test_cli_end_to_end(spark, granule_dir, tmp_path, capsys):
     assert n_real == 55
 
 
+@pytest.mark.parametrize(
+    "bad",
+    [
+        ["-c", "time:abc"],
+        ["-c", "0"],
+        ["--complevel", "12"],
+        ["--complevel", "-1"],
+    ],
+    ids=["chunk-not-int", "chunk-zero", "complevel-12", "complevel-neg"],
+)
+def test_cli_rejects_bad_nc4_knobs_before_running(
+    granule_dir, tmp_path, capsys, bad
+):
+    """A bad -c/--complevel value is refused up front (exit 2) instead
+    of after the whole aggregate ran: nothing is written."""
+    dst = tmp_path / "day.nc4"
+    rc = cli_main(
+        [str(dst), f"{granule_dir}/g0.parquet", "-i", "ts", "-z", "1.0", *bad]
+    )
+    assert rc == 2
+    assert "error:" in capsys.readouterr().err
+    assert not dst.exists()
+    assert not (tmp_path / "day_parquet").exists()
+
+
 def test_cli_generate_template(spark, granule_dir, capsys):
     rc = cli_main(["--generate-template", f"{granule_dir}/g0.parquet"])
     assert rc == 0

@@ -197,14 +197,14 @@ def test_spark_reads_written_nc4_granules(spark, tmp_path):
 def test_write_nc_aggregate_netcdf4_roundtrip(spark, tmp_path):
     """fmt='netcdf4' honors chunksizes + compression and round-trips
     dims/attrs/values through the from-spec reader."""
-    from ncagg_spark.sources.nc_granules import write_nc_aggregate
+    from ncagg_spark.sources.nc_granules import write_nc_aggregate_streamed
 
     df = spark.createDataFrame(
         [(float(i), i * 2, [float(i), float(i + 1)]) for i in range(20)],
         "t double, v long, arr array<double>",
     )
     out = str(tmp_path / "agg.nc4")
-    write_nc_aggregate(
+    write_nc_aggregate_streamed(
         df,
         out,
         index_col="t",

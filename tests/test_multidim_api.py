@@ -191,7 +191,7 @@ def test_multidim_nc_export_roundtrip(spark, granule_dir, tmp_path):
     """array<timestamp> index columns CF-encode to (record, inner)
     float matrices in the .nc export instead of crashing."""
     from ncagg_spark.sources.netcdf3 import read_netcdf3
-    from ncagg_spark.sources.nc_granules import write_nc_aggregate
+    from ncagg_spark.sources.nc_granules import write_nc_aggregate_streamed
 
     out = aggregate(
         spark,
@@ -201,7 +201,7 @@ def test_multidim_nc_export_roundtrip(spark, granule_dir, tmp_path):
         inner_hz=INNER_HZ,
     )
     path = str(tmp_path / "md.nc")
-    write_nc_aggregate(out, path, index_col="ob_time_rep")
+    write_nc_aggregate_streamed(out, path, index_col="ob_time_rep")
     nc = read_netcdf3(open(path, "rb").read())
     mat = nc.data["ob_time"]
     assert mat.shape == (WINDOW_S, INNER)

@@ -1,8 +1,13 @@
-"""Bounded-memory single-file `.nc` export
-(``write_nc_aggregate_streamed``): byte-identical to the driver-side
-path on the same input, ordered under multi-block range partitioning,
-and able to export 10M+ rows with the Spark driver capped at 1 GiB —
-the scale contract the in-memory path cannot meet (VERDICT r4 #1).
+"""The single-file `.nc` export (``write_nc_aggregate_streamed``).
+
+Classic output is checked byte for byte against ``write_netcdf3`` fed
+hand-written arrays, so the streamed record encoder must reproduce the
+spec writer's data section; netCDF-4 output is decoded through
+``read_hdf5`` and compared with hand-written arrays, NaN masks, dims
+and attributes. Both containers take their dtypes from one spec pass
+(null-driven promotions, widths) and stay ordered under multi-block
+range partitioning; 10M+ rows export with the Spark driver capped at
+1 GiB (VERDICT r4 #1).
 """
 
 from __future__ import annotations
@@ -17,11 +22,23 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from ncagg_spark.sources.nc_granules import (
-    _write_nc_aggregate_inmem as write_nc_aggregate,  # pin: in-memory twin
-    write_nc_aggregate_streamed,
-)
-from ncagg_spark.sources.netcdf3 import read_netcdf3
+from ncagg_spark.sources import nc_granules
+from ncagg_spark.sources.hdf5 import read_hdf5
+from ncagg_spark.sources.nc_granules import write_nc_aggregate_streamed
+from ncagg_spark.sources.netcdf3 import read_netcdf3, write_netcdf3
+
+T0_US = 1_704_153_600_000_000  # 2024-01-02T00:00:00Z
+T0_S = T0_US // 1_000_000
+UNITS = "seconds since 1970-01-01"  # the writer's default cf_units
+
+
+def _chars(strings, width):
+    """A classic char matrix: UTF-8 bytes, NUL-padded; None -> all NUL."""
+    mat = np.zeros((len(strings), width), dtype="S1")
+    for i, s in enumerate(strings):
+        for j, b in enumerate((s or "").encode("utf-8")):
+            mat[i, j] = bytes([b])
+    return mat
 
 
 def _mixed_df(spark, n=500):
@@ -48,29 +65,63 @@ def _mixed_df(spark, n=500):
     )
 
 
+def _mixed_expected(n=500):
+    """``_mixed_df`` as the export's dtype rules lay it out: CF seconds,
+    the nullable long promoted to float64/NaN, booleans as int8 and the
+    strings as a char matrix as wide as the longest UTF-8 value."""
+    i = np.arange(n)
+    nn = i.astype("float64")
+    nn[i % 5 == 0] = np.nan
+    tags = [f"name{k}" if k % 7 else None for k in range(n)]
+    width = max(len(t) for t in tags if t)
+    dims = [("ts", 0), ("arr_dim1", 3), ("tag_str_len", width)]
+    variables = {
+        "ts": (["ts"], T0_S + i.astype("float64")),
+        "val": (["ts"], i * 0.5),
+        "n": (["ts"], i.astype("int64")),
+        "nn": (["ts"], nn),
+        "arr": (
+            ["ts", "arr_dim1"],
+            np.stack([i, i + 1, i + 2], axis=1).astype("float64"),
+        ),
+        "tag": (["ts", "tag_str_len"], _chars(tags, width)),
+        "flag": (["ts"], (i % 2 == 0).astype("int8")),
+    }
+    return dims, variables
+
+
+_MIXED_ATTRS = dict(
+    attributes={"title": "x", "count": 5},
+    var_attributes={"val": {"units": "W"}},
+)
+
+
 def test_streamed_export_byte_identical(spark, tmp_path):
     df = _mixed_df(spark)
-    kw = dict(
-        index_col="ts",
-        attributes={"title": "x", "count": 5},
-        var_attributes={"val": {"units": "W"}},
+    out = tmp_path / "str.nc"
+    write_nc_aggregate_streamed(df, str(out), index_col="ts", **_MIXED_ATTRS)
+    dims, variables = _mixed_expected()
+    expected = write_netcdf3(
+        None,
+        dims=dims,
+        variables=variables,
+        attributes=_MIXED_ATTRS["attributes"],
+        var_attributes={"val": {"units": "W"}, "ts": {"units": UNITS}},
     )
-    write_nc_aggregate(df, str(tmp_path / "mem.nc"), **kw)
-    write_nc_aggregate_streamed(df, str(tmp_path / "str.nc"), **kw)
-    assert (
-        (tmp_path / "mem.nc").read_bytes()
-        == (tmp_path / "str.nc").read_bytes()
-    )
+    assert out.read_bytes() == expected
 
 
 def test_streamed_export_single_record_var_packed(spark, tmp_path):
     df = _mixed_df(spark, 64).select("ts")
-    write_nc_aggregate(df, str(tmp_path / "mem.nc"), index_col="ts")
-    write_nc_aggregate_streamed(df, str(tmp_path / "str.nc"), index_col="ts")
-    assert (
-        (tmp_path / "mem.nc").read_bytes()
-        == (tmp_path / "str.nc").read_bytes()
+    out = tmp_path / "str.nc"
+    write_nc_aggregate_streamed(df, str(out), index_col="ts")
+    expected = write_netcdf3(
+        None,
+        dims=[("ts", 0)],
+        variables={"ts": (["ts"], T0_S + np.arange(64, dtype="float64"))},
+        var_attributes={"ts": {"units": UNITS}},
     )
+    assert out.read_bytes() == expected
 
 
 def test_streamed_export_many_blocks_ordered(spark, tmp_path):
@@ -170,41 +221,35 @@ def test_streamed_export_10m_rows_capped_driver(tmp_path):
 
 
 def test_streamed_nc4_value_equal(spark, tmp_path):
-    """fmt="netcdf4": the streamed HDF5 export is value-equal to the
-    in-memory writer (layout differs only in allocation order)."""
-    from ncagg_spark.sources.hdf5 import read_hdf5
-
+    """fmt="netcdf4": the streamed HDF5 export decodes to the same
+    arrays, NaN masks, dims and attributes as the classic layout."""
     df = _mixed_df(spark)
-    kw = dict(
-        index_col="ts",
-        attributes={"title": "x", "count": 5},
-        var_attributes={"val": {"units": "W"}},
-    )
-    write_nc_aggregate(
-        df, str(tmp_path / "m.nc4"), fmt="netcdf4", compression=5, **kw
-    )
+    out = str(tmp_path / "s.nc4")
     write_nc_aggregate_streamed(
-        df, str(tmp_path / "s.nc4"), fmt="netcdf4", compression=5, **kw
+        df, out, index_col="ts", fmt="netcdf4", compression=5,
+        **_MIXED_ATTRS,
     )
-    a = read_hdf5(str(tmp_path / "m.nc4"))
-    b = read_hdf5(str(tmp_path / "s.nc4"))
-    assert sorted(a.datasets) == sorted(b.datasets)
-    assert a.root_attributes == b.root_attributes
-    for name in a.datasets:
-        va, vb = a.read(name), b.read(name)
-        if va.dtype.kind == "f":
-            np.testing.assert_array_equal(
-                np.isnan(va), np.isnan(vb)
-            )
-            np.testing.assert_array_equal(
-                va[~np.isnan(va)], vb[~np.isnan(vb)]
-            )
-        else:
-            np.testing.assert_array_equal(va, vb)
-        assert (
-            a.datasets[name].attributes.get("units")
-            == b.datasets[name].attributes.get("units")
-        )
+    h5 = read_hdf5(out)
+    dims, variables = _mixed_expected()
+    assert h5.root_attributes["title"] == "x"
+    assert h5.root_attributes["count"] == 5
+    # the record dim is the index's own dimension scale; the inner dims
+    # are netCDF-4 dimension-only scales of their full widths
+    assert h5.datasets["ts"].attributes["CLASS"] == "DIMENSION_SCALE"
+    for dname, size in dims[1:]:
+        assert h5.datasets[dname].dataspace.shape == (size,), dname
+    assert set(h5.datasets) == set(variables) | {d for d, _ in dims}
+    for name, (vdims, want) in variables.items():
+        got = h5.read(name)
+        assert got.dtype == want.dtype, name
+        if want.dtype.kind == "f":
+            np.testing.assert_array_equal(np.isnan(got), np.isnan(want))
+        np.testing.assert_array_equal(got, want)
+        if name != "ts":
+            assert h5.datasets[name].attributes["_dim_names"] == vdims
+        assert [f for f, _ in h5.datasets[name].filters] == [2, 1], name
+    assert h5.datasets["val"].attributes["units"] == "W"
+    assert h5.datasets["ts"].attributes["units"] == UNITS
 
 
 def test_streamed_nc4_record_chunksize_and_multichunk(spark, tmp_path):
@@ -351,26 +396,15 @@ def test_nested_array_columns_export_3d(spark, tmp_path):
     """array<array<T>> columns (2-D per record, e.g. MAG's
     (report, samples, 3) field vectors) export as 3-D
     (record, dim1, dim2) variables — round 6, found by exporting the
-    full real MAG aggregate in the head-to-head harness. Both export
-    paths must agree byte-for-byte; ragged rows pad NaN; int64 only
-    when every row and element is full."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from ncagg_spark.sources.nc_granules import (
-        write_nc_aggregate,
-        write_nc_aggregate_streamed,
-    )
-    from ncagg_spark.sources.netcdf3 import read_netcdf3
-
-    T0 = 1_704_153_600_000_000
+    full real MAG aggregate in the head-to-head harness. Ragged rows
+    pad NaN; int64 only when every row and element is full."""
     rows = []
     for i in range(50):
         mat = [[float(i), float(j), i + j / 10.0] for j in range(4)]
         if i == 7:
             mat = mat[:2]  # ragged outer -> float64 + NaN pad
         imat = [[i, j] for j in range(3)]  # full -> int64
-        rows.append((T0 + i * 1_000_000, mat, imat, float(i)))
+        rows.append((T0_US + i * 1_000_000, mat, imat, float(i)))
     df = spark.createDataFrame(
         rows,
         "us long, field array<array<double>>, "
@@ -378,13 +412,38 @@ def test_nested_array_columns_export_3d(spark, tmp_path):
     ).select(
         F.timestamp_micros("us").alias("ts"), "field", "counts", "v"
     )
+    p_str = tmp_path / "str.nc"
+    write_nc_aggregate_streamed(df, str(p_str), index_col="ts")
 
-    p_mem = str(tmp_path / "mem.nc")
-    p_str = str(tmp_path / "str.nc")
-    write_nc_aggregate(df, p_mem, index_col="ts")
-    write_nc_aggregate_streamed(df, p_str, index_col="ts")
-    a = open(p_mem, "rb").read()
-    assert a == open(p_str, "rb").read()
+    i = np.arange(50, dtype="float64")[:, None]
+    j = np.arange(4, dtype="float64")[None, :]
+    field = np.stack(
+        np.broadcast_arrays(i, j, i + j / 10.0), axis=-1
+    ).copy()
+    field[7, 2:] = np.nan
+    counts = np.stack(
+        np.broadcast_arrays(
+            np.arange(50)[:, None], np.arange(3)[None, :]
+        ),
+        axis=-1,
+    ).astype("int64")
+    expected = write_netcdf3(
+        None,
+        dims=[
+            ("ts", 0),
+            ("field_dim1", 4), ("field_dim2", 3),
+            ("counts_dim1", 3), ("counts_dim2", 2),
+        ],
+        variables={
+            "ts": (["ts"], T0_S + np.arange(50, dtype="float64")),
+            "field": (["ts", "field_dim1", "field_dim2"], field),
+            "counts": (["ts", "counts_dim1", "counts_dim2"], counts),
+            "v": (["ts"], np.arange(50, dtype="float64")),
+        },
+        var_attributes={"ts": {"units": UNITS}},
+    )
+    a = p_str.read_bytes()
+    assert a == expected
 
     f = read_netcdf3(a)
     field = f.data["field"]
@@ -419,45 +478,39 @@ def test_nested_array_deeper_nesting_raises(spark, tmp_path):
 
 def test_nested_array_nc4_streamed_value_equal_to_inmem(spark, tmp_path):
     """Streamed netCDF-4 export of nested (2-D per record) array
-    columns (r7 — closed the r6 NotImplementedError): value-equal to
-    the in-memory nc4 writer, including ragged rows padded NaN and the
-    3-D dims."""
-    import datetime
-
-    from pyspark.sql import functions as F
-
-    from ncagg_spark.sources.hdf5 import read_hdf5
-    from ncagg_spark.sources.nc_granules import (
-        write_nc_aggregate_streamed,
-    )
-
-    t0 = 1_704_153_600_000_000
+    columns (r7 — closed the r6 NotImplementedError): decodes to the
+    hand-written 3-D array, ragged rows padded NaN, with the 3-D dims."""
     rows = [
-        (t0, [[1.0, 2.0, 3.0], [4.0, 5.0, 6.0]]),
-        (t0 + 1_000_000, [[7.0, 8.0]]),  # ragged -> NaN padding
-        (t0 + 2_000_000, [[9.0, 10.0, 11.0], [12.0, 13.0, 14.0]]),
+        (T0_US, [[1.0, 2.0, 3.0], [4.0, 5.0, 6.0]]),
+        (T0_US + 1_000_000, [[7.0, 8.0]]),  # ragged -> NaN padding
+        (T0_US + 2_000_000, [[9.0, 10.0, 11.0], [12.0, 13.0, 14.0]]),
     ]
     df = spark.createDataFrame(
         rows, "us long, m array<array<double>>"
     ).select(F.timestamp_micros("us").alias("ts"), "m")
     p_str = str(tmp_path / "s.nc4")
-    p_mem = str(tmp_path / "m.nc4")
     write_nc_aggregate_streamed(
         df, p_str, fmt="netcdf4", index_col="ts", compression=4
     )
-    write_nc_aggregate(
-        df, p_mem, fmt="netcdf4", index_col="ts", compression=4
-    )
     hs = read_hdf5(open(p_str, "rb").read())
-    hm = read_hdf5(open(p_mem, "rb").read())
-    a, b = hs.read("m"), hm.read("m")
-    assert a.shape == b.shape == (3, 2, 3)
-    np.testing.assert_array_equal(
-        np.isnan(a), np.isnan(b)
+    nan = np.nan
+    want = np.array(
+        [
+            [[1.0, 2.0, 3.0], [4.0, 5.0, 6.0]],
+            [[7.0, 8.0, nan], [nan, nan, nan]],
+            [[9.0, 10.0, 11.0], [12.0, 13.0, 14.0]],
+        ]
     )
-    np.testing.assert_array_equal(a[~np.isnan(a)], b[~np.isnan(b)])
-    assert a[1, 0, :2].tolist() == [7.0, 8.0]
-    assert np.isnan(a[1, 0, 2]) and np.isnan(a[1, 1]).all()
+    a = hs.read("m")
+    assert a.shape == (3, 2, 3) and a.dtype == np.float64
+    np.testing.assert_array_equal(np.isnan(a), np.isnan(want))
+    np.testing.assert_array_equal(a, want)
+    assert hs.datasets["m"].attributes["_dim_names"] == [
+        "ts", "m_dim1", "m_dim2"
+    ]
+    np.testing.assert_array_equal(
+        hs.read("ts"), T0_S + np.arange(3, dtype="float64")
+    )
 
 
 def test_streamed_export_explicit_spill_dir(spark, tmp_path):
@@ -502,3 +555,296 @@ def test_streamed_export_spill_dir_conf_nc4(spark, tmp_path):
     for k in fa.datasets:
         np.testing.assert_array_equal(fa.read(k), fb.read(k))
     assert base.is_dir() and list(base.iterdir()) == []
+
+
+def test_int_array_null_leaf_demotes_float64(spark, tmp_path):
+    """A null LEAF in an integer array column demotes it to float64/NaN
+    (ADVICE r6: NaN->astype(int64) used to write INT64_MIN garbage)."""
+    df = spark.createDataFrame(
+        [(0, [1, None, 3]), (1, [4, 5, 6])], "rid long, a array<long>"
+    )
+    out = tmp_path / "s.nc"
+    write_nc_aggregate_streamed(df, str(out), index_col="rid")
+    expected = write_netcdf3(
+        None,
+        dims=[("rid", 0), ("a_dim1", 3)],
+        variables={
+            "rid": (["rid"], np.array([0, 1], dtype="int64")),
+            "a": (["rid", "a_dim1"], np.array([[1, np.nan, 3], [4, 5, 6]])),
+        },
+    )
+    assert out.read_bytes() == expected
+    a = read_netcdf3(str(out)).data["a"]
+    assert a.dtype == np.dtype(">f8")
+    assert np.isnan(a[0, 1])
+    np.testing.assert_array_equal(a[1], [4.0, 5.0, 6.0])
+    # the old bug: INT64_MIN in the data — assert nothing wild
+    assert np.nanmin(a) >= 1.0
+
+
+def test_nested_int_array_null_leaf_demotes_float64(spark, tmp_path):
+    df = spark.createDataFrame(
+        [(0, [[1, None], [3, 4]]), (1, [[5, 6], [7, 8]])],
+        "rid long, a array<array<long>>",
+    )
+    out = tmp_path / "s.nc"
+    write_nc_aggregate_streamed(df, str(out), index_col="rid")
+    expected = write_netcdf3(
+        None,
+        dims=[("rid", 0), ("a_dim1", 2), ("a_dim2", 2)],
+        variables={
+            "rid": (["rid"], np.array([0, 1], dtype="int64")),
+            "a": (
+                ["rid", "a_dim1", "a_dim2"],
+                np.array([[[1, np.nan], [3, 4]], [[5, 6], [7, 8]]]),
+            ),
+        },
+    )
+    assert out.read_bytes() == expected
+    a = read_netcdf3(str(out)).data["a"]
+    assert a.dtype == np.dtype(">f8")
+    assert np.isnan(a[0, 0, 1])
+    np.testing.assert_array_equal(a[1], [[5.0, 6.0], [7.0, 8.0]])
+    assert np.nanmin(a) >= 1.0
+
+
+def test_nested_int_array_full_stays_int64(spark, tmp_path):
+    """No nulls at any level -> int64 is still chosen (no regression of
+    the exact-integer contract)."""
+    df = spark.createDataFrame(
+        [(0, [[1, 2], [3, 4]]), (1, [[5, 6], [7, 8]])],
+        "rid long, a array<array<long>>",
+    )
+    out = str(tmp_path / "i.nc")
+    write_nc_aggregate_streamed(df, out, index_col="rid")
+    f = read_netcdf3(out)
+    assert f.data["a"].dtype == np.dtype(">i8")
+    np.testing.assert_array_equal(f.data["a"][0], [[1, 2], [3, 4]])
+
+
+def test_streamed_writer_spec_failure_unpersists(spark, tmp_path):
+    """A spec-pass failure (all-empty array column) must not leave the
+    persisted frame pinned in executor storage."""
+    sc = spark.sparkContext
+    before = len(
+        [r for r in sc._jsc.sc().getRDDStorageInfo()]
+    )
+    df = spark.createDataFrame(
+        [(0, []), (1, [])], "rid long, a array<double>"
+    )
+    with pytest.raises(ValueError, match="no non-empty rows"):
+        write_nc_aggregate_streamed(
+            df, str(tmp_path / "x.nc"), index_col="rid"
+        )
+    after = len([r for r in sc._jsc.sc().getRDDStorageInfo()])
+    assert after <= before
+
+
+def test_streamed_export_block_sized_drain_byte_identical(
+    spark, tmp_path
+):
+    # Force n_blocks >> cores (tiny target_block_bytes): the drain must
+    # keep ~one-block partitions and still write the spec writer's file
+    # (ADVICE r8: the fixed <=8-way coalesce held ~fileBytes/8).
+    rows = []
+    for i in range(2000):
+        ts = datetime.datetime(
+            2024, 1, 2, tzinfo=datetime.timezone.utc
+        ) + datetime.timedelta(seconds=i)
+        rows.append((ts, float(i) * 0.5, i))
+    df = spark.createDataFrame(rows, "ts timestamp, val double, n long")
+    out = tmp_path / "str.nc"
+    write_nc_aggregate_streamed(
+        df,
+        str(out),
+        index_col="ts",
+        target_block_bytes=1024,  # 2000 recs * 24 B -> ~47 blocks > 32
+    )
+    i = np.arange(2000)
+    expected = write_netcdf3(
+        None,
+        dims=[("ts", 0)],
+        variables={
+            "ts": (["ts"], T0_S + i.astype("float64")),
+            "val": (["ts"], i * 0.5),
+            "n": (["ts"], i.astype("int64")),
+        },
+        var_attributes={"ts": {"units": UNITS}},
+    )
+    assert out.read_bytes() == expected
+
+
+def test_nc_export_non_ascii_strings_roundtrip(spark, tmp_path):
+    # width must be UTF-8 bytes: 'café' is 4 chars / 5 bytes
+    tags = ["café", "naïve—x", "ok"]
+    df = spark.createDataFrame(
+        [(1.0, tags[0]), (2.0, tags[1]), (3.0, tags[2])],
+        "ts double, tag string",
+    )
+    out = tmp_path / "str.nc"
+    write_nc_aggregate_streamed(df, str(out), index_col="ts")
+    width = max(len(t.encode("utf-8")) for t in tags)  # 10 bytes
+    expected = write_netcdf3(
+        None,
+        dims=[("ts", 0), ("tag_str_len", width)],
+        variables={
+            "ts": (["ts"], np.array([1.0, 2.0, 3.0])),
+            "tag": (["ts", "tag_str_len"], _chars(tags, width)),
+        },
+    )
+    assert out.read_bytes() == expected
+    chars = read_netcdf3(out.read_bytes()).data["tag"]
+    decoded = [
+        bytes(bytearray(b"".join(row))).decode("utf-8").rstrip("\x00")
+        for row in chars
+    ]
+    assert decoded == tags
+
+
+def test_streamed_export_all_null_object_columns(spark, tmp_path):
+    """All-null string/array columns must not crash the streamed export:
+    with no width or element type to derive, each exports as a float64
+    NaN scalar variable."""
+    rows = [(T0_US + i * 1_000_000, float(i), None, None) for i in range(4)]
+    df = spark.createDataFrame(
+        rows, "us long, v double, tag string, arr array<double>"
+    ).select(
+        F.timestamp_micros("us").alias("ts"), "v", "tag", "arr"
+    )
+    out = tmp_path / "str.nc"
+    write_nc_aggregate_streamed(df, str(out), index_col="ts")
+    nan4 = np.full(4, np.nan)
+    expected = write_netcdf3(
+        None,
+        dims=[("ts", 0)],
+        variables={
+            "ts": (["ts"], T0_S + np.arange(4, dtype="float64")),
+            "v": (["ts"], np.arange(4, dtype="float64")),
+            "tag": (["ts"], nan4),
+            "arr": (["ts"], nan4),
+        },
+        var_attributes={"ts": {"units": UNITS}},
+    )
+    assert out.read_bytes() == expected
+
+
+def _three_var_df(spark, n=50):
+    return spark.createDataFrame(
+        [
+            (T0_US + i * 1_000_000, float(i), [i, -i], 3 * i)
+            for i in range(n)
+        ],
+        "us long, a double, b array<long>, c long",
+    ).select(F.timestamp_micros("us").alias("ts"), "a", "b", "c")
+
+
+def _check_three_var(h5, n=50):
+    i = np.arange(n)
+    np.testing.assert_array_equal(h5.read("ts"), T0_S + i.astype("float64"))
+    np.testing.assert_array_equal(h5.read("a"), i.astype("float64"))
+    np.testing.assert_array_equal(h5.read("b"), np.stack([i, -i], axis=1))
+    np.testing.assert_array_equal(h5.read("c"), 3 * i)
+
+
+def test_streamed_nc4_per_variable_chunksizes(spark, tmp_path, monkeypatch):
+    """chunksizes[name] = (records_per_chunk, *inner) sets one
+    variable's record chunk; the others keep the default chunk. Record
+    chunks of 8 and 12 over 50 records end in partial edge chunks."""
+    df = _three_var_df(spark)
+    out = str(tmp_path / "ck.nc4")
+    write_nc_aggregate_streamed(
+        df, out, index_col="ts", fmt="netcdf4", compression=7,
+        chunksizes={"a": (8,), "b": (12, 2)},
+    )
+    h5 = read_hdf5(out)
+    assert h5.datasets["a"].layout["chunk"] == (8,)
+    assert h5.datasets["b"].layout["chunk"] == (12, 2)
+    # default chunk: clamped to the 50 records
+    assert h5.datasets["c"].layout["chunk"] == (50,)
+    assert h5.datasets["ts"].layout["chunk"] == (50,)
+    assert [f for f, _ in h5.datasets["a"].filters] == [2, 1]
+    _check_three_var(h5)
+
+    # several row groups: with the group bound at its floor, each group
+    # spans one lcm(8, 12, 24) = 24 records (3 groups over 50), so the
+    # chunk grid must line up across group boundaries
+    monkeypatch.setattr(nc_granules, "_NC4_GROUP_BYTES", 1)
+    out2 = str(tmp_path / "ck2.nc4")
+    write_nc_aggregate_streamed(
+        df, out2, index_col="ts", fmt="netcdf4", record_chunksize=24,
+        chunksizes={"a": (8,), "b": (12,)},
+    )
+    h5 = read_hdf5(out2)
+    assert h5.datasets["a"].layout["chunk"] == (8,)
+    assert h5.datasets["b"].layout["chunk"] == (12, 2)
+    assert h5.datasets["c"].layout["chunk"] == (24,)
+    _check_three_var(h5)
+
+
+@pytest.mark.parametrize(
+    "kw, match",
+    [
+        (dict(chunksizes={"b": (8, 1)}), r"chunksizes\['b'\].*full widths"),
+        (dict(chunksizes={"nope": (8,)}), "'nope'"),
+        (dict(chunksizes={"a": (0,)}), r"chunksizes\['a'\].*>= 1"),
+        (dict(chunksizes={"a": (8,)}, fmt="classic"), "netcdf4"),
+    ],
+    ids=["partial-inner", "unknown-column", "zero-records", "classic"],
+)
+def test_streamed_nc4_chunksizes_rejected(spark, tmp_path, kw, match):
+    kw = {"fmt": "netcdf4", **kw}
+    with pytest.raises(ValueError, match=match):
+        write_nc_aggregate_streamed(
+            _three_var_df(spark), str(tmp_path / "x.nc4"),
+            index_col="ts", **kw,
+        )
+
+
+def test_streamed_nc4_chunksizes_lcm_bound(spark, tmp_path, monkeypatch):
+    """Record chunks of 7 and 9 (and 4 by default) only line up every
+    252 records; a row group that long would exceed the group bound, so
+    the export refuses instead of piling records into one task."""
+    monkeypatch.setattr(nc_granules, "_NC4_GROUP_BYTES", 1)
+    with pytest.raises(ValueError, match="least common multiple 252"):
+        write_nc_aggregate_streamed(
+            _three_var_df(spark), str(tmp_path / "x.nc4"),
+            index_col="ts", fmt="netcdf4", record_chunksize=4,
+            chunksizes={"a": (7,), "b": (9, 2)},
+        )
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        dict(compression=-1),
+        dict(compression=12),
+        dict(record_chunksize=-5),
+        dict(record_chunksize=0),
+    ],
+    ids=["compression-neg", "compression-12", "chunk-neg", "chunk-zero"],
+)
+def test_streamed_writer_rejects_out_of_range_knobs(spark, tmp_path, kw):
+    """Out-of-range zlib levels and record chunk lengths raise before
+    any Spark job (they used to fail in executor zlib or the driver's
+    filter message after the encode, or write 1-record chunks)."""
+    df = _three_var_df(spark)
+    sc = spark.sparkContext
+    group = f"nc_export_bad_knob_{tmp_path.name}"  # one per case
+    sc.setJobGroup(group, "bad export knob")
+    try:
+        with pytest.raises(ValueError):
+            write_nc_aggregate_streamed(
+                df, str(tmp_path / "x.nc4"), index_col="ts",
+                fmt="netcdf4", **kw,
+            )
+        tracker = sc.statusTracker()
+        assert list(tracker.getJobIdsForGroup(group)) == []
+        spark.range(3).count()  # the group does record jobs
+        assert len(tracker.getJobIdsForGroup(group)) > 0
+    finally:
+        for prop in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(prop, None)

@@ -235,7 +235,7 @@ def test_generate_template_from_nc(spark, tmp_path):
 def test_write_nc_aggregate_roundtrip(spark, tmp_path):
     """Full format-parity loop: .nc granules -> aggregate -> single .nc
     output -> re-read with the pure reader; CF time survives exactly."""
-    from ncagg_spark.sources.nc_granules import write_nc_aggregate
+    from ncagg_spark.sources.nc_granules import write_nc_aggregate_streamed
 
     g0 = _granule(tmp_path / "g0.nc", T0, 10)
     cfg = AggregationConfig(
@@ -244,7 +244,7 @@ def test_write_nc_aggregate_roundtrip(spark, tmp_path):
     out = str(tmp_path / "agg")
     res = aggregate_nc(spark, [g0], out, cfg)
     nc_out = str(tmp_path / "agg.nc")
-    write_nc_aggregate(
+    write_nc_aggregate_streamed(
         res,
         nc_out,
         index_col="time",
@@ -405,14 +405,14 @@ def test_write_nc_aggregate_int_array_with_nulls(spark, tmp_path):
     """Integer array columns containing null rows must export as float64
     with NaN fill instead of crashing np.array (ADVICE r4); a leading
     empty-list row must not break inner-width inference."""
-    from ncagg_spark.sources.nc_granules import write_nc_aggregate
+    from ncagg_spark.sources.nc_granules import write_nc_aggregate_streamed
 
     df = spark.createDataFrame(
         [(0, [1, 2]), (1, None), (2, []), (3, [7, 8])],
         "rid long, arr array<long>",
     )
     out = str(tmp_path / "a.nc")
-    write_nc_aggregate(df, out, index_col="rid")
+    write_nc_aggregate_streamed(df, out, index_col="rid")
     f = read_netcdf3(out)
     mat = f.data["arr"]
     assert mat.dtype == np.dtype(">f8")
@@ -423,7 +423,9 @@ def test_write_nc_aggregate_int_array_with_nulls(spark, tmp_path):
     # all-null / all-empty column: explicit error, not a 0-size dim
     df2 = spark.createDataFrame([(0, []), (1, None)], "rid long, arr array<long>")
     with pytest.raises(ValueError, match="no non-empty rows"):
-        write_nc_aggregate(df2, str(tmp_path / "b.nc"), index_col="rid")
+        write_nc_aggregate_streamed(
+            df2, str(tmp_path / "b.nc"), index_col="rid"
+        )
 
 
 def test_cli_source_kind_classification(tmp_path):

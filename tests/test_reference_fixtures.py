@@ -258,7 +258,7 @@ def test_exis_aggregate_exports_netcdf4(spark, tmp_path):
     from ncagg_spark.api import aggregate_nc
     from ncagg_spark.config import AggregationConfig
     from ncagg_spark.sources.hdf5 import read_hdf5
-    from ncagg_spark.sources.nc_granules import write_nc_aggregate
+    from ncagg_spark.sources.nc_granules import write_nc_aggregate_streamed
 
     paths = sorted(glob.glob(f"{REF}/exis/EXISL1bSFXR_5min/data/*.nc"))
     start = datetime(2017, 3, 5, 0, 30, tzinfo=timezone.utc)
@@ -273,7 +273,7 @@ def test_exis_aggregate_exports_netcdf4(spark, tmp_path):
     agg = aggregate_nc(spark, paths, out, cfg, decoder="auto")
 
     nc4 = str(tmp_path / "exis5.nc4")
-    write_nc_aggregate(
+    write_nc_aggregate_streamed(
         agg.select("time", "irradiance_xrsb1", "is_fill"),
         nc4,
         index_col="time",
@@ -1063,7 +1063,7 @@ def test_xrsf_flsum_export_roundtrip(spark, tmp_path):
     from ncagg_spark.sources.hdf5 import read_hdf5
     from ncagg_spark.sources.nc_granules import (
         read_nc_granules,
-        write_nc_aggregate,
+        write_nc_aggregate_streamed,
     )
 
     paths = sorted(glob.glob(f"{REF}/exis/xrsfl2flsum_simple/data/*.nc"))
@@ -1072,7 +1072,7 @@ def test_xrsf_flsum_export_roundtrip(spark, tmp_path):
         columns=["time", "status", "flare_class", "xrsb_flux"],
     )
     out = str(tmp_path / "flsum.nc4")
-    write_nc_aggregate(
+    write_nc_aggregate_streamed(
         df.select("time", "status", "flare_class", "xrsb_flux"),
         out,
         index_col="time",

@@ -1,7 +1,8 @@
 """Regression tests for the round-5 self-review findings: scalar-var
 chunking corruption, v3 array-datatype offset, mix_corpora empty-source
-silence, UTF-8 string width in .nc export, and the two CLI routing
-gaps (classic-output compression flags, same-directory mixed sources).
+silence, and the two CLI routing gaps (classic-output compression
+flags, same-directory mixed sources). The UTF-8 string width of the
+.nc export is tested in test_nc_streamed_export.py.
 """
 
 from __future__ import annotations
@@ -16,11 +17,6 @@ from ncagg_spark.cli import _source_kinds, main as cli_main
 from ncagg_spark.pipeline.sampling import mix_corpora
 from ncagg_spark.sources.hdf5 import Hdf5File, read_hdf5
 from ncagg_spark.sources.hdf5_writer import write_hdf5
-from ncagg_spark.sources.nc_granules import (
-    _decode,
-    write_nc_aggregate,
-    write_nc_aggregate_streamed,
-)
 
 
 def test_scalar_variable_with_compression_roundtrips():
@@ -64,28 +60,6 @@ def test_mix_corpora_empty_positive_source_raises(spark):
         mix_corpora(
             {"web": web, "code": code}, {"web": 0.8, "code": 0.2}
         )
-
-
-def test_nc_export_non_ascii_strings_roundtrip(spark, tmp_path):
-    # width must be UTF-8 bytes: 'café' is 4 chars / 5 bytes
-    df = spark.createDataFrame(
-        [(1.0, "café"), (2.0, "naïve—x"), (3.0, "ok")],
-        "ts double, tag string",
-    )
-    kw = dict(index_col="ts")
-    write_nc_aggregate(df, str(tmp_path / "mem.nc"), **kw)
-    write_nc_aggregate_streamed(df, str(tmp_path / "str.nc"), **kw)
-    assert (
-        (tmp_path / "mem.nc").read_bytes()
-        == (tmp_path / "str.nc").read_bytes()
-    )
-    nc = _decode((tmp_path / "mem.nc").read_bytes(), "auto")
-    chars = nc.data["tag"]
-    decoded = [
-        bytes(bytearray(b"".join(row))).decode("utf-8").rstrip("\x00")
-        for row in chars
-    ]
-    assert decoded == ["café", "naïve—x", "ok"]
 
 
 def test_cli_complevel_requires_netcdf4(tmp_path, capsys):

@@ -1,8 +1,9 @@
 """Regression tests for the sources-layer review findings: committed
 HDF5 datatypes, v2 filter-pipeline headers, the CDF-5 streaming
 sentinel, glob-path footer probes, CLI .nc4 routing and multi-grain
-flag validation, all-null column export parity, multidim char decode,
-and ragged-array granule export.
+flag validation, multidim char decode, and ragged-array granule
+export. The all-null column export is tested in
+test_nc_streamed_export.py.
 """
 
 from __future__ import annotations
@@ -22,8 +23,6 @@ from ncagg_spark.sources.netcdf3 import read_netcdf3, write_netcdf3
 from ncagg_spark.sources.nc_granules import (
     _granule_frame,
     _record_var_fields,
-    write_nc_aggregate,
-    write_nc_aggregate_streamed,
     write_nc_granules,
 )
 
@@ -115,24 +114,6 @@ def test_cli_multigrain_rejects_nc_dst_and_flags(tmp_path, capsys):
          "--complevel", "7"]
     )
     assert rc == 2
-
-
-def test_streamed_export_all_null_object_columns(spark, tmp_path):
-    """All-null string/array columns must not crash the streamed export
-    and must stay byte-identical to the in-memory path (which decodes
-    them as float64 NaN scalars)."""
-    rows = [(T0_US + i * 1_000_000, float(i), None, None) for i in range(4)]
-    df = spark.createDataFrame(
-        rows, "us long, v double, tag string, arr array<double>"
-    ).select(
-        F.timestamp_micros("us").alias("ts"), "v", "tag", "arr"
-    )
-    write_nc_aggregate(df, str(tmp_path / "mem.nc"), index_col="ts")
-    write_nc_aggregate_streamed(df, str(tmp_path / "str.nc"), index_col="ts")
-    assert (
-        (tmp_path / "mem.nc").read_bytes()
-        == (tmp_path / "str.nc").read_bytes()
-    )
 
 
 def test_multidim_char_decodes_per_slot():

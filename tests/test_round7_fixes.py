@@ -1,14 +1,12 @@
 """Round-7 advisor-finding regressions (ADVICE r6):
 
-1. medium — nested/flat integer array columns with a null LEAF element
-   must demote to float64/NaN in BOTH export paths (the pandas path
-   previously wrote INT64_MIN garbage via NaN->astype(int64); the
-   streamed path crashed mid-export), and the two writers must stay
-   byte-identical.
-2. low — dedup_cadence must keep working on frames with MapType
+1. low — dedup_cadence must keep working on frames with MapType
    columns (falls back to the row_number window form).
-3. low — a failure after df2.persist() in the streamed writers must
-   not leak the cached DataFrame.
+2. the refshim netCDF4 Dataset refuses writes in read mode.
+
+The round's export findings (null-leaf integer arrays demote to
+float64/NaN; a spec-pass failure must not leak the persisted frame)
+are tested in test_nc_streamed_export.py.
 """
 
 from __future__ import annotations
@@ -16,62 +14,6 @@ from __future__ import annotations
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
-
-from ncagg_spark.sources.nc_granules import (
-    _write_nc_aggregate_inmem as write_nc_aggregate,  # pin: in-memory twin
-    write_nc_aggregate_streamed,
-)
-from ncagg_spark.sources.netcdf3 import read_netcdf3
-
-
-def test_int_array_null_leaf_demotes_float64(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(0, [1, None, 3]), (1, [4, 5, 6])], "rid long, a array<long>"
-    )
-    mem, stream = str(tmp_path / "m.nc"), str(tmp_path / "s.nc")
-    write_nc_aggregate(df, mem, index_col="rid")
-    write_nc_aggregate_streamed(df, stream, index_col="rid")
-    for path in (mem, stream):
-        f = read_netcdf3(path)
-        a = f.data["a"]
-        assert a.dtype == np.dtype(">f8"), path
-        assert np.isnan(a[0, 1]), path
-        np.testing.assert_array_equal(a[1], [4.0, 5.0, 6.0])
-        # the old bug: INT64_MIN in the data — assert nothing wild
-        assert np.nanmin(a) >= 1.0, path
-    assert open(mem, "rb").read() == open(stream, "rb").read()
-
-
-def test_nested_int_array_null_leaf_demotes_float64(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(0, [[1, None], [3, 4]]), (1, [[5, 6], [7, 8]])],
-        "rid long, a array<array<long>>",
-    )
-    mem, stream = str(tmp_path / "m.nc"), str(tmp_path / "s.nc")
-    write_nc_aggregate(df, mem, index_col="rid")
-    write_nc_aggregate_streamed(df, stream, index_col="rid")
-    for path in (mem, stream):
-        f = read_netcdf3(path)
-        a = f.data["a"]
-        assert a.dtype == np.dtype(">f8"), path
-        assert np.isnan(a[0, 0, 1]), path
-        np.testing.assert_array_equal(a[1], [[5.0, 6.0], [7.0, 8.0]])
-        assert np.nanmin(a) >= 1.0, path
-    assert open(mem, "rb").read() == open(stream, "rb").read()
-
-
-def test_nested_int_array_full_stays_int64(spark, tmp_path):
-    """No nulls at any level -> int64 is still chosen (no regression of
-    the exact-integer contract)."""
-    df = spark.createDataFrame(
-        [(0, [[1, 2], [3, 4]]), (1, [[5, 6], [7, 8]])],
-        "rid long, a array<array<long>>",
-    )
-    out = str(tmp_path / "i.nc")
-    write_nc_aggregate_streamed(df, out, index_col="rid")
-    f = read_netcdf3(out)
-    assert f.data["a"].dtype == np.dtype(">i8")
-    np.testing.assert_array_equal(f.data["a"][0], [[1, 2], [3, 4]])
 
 
 def test_dedup_cadence_map_column_falls_back_to_window(spark):
@@ -103,24 +45,6 @@ def test_dedup_cadence_no_map_uses_aggregate(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
     assert sorted(r["t"] for r in out.collect()) == [1.0, 2.0]
-
-
-def test_streamed_writer_spec_failure_unpersists(spark, tmp_path):
-    """A spec-pass failure (all-empty array column) must not leave the
-    persisted frame pinned in executor storage."""
-    sc = spark.sparkContext
-    before = len(
-        [r for r in sc._jsc.sc().getRDDStorageInfo()]
-    )
-    df = spark.createDataFrame(
-        [(0, []), (1, [])], "rid long, a array<double>"
-    )
-    with pytest.raises(ValueError, match="no non-empty rows"):
-        write_nc_aggregate_streamed(
-            df, str(tmp_path / "x.nc"), index_col="rid"
-        )
-    after = len([r for r in sc._jsc.sc().getRDDStorageInfo()])
-    assert after <= before
 
 
 def test_refshim_read_mode_write_raises(tmp_path):

@@ -2,8 +2,8 @@
 
 1. nc_granules drain partitions are sized to target_block_bytes (the
    fixed <=8-way coalesce made peak driver residency ~fileBytes/8) —
-   pinned by byte-identity through the many-blocks (n_blocks > cores)
-   path the old code never created.
+   tested in test_nc_streamed_export.py through the many-blocks
+   (n_blocks > cores) path the old code never created.
 2. streaming gap fill uses floor(x+0.5) slot counting, matching the
    batch gap_fill rule and the stream_gap_fill DuckDB oracle (Python
    round() is half-to-even: a 2.5-step gap emitted one fill too few).
@@ -114,36 +114,6 @@ def test_dedup_maptype_fallback_residual_tiebreak(spark):
         }
         kept[attempt] = got
     assert kept[0] == kept[1] == {0: "aaa", 1: "mmm"}
-
-
-def test_streamed_export_block_sized_drain_byte_identical(
-    spark, tmp_path
-):
-    # Force n_blocks >> cores (tiny target_block_bytes): the drain must
-    # keep ~one-block partitions and still write a byte-identical file.
-    from ncagg_spark.sources.nc_granules import (
-        _write_nc_aggregate_inmem,
-        write_nc_aggregate_streamed,
-    )
-
-    rows = []
-    for i in range(2000):
-        ts = datetime.datetime(
-            2024, 1, 2, tzinfo=datetime.timezone.utc
-        ) + datetime.timedelta(seconds=i)
-        rows.append((ts, float(i) * 0.5, i))
-    df = spark.createDataFrame(rows, "ts timestamp, val double, n long")
-    _write_nc_aggregate_inmem(df, str(tmp_path / "mem.nc"), index_col="ts")
-    write_nc_aggregate_streamed(
-        df,
-        str(tmp_path / "str.nc"),
-        index_col="ts",
-        target_block_bytes=1024,  # 2000 recs * 24 B -> ~47 blocks > 32
-    )
-    assert (
-        (tmp_path / "mem.nc").read_bytes()
-        == (tmp_path / "str.nc").read_bytes()
-    )
 
 
 def test_aggregate_nc_small_input_auto_single_file(spark, tmp_path):
