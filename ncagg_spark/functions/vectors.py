@@ -18,7 +18,10 @@ def dot(a: Column | str, b: Column | str) -> Column:
 
     Elements are widened to double BEFORE multiplying and summed
     left-to-right — bit-identical to the DuckDB oracle's
-    list_sum(list_transform(...)) with the same casts.
+    list_sum(list_transform(...)) with the same casts. This order is
+    the contract of every exact cosine: the ANN searches score in numpy
+    (pipeline/topk.py ``_fold_dots``) but keep this same summation
+    order, so their cosines equal this fold's bit for bit.
     """
     return F.aggregate(
         F.zip_with(

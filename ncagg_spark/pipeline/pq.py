@@ -26,12 +26,13 @@ cosine and `approx_cosine = 1 - dist2 / 2` recovers the score scale.
 Every search here is candidate generation followed by the shared spine
 of pipeline/topk.py: ADC (Arrow ``partial_topk`` per batch, or the
 relational ``_adc_expr`` fold) proposes the k*expand best candidates
-per query under ``rank_per_query``'s tie rule, and an exact cosine
-rerank (``_exact_rerank`` / ``_rerank_by_query`` — two vector-fetch
-join shapes) ends in the same ``cosine`` / ``cosine_topk`` tail as the
-exact searches of pipeline/similarity.py. The IVF coarse quantizer
-reuses similarity.py's centroid scoring, so the index and the
-relational path assign cells by the same quantized rule.
+per query under ``rank_per_query``'s tie rule, and one exact cosine
+rerank (``_rerank_by_query``) scores them through the same
+``exact_cosine_topk`` as the exact searches of pipeline/similarity.py,
+one group per query, in the SQL fold's summation order.
+The IVF coarse quantizer reuses similarity.py's centroid scoring, so
+the index and the relational path assign cells by the same quantized
+rule.
 """
 
 from __future__ import annotations
@@ -41,7 +42,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ncagg_spark.functions.vectors import l2_norm, norm_guard
 from ncagg_spark.pipeline.similarity import (
     _cell_scores,
     _centroid_matrix,
@@ -52,8 +52,7 @@ from ncagg_spark.pipeline.similarity import (
     sample_centroids,
 )
 from ncagg_spark.pipeline.topk import (
-    cosine,
-    cosine_topk,
+    exact_cosine_topk,
     partial_topk,
     rank_per_query,
 )
@@ -352,36 +351,9 @@ def _adc_expr(
     return " + ".join(terms)
 
 
-def _exact_rerank(
-    corpus: DataFrame,
-    cands: DataFrame,
-    *,
-    k: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Exact cosine re-rank of a (query_id, neighbor_id, __qvec)
-    candidate set against the raw corpus vectors — the scan that touches
-    full vectors is proportional to the candidate count, not the corpus
-    (the candidate side broadcasts)."""
-    cvecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__nvec"),
-    )
-    scored = cvecs.join(F.broadcast(cands), on="neighbor_id").withColumn(
-        "cosine",
-        cosine(
-            "__qvec",
-            "__nvec",
-            norm_guard(l2_norm("__qvec")),
-            norm_guard(l2_norm("__nvec")),
-        ),
-    )
-    return cosine_topk(scored, k)
-
-
 def _adc_rerank(
     corpus: DataFrame,
+    queries: DataFrame,
     pairs: DataFrame,
     books: list[list[float]],
     *,
@@ -391,6 +363,7 @@ def _adc_rerank(
     expand: int,
     id_col: str,
     vec_col: str,
+    query_id_col: str,
 ) -> DataFrame:
     """The relational PQ search tail: ADC-score the (query_id, __qvec,
     neighbor_id, __code_*) candidate pairs, keep the ``k * expand``
@@ -401,8 +374,11 @@ def _adc_rerank(
     )
     cands = rank_per_query(
         scored, "__dist2", k * expand, ascending=True
-    ).select("query_id", "neighbor_id", "__qvec")
-    return _exact_rerank(corpus, cands, k=k, id_col=id_col, vec_col=vec_col)
+    ).select("query_id", "neighbor_id")
+    return _rerank_by_query(
+        corpus, queries, cands,
+        k=k, id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
+    )
 
 
 def pq_topk_relational(
@@ -418,7 +394,8 @@ def pq_topk_relational(
     vec_col: str = "embedding",
     query_id_col: str | None = None,
 ) -> DataFrame:
-    """Oracle-parity PQ search: pure Catalyst expressions end-to-end.
+    """Oracle-parity PQ search: Catalyst expressions up to the rerank,
+    whose numpy scorer keeps the SQL fold's summation order.
 
     Same ADC-then-exact-rerank semantics as ``pq_topk_rerank`` but with
     every float operation expressible bit-for-bit in ANSI SQL (the same
@@ -438,7 +415,9 @@ def pq_topk_relational(
         subspace distance against element_at(codebook, code+1) — fixed
         association order in both engines.
       * exact rerank of the k*expand ADC candidates by cosine (the
-        production recall-recovery design, identical to pq_topk_rerank).
+        production recall-recovery design, the same ``_rerank_by_query``
+        as pq_topk_rerank; its cosines are bit-identical to the SQL
+        fold's).
 
     Raw (un-normalized) vectors are used throughout so the oracle needs
     no normalization arithmetic; L2-ADC over raw vectors is standard PQ,
@@ -485,8 +464,8 @@ def pq_topk_relational(
         F.broadcast(q), F.col("neighbor_id") != F.col("query_id")
     )
     return _adc_rerank(
-        corpus, pairs, books, m=m, sub=sub, k=k, expand=expand,
-        id_col=id_col, vec_col=vec_col,
+        corpus, queries, pairs, books, m=m, sub=sub, k=k, expand=expand,
+        id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
     )
 
 
@@ -501,23 +480,21 @@ def _rerank_by_query(
     query_id_col: str,
 ) -> DataFrame:
     """Exact cosine re-rank of a (query_id, neighbor_id) candidate set —
-    the production rerank shared by ``pq_topk_rerank`` and
-    ``ivf_pq_topk`` (one contract: round-6 cosine, ties by neighbor id,
-    candidate-bounded vector fetch via broadcast joins)."""
+    the one rerank of every PQ search (``pq_topk_relational``,
+    ``ivf_pq_topk_relational``, ``pq_topk_rerank``, ``ivf_pq_topk``).
+    The candidates' raw vectors are fetched by a broadcast join, so the
+    scan that touches full vectors is proportional to the candidate
+    count, not the corpus; each query and its candidates are then one
+    ``exact_cosine_topk`` group (round-6 cosine, ties by neighbor id)."""
     cand_vecs = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
-        norm_guard(l2_norm(vec_col)).alias("c_norm"),
     ).join(F.broadcast(cands), on="neighbor_id")
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
-        norm_guard(l2_norm(vec_col)).alias("q_norm"),
     )
-    scored = cand_vecs.join(F.broadcast(q), on="query_id").withColumn(
-        "cosine", cosine("q_vec", "c_vec", "q_norm", "c_norm")
-    )
-    return cosine_topk(scored, k)
+    return exact_cosine_topk(q, cand_vecs, "query_id", k)
 
 
 def pq_topk_rerank(
@@ -672,8 +649,8 @@ def ivf_pq_topk_relational(
         F.col("neighbor_id") != F.col("query_id")
     )
     return _adc_rerank(
-        corpus, pairs, books, m=m, sub=sub, k=k, expand=expand,
-        id_col=id_col, vec_col=vec_col,
+        corpus, queries, pairs, books, m=m, sub=sub, k=k, expand=expand,
+        id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
     )
 
 

@@ -3,9 +3,9 @@
   * brute_force_topk — exact cosine top-k: broadcast the (small) query set
     against the full corpus, one pass, no shuffle on the corpus side.
     Public default = the matmul formulation (one BLAS gemm per Arrow
-    batch, partial top-k per partition); brute_force_topk_relational is
-    the bit-exact oracle-replicable baseline (codegen'd zip_with /
-    aggregate fold, identical to the SQL an ANSI engine runs).
+    batch, partial top-k per partition); brute_force_topk_relational
+    scores through the shared exact scorer instead, whose cosines are
+    bit-identical to the SQL fold the DuckDB oracle runs.
   * srp_lsh_topk — sign-random-projection LSH: bucket vectors by the sign
     pattern of h deterministic hyperplanes, search only the query's
     bucket (plus optional multi-probe neighbors). The scale path: turns a
@@ -19,12 +19,12 @@
 Hyperplanes/centroids are generated driver-side from a fixed seed and
 broadcast as literal arrays — deterministic, no fit state.
 
-Every method is one spine: it only generates candidate (query,
-neighbor) pairs — a broadcast cross join, an SRP bucket join, an IVF
-cell join, or a per-batch BLAS partial top-k — and hands them to the
-shared ``cosine`` score and ``cosine_topk`` rank tail in
-pipeline/topk.py (cosine rounded to 6 places, ties by neighbor id
-ascending, k per query). Centroid scoring (sorted unit or quantized
+Every method is one spine: it only names the candidates of each query
+— a hash bucket of the corpus, an SRP bucket, an IVF cell, or a
+per-batch BLAS partial top-k — and hands them to the shared scorer and
+rank tail of pipeline/topk.py (``exact_cosine_topk``: numpy blocks per
+candidate group in the SQL fold's summation order; cosine rounded to 6
+places in Spark, ties by neighbor id ascending, k per query). Centroid scoring (sorted unit or quantized
 centroid matrix, larger-cell-wins argmax) is shared the same way by
 ``assign_cells``, ``quantized_probe_col`` and the IVF+PQ index
 (pipeline/pq.py).
@@ -38,22 +38,26 @@ import random
 from contextlib import contextmanager
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ncagg_spark.functions.vectors import dot_const_sql, l2_norm, norm_guard
+from ncagg_spark.functions.vectors import dot_const_sql
 from ncagg_spark.pipeline.topk import (
-    cosine,
+    _fold_dots,
+    _vec_lengths,
     cosine_topk,
+    exact_cosine_topk,
     partial_topk,
     round_cosine,
 )
 
-# distinguishes kmeans_centroids calls in Spark job-group names (the
-# status tracker accumulates job ids per group for the app lifetime);
-# the last-used prefix is recorded so tests can assert jobs/iteration
+# distinguishes kmeans_centroids calls in Spark job tags (the status
+# store keeps every job's tags for the app lifetime); the last-used
+# prefix is recorded so tests can assert jobs/iteration
 _KMEANS_RUN_COUNTER = itertools.count()
-_LAST_KMEANS_JOB_GROUP_PREFIX: str | None = None
+_LAST_KMEANS_JOB_TAG_PREFIX: str | None = None
 
 
 def brute_force_topk(
@@ -70,9 +74,9 @@ def brute_force_topk(
     (``brute_force_topk_matmul``): one BLAS matmul per Arrow batch,
     shuffle carries only partitions x queries x k candidates — the shape
     that survives a 100 TB corpus. Use ``brute_force_topk_relational``
-    only when you need bit-exact SQL/DuckDB replication (its pair scores
-    come from the same left-to-right fold an ANSI engine runs; BLAS
-    reassociates the dot sum, differing in the last ulp only).
+    when you need bit-exact SQL/DuckDB replication (its scores keep the
+    left-to-right fold order an ANSI engine runs; BLAS reassociates the
+    dot sum, differing in the last ulp only).
 
     Returns (query_id, neighbor_id, rank, cosine). Self-matches (same id)
     are excluded. Ties broken by neighbor id ascending (deterministic).
@@ -96,44 +100,31 @@ def brute_force_topk_relational(
     vec_col: str = "embedding",
     query_id_col: str | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k, relational (pair-explosion) formulation.
-
-    The oracle-replicable baseline: every pair is scored by a Catalyst
-    fold identical to the SQL the DuckDB oracle runs, so values match an
-    ANSI engine bit-for-bit. ~1M pair-scores/s — fine for bounded query
-    sets and correctness gating; API users should call
-    ``brute_force_topk`` (matmul) instead, which is the scale shape.
+    """Exact cosine top-k through the shared exact scorer
+    (``exact_cosine_topk``): the corpus is split into
+    ``defaultParallelism`` groups by ``pmod(hash(id), groups)`` and every
+    query is copied to each group, so each group scores its slice of
+    the corpus as numpy blocks in the SQL fold's summation order. The
+    cosines are bit-identical to the DuckDB oracle's; this is the form
+    the registry gates. ``brute_force_topk`` (matmul) is the scale
+    shape: it never copies the query set per group.
 
     Returns (query_id, neighbor_id, rank, cosine). Self-matches (same id)
     are excluded. Ties broken by neighbor id ascending (deterministic).
     """
     query_id_col = query_id_col or id_col
-    # norms computed ONCE per row on each join side (join inputs are
-    # materialization points — per-pair work is then a single dot+divide,
-    # not three array reductions)
+    groups = corpus.sparkSession.sparkContext.defaultParallelism
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
-        norm_guard(l2_norm(vec_col)).alias("q_norm"),
+        F.explode(F.sequence(F.lit(0), F.lit(groups - 1))).alias("__g"),
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
-        norm_guard(l2_norm(vec_col)).alias("c_norm"),
+        F.pmod(F.hash(F.col(id_col)), F.lit(groups)).alias("__g"),
     )
-    return _exact_topk(F.broadcast(q).crossJoin(c), k)
-
-
-def _exact_topk(pairs: DataFrame, k: int) -> DataFrame:
-    """Exact cosine top-k of candidate pairs — (query_id, q_vec, q_norm)
-    joined to (neighbor_id, c_vec, c_norm) — with self-matches dropped:
-    the shared tail of the relational brute, SRP and IVF searches."""
-    return cosine_topk(
-        pairs.filter(F.col("query_id") != F.col("neighbor_id")).withColumn(
-            "cosine", cosine("q_vec", "c_vec", "q_norm", "c_norm")
-        ),
-        k,
-    )
+    return exact_cosine_topk(q, c, "__g", k)
 
 
 def random_hyperplanes(
@@ -232,20 +223,18 @@ def srp_lsh_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
-        norm_guard(l2_norm(vec_col)).alias("c_norm"),
         srp_bucket(vec_col, planes).alias("bucket"),
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
-        norm_guard(l2_norm(vec_col)).alias("q_norm"),
         (
             F.explode(srp_probe_buckets(vec_col, planes, probes))
             if probes > 1
             else srp_bucket(vec_col, planes)
         ).alias("bucket"),
     )
-    return _exact_topk(F.broadcast(q).join(c, on="bucket"), k)
+    return exact_cosine_topk(q, c, "bucket", k)
 
 
 def sample_centroids(
@@ -281,11 +270,11 @@ def brute_force_topk_matmul(
     """Exact cosine top-k, matmul formulation — the 100 TB scale shape
     and what the public ``brute_force_topk`` delegates to.
 
-    ``brute_force_topk_relational`` explodes (query x corpus) into
-    rows and scores each pair with an interpreted lambda chain; correct,
-    oracle-replicable, but ~1M pair-scores/s. This variant keeps the
-    corpus scan embarrassingly parallel and replaces per-pair rows with
-    ONE BLAS matmul per Arrow batch (scores = X @ Q^T), taking the
+    ``brute_force_topk_relational`` copies the query set to every
+    corpus group and scores each group in the SQL fold's order (exact,
+    oracle-replicable). This variant keeps the corpus scan
+    embarrassingly parallel with no copies, ONE BLAS matmul per Arrow
+    batch (scores = X @ Q^T), taking the
     partition-local top-k per query inside the batch — so the shuffle
     carries only partitions x queries x k candidate rows (KBs), never
     the pair explosion. A final tiny window pass merges partials.
@@ -299,8 +288,6 @@ def brute_force_topk_matmul(
     Queries are collected to the driver and broadcast — the query set is
     small by contract (that is what makes it the *query* side).
     """
-    import pandas as pd
-
     query_id_col = query_id_col or id_col
     n_type = {
         f.name: f.dataType.simpleString() for f in corpus.schema.fields
@@ -394,9 +381,6 @@ def assign_cells(
     rule.
     """
     if method in ("arrow", "quantized"):
-        import pandas as pd
-        from pyspark.sql import types as T
-
         quantized = method == "quantized"
         ids, C = _centroid_matrix(centroids, quantized=quantized)
 
@@ -404,8 +388,8 @@ def assign_cells(
             scores = _cell_scores(_stack(v), C, quantized=quantized)
             return pd.Series(ids[_larger_cell_argmax(scores)].astype("int32"))
 
-        # hints given as real objects (pandas imported in this scope), so
-        # eval-type inference sees Series -> Series
+        # hints given as real objects, so eval-type inference sees
+        # Series -> Series
         _assign.__annotations__ = {"v": pd.Series, "return": pd.Series}
         udf = F.pandas_udf(T.IntegerType())(_assign)
         return df.withColumn(out_col, udf(F.col(vec_col)))
@@ -464,26 +448,16 @@ def _larger_cell_argmax(scores: np.ndarray) -> np.ndarray:
     return scores.shape[1] - 1 - scores[:, ::-1].argmax(axis=1)
 
 
-# the local properties ``SparkContext.setJobGroup`` sets
-_JOB_GROUP_PROPS = (
-    "spark.jobGroup.id",
-    "spark.job.description",
-    "spark.job.interruptOnCancel",
-)
-
-
 @contextmanager
-def _job_group(sc, group: str, description: str):
-    """Run the block's jobs in ``group``, then give the caller's job
-    group, description and interrupt flag back — so a caller's
-    ``cancelJobGroup`` still reaches its later jobs."""
-    saved = [sc.getLocalProperty(p) for p in _JOB_GROUP_PROPS]
-    sc.setJobGroup(group, description)
+def _job_tag(sc, tag: str):
+    """Tag the block's jobs with ``tag``. Tags add to the caller's job
+    group and tags instead of replacing them, so the caller's group
+    (its ``cancelJobGroup``, a tracer's span) still holds every job."""
+    sc.addJobTag(tag)
     try:
         yield
     finally:
-        for prop, value in zip(_JOB_GROUP_PROPS, saved):
-            sc.setLocalProperty(prop, value)
+        sc.removeJobTag(tag)
 
 
 def kmeans_centroids(
@@ -561,12 +535,12 @@ def kmeans_centroids(
     ]
     q = update_quantization
     sc = corpus.sparkSession.sparkContext
-    # per-call-unique job-group prefix: getJobIdsForGroup accumulates
+    # per-call-unique job-tag prefix: the status store keeps job tags
     # for the app lifetime, so reusing "kmeans_iter_0" across calls
     # would conflate their job counts
     run_id = next(_KMEANS_RUN_COUNTER)
-    global _LAST_KMEANS_JOB_GROUP_PREFIX
-    _LAST_KMEANS_JOB_GROUP_PREFIX = f"kmeans_{run_id}"
+    global _LAST_KMEANS_JOB_TAG_PREFIX
+    _LAST_KMEANS_JOB_TAG_PREFIX = f"kmeans_{run_id}"
     for it in range(max_iter):
         assigned = assign_cells(
             corpus.select(F.col(vec_col).alias("v")),
@@ -586,8 +560,6 @@ def kmeans_centroids(
         # (integer addition is associative -> centroids bit-exact under
         # any partitioning; pytest-pinned).
         def _partials(batches):
-            import pandas as pd
-
             acc_p: dict = {}
             for pdf in batches:
                 if not len(pdf):
@@ -609,11 +581,8 @@ def kmeans_centroids(
                 )
 
         out_t = "array<long>" if q else "array<double>"
-        with _job_group(
-            sc,
-            f"kmeans_{run_id}_iter_{it}",
-            "kmeans Lloyd iteration (single fused assign+update job)",
-        ):
+        # one tag per Lloyd iteration (a single fused assign+update job)
+        with _job_tag(sc, f"kmeans_{run_id}_iter_{it}"):
             stats = (
                 assigned.select("cell", "v")
                 .mapInPandas(_partials, schema=f"cell int, sums {out_t}")
@@ -653,12 +622,7 @@ def quantized_probe_col(
     ``assign_cells(method="quantized")`` (same floor(x*1e6) quantization,
     exact integer scores in any summation order, so any SQL engine
     replicates the ranking bit-for-bit; ties -> smaller cell). Shared by
-    ``ivf_topk`` and the IVF+PQ composition (pipeline/pq.py). Also avoids
-    the O(n_cells x dim)-literal SQL expression of the "sql" probe path,
-    which at sqrt(N) cell counts becomes a megabyte-scale plan."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
+    ``ivf_topk`` and the IVF+PQ composition (pipeline/pq.py)."""
     pids, Cq = _centroid_matrix(cents, quantized=True)
     npr = int(n_probe)
 
@@ -667,6 +631,38 @@ def quantized_probe_col(
         # stable argsort of -scores: ties keep ascending cell order
         order = np.argsort(-scores, axis=1, kind="stable")[:, :npr]
         return pd.Series(list(pids[order].astype("int32")))
+
+    _probes.__annotations__ = {"v": pd.Series, "return": pd.Series}
+    probe_udf = F.pandas_udf(T.ArrayType(T.IntegerType()))(_probes)
+    return probe_udf(F.col(vec_col))
+
+
+def float_probe_col(
+    cents: list[tuple[int, list[float]]], n_probe: int, vec_col: str
+) -> Column:
+    """Per-row array of the ``n_probe`` cells whose unit-scaled
+    centroids have the highest dot with the vector — ``ivf_topk``'s
+    float probe, the twin of ``quantized_probe_col``. The dots are the
+    SQL fold's (``_fold_dots``: left to right from 0.0, against the same
+    ``_unit_scale`` doubles ``assign_cells(method="sql")`` uses), and
+    the order is Spark's: descending with NaN first, ties in the
+    centroids' list order (a stable sort). A vector whose dots are all
+    NULL — a NULL vector, a NULL element or a length other than the
+    centroids' — ties every cell and probes the first ``n_probe`` in
+    list order."""
+    ids = np.array([int(c) for c, _ in cents], dtype="int32")
+    C = np.array([_unit_scale(v) for _, v in cents], dtype="float64")
+    dim = len(C[0]) if len(C) else -1
+    npr = max(int(n_probe), 0)
+
+    def _probes(v: pd.Series) -> pd.Series:
+        order = np.tile(np.arange(len(ids)), (len(v), 1))
+        ok = np.flatnonzero(_vec_lengths(v) == dim)
+        if len(ok):
+            S = _fold_dots(np.stack(v.to_numpy()[ok]).astype("float64"), C)
+            nan = np.isnan(S)
+            order[ok] = np.lexsort((np.where(nan, 0.0, -S), ~nan), axis=-1)
+        return pd.Series(list(ids[order[:, :npr]]))
 
     _probes.__annotations__ = {"v": pd.Series, "return": pd.Series}
     probe_udf = F.pandas_udf(T.ArrayType(T.IntegerType()))(_probes)
@@ -689,6 +685,14 @@ def ivf_topk(
     """IVF-Flat approximate top-k: probe the n_probe cells whose centroids
     are most cosine-similar to the query; exact scoring within cells.
 
+    Scoring is the shared exact scorer (``exact_cosine_topk``): each
+    cell's vectors and the queries that probe it form one group of a
+    grouped map by ``cell``, scored as numpy blocks in the SQL fold's
+    order, so the cosines are bit-identical to the oracle's. Both
+    probes are pandas UDFs: ``float_probe_col`` (the default, exact
+    SQL-fold dots) and ``quantized_probe_col``
+    (``assign_method="quantized"``).
+
     ``assign_method="arrow"`` vectorizes the corpus->cell assignment
     (one BLAS matmul per Arrow batch) — the scale choice once
     cells x dim work per row dominates (interpreted higher-order-function
@@ -710,7 +714,6 @@ def ivf_topk(
         c = corpus_cells.select(
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).alias("c_vec"),
-            norm_guard(l2_norm(vec_col)).alias("c_norm"),
             "cell",
         )
     else:
@@ -718,7 +721,6 @@ def ivf_topk(
             corpus.select(
                 F.col(id_col).alias("neighbor_id"),
                 F.col(vec_col).alias("c_vec"),
-                norm_guard(l2_norm(vec_col)).alias("c_norm"),
             ),
             cents,
             vec_col="c_vec",
@@ -726,33 +728,14 @@ def ivf_topk(
             method=assign_method,
         )
     # query probes: rank centroids per query, keep n_probe. Same norm
-    # eliminations as assign_cells — ranking by dot against unit centroids.
-    if assign_method == "quantized":
-        # quantized-integer probe ranking (exact, SQL-replicable like
-        # the quantized assignment; ties -> smaller cell)
-        probe_col = F.explode(
-            quantized_probe_col(cents, n_probe, vec_col)
-        ).alias("cell")
-    else:
-        # One SQL expression end-to-end (sort comparator: score desc,
-        # ties keep centroid order — array_sort is stable).
-        entries = ",".join(
-            f"named_struct('s', {dot_const_sql(vec_col, _unit_scale(vec))},"
-            f" 'c', CAST({int(cell_id)} AS INT))"
-            for cell_id, vec in cents
-        )
-        probe_cells = (
-            f"slice(array_sort(array({entries}), (a, b) -> "
-            "CASE WHEN a.s > b.s THEN -1 WHEN a.s < b.s THEN 1 ELSE 0 END), "
-            f"1, {int(n_probe)})"
-        )
-        probe_col = F.explode(
-            F.expr(f"transform({probe_cells}, p -> p.c)")
-        ).alias("cell")
+    # eliminations as assign_cells — ranking by dot against unit centroids
+    # (quantized: exact integer scores, ties -> smaller cell)
+    probe = (
+        quantized_probe_col if assign_method == "quantized" else float_probe_col
+    )
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
-        norm_guard(l2_norm(vec_col)).alias("q_norm"),
-        probe_col,
+        F.explode(probe(cents, n_probe, vec_col)).alias("cell"),
     )
-    return _exact_topk(F.broadcast(q).join(c, on="cell"), k)
+    return exact_cosine_topk(q, c, "cell", k)

@@ -684,6 +684,28 @@ def _streamed_col_specs(df: DataFrame):
     return numrecs, specs
 
 
+def _spec_dims(specs, record_dim: str):
+    """The netCDF dimensions of a ``_streamed_col_specs`` column set:
+    the record dimension, then each column's own inner dimensions
+    (``<name>_dim1`` / ``<name>_dim2`` for arrays, ``<name>_str_len``
+    for strings), in spec order. Returns (dims, {name: [(dim, size),
+    ...]}), the second holding each column's inner dimensions."""
+    dims: list[tuple[str, int]] = [(record_dim, 0)]
+    inner: dict[str, list[tuple[str, int]]] = {}
+    for name, kind, _dt, width in specs:
+        if kind == "array2":
+            own = [(f"{name}_dim1", width[0]), (f"{name}_dim2", width[1])]
+        elif kind == "array":
+            own = [(f"{name}_dim1", width)]
+        elif kind == "string":
+            own = [(f"{name}_str_len", width)]
+        else:
+            own = []
+        dims += own
+        inner[name] = own
+    return dims, inner
+
+
 def write_nc_aggregate_streamed(
     df: DataFrame,
     path: str,
@@ -820,28 +842,14 @@ def write_nc_aggregate_streamed(
     try:
         numrecs, specs = _streamed_col_specs(df2)
 
-        dims: list[tuple[str, int]] = [(record_dim, 0)]
-        variables: dict[str, tuple[list[str], np.ndarray]] = {}
-        for name, kind, dt, width in specs:
-            if kind == "array2":
-                w1, w2 = width
-                d1, d2 = f"{name}_dim1", f"{name}_dim2"
-                dims.append((d1, w1))
-                dims.append((d2, w2))
-                variables[name] = (
-                    [record_dim, d1, d2],
-                    np.empty((0, w1, w2), dt),
-                )
-            elif kind == "array":
-                dn = f"{name}_dim1"
-                dims.append((dn, width))
-                variables[name] = ([record_dim, dn], np.empty((0, width), dt))
-            elif kind == "string":
-                dn = f"{name}_str_len"
-                dims.append((dn, width))
-                variables[name] = ([record_dim, dn], np.empty((0, width), dt))
-            else:
-                variables[name] = ([record_dim], np.empty((0,), dt))
+        dims, inner_dims = _spec_dims(specs, record_dim)
+        variables = {
+            name: (
+                [record_dim] + [d for d, _ in inner_dims[name]],
+                np.empty((0, *(w for _, w in inner_dims[name])), dt),
+            )
+            for name, _kind, dt, _width in specs
+        }
         header = write_netcdf3(
             None,
             dims=dims,
@@ -1123,7 +1131,8 @@ def _fill_chunk_block(
     The netCDF-4 sibling of the classic encoder's ``_encode_rows``,
     kept apart because the classic record stream is big-endian with
     per-variable vsize padding; both take their dtypes and widths from
-    ``_streamed_col_specs``.
+    ``_streamed_col_specs``. ``write_nc_granules`` fills each granule's
+    whole variables with it (``height == n``).
     """
     if kind == "array2":
         # nested (2-D per record) column -> (height, w1, w2) chunk
@@ -1295,26 +1304,12 @@ def _write_nc4_streamed(
         # every record chunk length to numrecs once
         C = min(C, max(numrecs, 1))
 
-        dims: list[tuple[str, int]] = [(record_dim, 0)]
+        dims, inner_dims = _spec_dims(specs, record_dim)
         meta: dict[str, tuple[str, np.dtype, tuple, tuple, list[str]]] = {}
         for name, kind, dt, width in specs:
             base = np.dtype(dt)
-            if kind == "array2":
-                w1, w2 = width
-                d1, d2 = f"{name}_dim1", f"{name}_dim2"
-                dims.append((d1, w1))
-                dims.append((d2, w2))
-                inner, vdims = (w1, w2), [record_dim, d1, d2]
-            elif kind == "array":
-                dn = f"{name}_dim1"
-                dims.append((dn, width))
-                inner, vdims = (width,), [record_dim, dn]
-            elif kind == "string":
-                dn = f"{name}_str_len"
-                dims.append((dn, width))
-                inner, vdims = (width,), [record_dim, dn]
-            else:
-                inner, vdims = (), [record_dim]
+            inner = tuple(w for _, w in inner_dims[name])
+            vdims = [record_dim] + [d for d, _ in inner_dims[name]]
             want = chunksizes.get(name)
             if want is None:
                 chunk = (C,) + inner
@@ -1519,6 +1514,11 @@ def write_nc_granules(
     shape as the ingest side. ``out_dir`` must be a filesystem every
     executor can write (local mode: any local dir; cluster: shared FS).
 
+    Every column takes its dtype and width from ``_streamed_col_specs``
+    (one aggregate job at call time), the single-file export's policy,
+    so a column has one dtype and one width across all granules and in
+    the single file of the same aggregate.
+
     Returns a manifest DataFrame (granule, path, n_records) — an action
     on it performs the export.
     """
@@ -1541,55 +1541,22 @@ def write_nc_granules(
         ).cast("long"),
     )
 
-    data_cols = [c for c in df.columns]
+    _, specs = _streamed_col_specs(work.select(*df.columns))
+    rec = index_col + "_rec"
+    dims, inner_dims = _spec_dims(specs, rec)
     os.makedirs(out_dir, exist_ok=True)
 
     def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
         idx = int(pdf["__granule_idx"].iloc[0])
         pdf = pdf.sort_values(index_col).reset_index(drop=True)
-        variables: dict[str, tuple[list[str], np.ndarray]] = {}
-        dims: list[tuple[str, int]] = [(index_col + "_rec", 0)]
-        rec = index_col + "_rec"
-        for name in data_cols:
-            col = pdf[name]
-            first = next((v for v in col if v is not None), None)
-            if isinstance(first, (list, np.ndarray)):
-                # width = MAX row length (not the first row's): short
-                # rows pad with NaN, so ragged inputs cannot crash the
-                # export task with an inhomogeneous-shape error
-                inner = max(
-                    (len(v) for v in col if v is not None), default=1
-                )
-                dims.append((f"{name}_dim1", inner))
-                fill = [np.nan] * inner
-                mat = np.array(
-                    [
-                        list(v) + [np.nan] * (inner - len(v))
-                        if v is not None
-                        else fill
-                        for v in col
-                    ],
-                    dtype="float64",
-                )
-                variables[name] = ([rec, f"{name}_dim1"], mat)
-            elif col.dtype == object and isinstance(first, str):
-                width = max(
-                    (len(s.encode("utf-8")) for s in col if s is not None),
-                    default=1,
-                )
-                dims.append((f"{name}_str_len", max(width, 1)))
-                mat = np.zeros((len(col), max(width, 1)), dtype="S1")
-                for i, s in enumerate(col):
-                    b = (s or "").encode("utf-8")[: max(width, 1)]
-                    mat[i, : len(b)] = [bytes([ch]) for ch in b]
-                variables[name] = ([rec, f"{name}_str_len"], mat)
-            elif str(col.dtype) == "bool":
-                variables[name] = ([rec], col.to_numpy().astype("int8"))
-            else:
-                arr = col.to_numpy()
-                if arr.dtype == object:
-                    arr = col.astype("float64").to_numpy()
-                variables[name] = ([rec], arr)
+        n = len(pdf)
+        variables = {
+            name: (
+                [rec] + [d for d, _ in inner_dims[name]],
+                _fill_chunk_block(pdf[name], n, kind, np.dtype(dt), width, n),
+            )
+            for name, kind, dt, width in specs
+        }
         if fmt == "netcdf4":
             from ncagg_spark.sources.hdf5_writer import write_hdf5
 

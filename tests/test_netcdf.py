@@ -346,6 +346,43 @@ def test_write_nc_granules_distributed_export(spark, tmp_path):
     assert a["variables"]["time"]["units"].startswith("seconds since")
 
 
+def test_granule_and_single_file_exports_share_dtypes(spark, tmp_path):
+    """One dtype policy for both exports of one aggregate: a full int64
+    array column stays int64 in every per-granule file, as in the single
+    file, and a scalar int column with a NULL in only one granule is
+    float64 in all of them."""
+    from ncagg_spark.sources.nc_granules import (
+        write_nc_aggregate_streamed,
+        write_nc_granules,
+    )
+
+    us0 = int(T0 * 1e6)
+    rows = [
+        (us0 + d * 86_400_000_000 + i * 1_000_000, [i, 2 * i, 3 * i],
+         None if (d, i) == (1, 2) else i)
+        for d in range(2)
+        for i in range(4)
+    ]
+    df = spark.createDataFrame(
+        rows, "us long, counts array<long>, n long"
+    ).select(F.timestamp_micros("us").alias("time"), "counts", "n")
+    single = str(tmp_path / "day.nc")
+    write_nc_aggregate_streamed(df, single, index_col="time")
+    man = write_nc_granules(
+        df, str(tmp_path / "granules"), index_col="time"
+    ).collect()
+    assert len(man) == 2
+    files = [read_netcdf3(single)] + [read_netcdf3(m["path"]) for m in man]
+    for f in files:  # classic files are big-endian
+        assert f.data["counts"].dtype.newbyteorder("=") == np.int64
+        assert f.data["counts"].shape[1:] == (3,)
+        assert f.data["n"].dtype.newbyteorder("=") == np.float64
+    per_granule = np.concatenate([f.data["counts"] for f in files[1:]])
+    np.testing.assert_array_equal(
+        np.sort(per_granule, axis=0), np.sort(files[0].data["counts"], axis=0)
+    )
+
+
 # ---------------------------------------------------------------------------
 # ADVICE r4 pins: version selection must honor ATTRIBUTE types too
 # ---------------------------------------------------------------------------

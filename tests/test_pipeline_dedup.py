@@ -95,6 +95,76 @@ def test_simhash_near_duplicates(docs):
     assert not any(5 in p for p in pairs)
 
 
+def test_simhash_capped_keeps_every_pair_within_the_cap(spark):
+    """``max_block_bucket`` drops every (combination, key) bucket larger
+    than the cap. A boilerplate cluster of 12 signatures shares blocks
+    0-4 (bits 0-19), so combination (0, 1, 2, 3, 4) holds one 12-member
+    bucket, which the cap of 4 drops: a pair whose only clean
+    combination is that one (one differing bit in each of blocks 5, 6
+    and 7) is lost, while a pair that also meets in a bucket within the
+    cap is kept. The capped pairs are exactly those of a quadratic scan
+    over the buckets within the cap, each emitted once, and every one is
+    an uncapped pair with the same distance."""
+    import random
+    from collections import defaultdict
+    from itertools import combinations
+
+    block_bits, max_hamming, cap = 4, 3, 4
+    rng = random.Random(887)
+    base = rng.getrandbits(32)
+    cluster = [
+        base,
+        base ^ (1 << 20),  # d=1 (block 5): also meets in small buckets
+        base ^ (1 << 20) ^ (1 << 24) ^ (1 << 28),  # d=3, blocks 5-7: lost
+    ]
+    while len(cluster) < 12:  # filler: differs from base in blocks 5-7
+        hi = [rng.randrange(16) for _ in range(3)]
+        if all(h != (base >> (20 + 4 * i)) & 0xF for i, h in enumerate(hi)):
+            cluster.append(
+                (base & 0xFFFFF) | hi[0] << 20 | hi[1] << 24 | hi[2] << 28
+            )
+    other = rng.getrandbits(32)
+    sigs = cluster + [other, other ^ 0b101] + [
+        rng.getrandbits(32) for _ in range(40)
+    ]
+    rows = list(enumerate(sigs))
+    df = spark.createDataFrame(rows, "doc_id long, simhash long")
+
+    def blocks(sig):
+        return [(sig >> (i * block_bits)) & 0xF for i in range(8)]
+
+    buckets = defaultdict(list)
+    for doc, sig in rows:
+        b = blocks(sig)
+        for cid, combo in enumerate(combinations(range(8), 8 - max_hamming)):
+            buckets[(cid, tuple(b[i] for i in combo))].append(doc)
+    assert max(len(m) for m in buckets.values()) > cap  # truncation is live
+    within = {
+        (a, b)
+        for m in buckets.values()
+        if 2 <= len(m) <= cap
+        for a, b in combinations(sorted(m), 2)
+        if bin(sigs[a] ^ sigs[b]).count("1") <= max_hamming
+    }
+
+    capped = [
+        (r["id_a"], r["id_b"], r["hamming"])
+        for r in simhash_near_duplicates(
+            df, max_hamming=max_hamming, max_block_bucket=cap
+        ).collect()
+    ]
+    uncapped = {
+        (r["id_a"], r["id_b"]): r["hamming"]
+        for r in simhash_near_duplicates(df, max_hamming=max_hamming).collect()
+    }
+    pairs = [(a, b) for a, b, _ in capped]
+    assert len(pairs) == len(set(pairs))  # each pair emitted once
+    assert set(pairs) == within
+    assert all(uncapped.get((a, b)) == h for a, b, h in capped)
+    assert (0, 1) in within and (0, 2) in uncapped and (0, 2) not in within
+    assert (12, 13) in within
+
+
 def test_empty_corpus(spark):
     empty = spark.createDataFrame([], "doc_id long, text string")
     assert exact_duplicates(empty).count() == 0

@@ -3,8 +3,9 @@ SCALE.md must be visible in the plans, not just asserted in prose.
 
 - no row-at-a-time Python (BatchEvalPython) anywhere — Python only via
   Arrow (mapInPandas) in the multimodal path;
-- no cartesian/nested-loop joins except the two intentional
-  broadcast-query-side scans (brute-force ANN, exact near-dup baseline);
+- no cartesian/nested-loop joins except the declared bounded ones
+  (``CROSS_OK``: the exact near-dup baseline, the PQ ADC join and the
+  one-row broadcast aggregates);
 - column pruning reaches the lineitem scan in q1 (ReadSchema subset);
 - the events time predicate is pushed to the scan in the flagship.
 """
@@ -22,12 +23,13 @@ import __spark_entry__ as entry_mod
 SF = "/root/testdata/sf0.001"
 
 # crossJoin against a broadcast handful of query vectors is the intended
-# physical shape for the exact baselines only:
-# the two exact ANN baselines + the PQ ADC scoring join (broadcast NL
-# against the 10-row query side — bounded by construction)
+# physical shape for the exact near-dup baseline and the PQ ADC scoring
+# join only (broadcast NL against the 10-row query side — bounded by
+# construction); the exact brute force scores through the grouped
+# exact scorer and has no cross join.
 # declared-bounded cross/NL joins:
-#   emb_brute_topk / emb_near_dup / emb_pq_topk — exact ANN baselines,
-#     broadcast NL against the <=O(100)-row query side;
+#   emb_near_dup / emb_pq_topk — broadcast NL against the <=O(100)-row
+#     query side;
 #   agg_regularize_anchored — gap_fill(anchor="previous") broadcasts the
 #     ONE-ROW first-real-record aggregate onto the grid (the backward
 #     leading-fill anchor, r7); a 1-row broadcast side by construction.
@@ -42,7 +44,6 @@ SF = "/root/testdata/sf0.001"
 #     replaced the eager .first() so the manifest stays lazy); 1-row
 #     broadcast side by construction.
 CROSS_OK = {
-    "emb_brute_topk",
     "emb_near_dup",
     "emb_pq_topk",
     "agg_regularize_anchored",
@@ -101,40 +102,43 @@ def test_flagship_pushes_time_range(plans):
 
 # Physical operator sequence of every emb_* query at sf0.001, in the
 # numbered order of ``explain("formatted")``. The ANN methods share one
-# cosine, rerank and per-query rank tail (pipeline/topk.py); these pins
-# show that sharing it leaves every plan unchanged.
+# exact scorer and per-query rank tail (pipeline/topk.py): every exact
+# search unions its queries and candidates, shuffles them by the
+# candidate key into one FlatMapGroupsInPandas, then ranks in Spark.
 EMB_PLAN_FINGERPRINTS = {
     "emb_brute_topk": (
-        "Scan parquet, Filter, Project, BroadcastExchange, "
-        "Scan parquet, Filter, Project, BroadcastNestedLoopJoin, "
-        "Project, Sort, WindowGroupLimit, Exchange, Sort, "
-        "WindowGroupLimit, Window, Filter, Project, "
+        "Scan parquet, Filter, Generate, Project, Scan parquet, "
+        "Filter, Project, Union, Project, Exchange, Sort, "
+        "FlatMapGroupsInPandas, Project, Sort, WindowGroupLimit, "
+        "Exchange, Sort, WindowGroupLimit, Window, Filter, Project, "
         "AdaptiveSparkPlan"
     ),
     "emb_ivf_kmeans_topk": (
-        "Scan parquet, Filter, Generate, Project, BroadcastExchange, "
-        "Scan parquet, Filter, Project, BroadcastHashJoin, Project, "
-        "Sort, WindowGroupLimit, Exchange, Sort, WindowGroupLimit, "
-        "Window, Filter, Project, AdaptiveSparkPlan"
+        "Scan parquet, Filter, ArrowEvalPython, Generate, Filter, "
+        "Project, Scan parquet, Filter, Project, Union, Project, "
+        "Exchange, Sort, FlatMapGroupsInPandas, Project, Sort, "
+        "WindowGroupLimit, Exchange, Sort, WindowGroupLimit, Window, "
+        "Filter, Project, AdaptiveSparkPlan"
     ),
     "emb_ivf_topk": (
         "Scan parquet, Filter, ArrowEvalPython, Generate, Filter, "
-        "Project, BroadcastExchange, Scan parquet, Filter, "
-        "ArrowEvalPython, Filter, Project, ArrowEvalPython, Project, "
-        "BroadcastHashJoin, Project, Sort, WindowGroupLimit, "
+        "Project, Scan parquet, Filter, ArrowEvalPython, Filter, "
+        "Project, ArrowEvalPython, Project, Union, Project, Exchange, "
+        "Sort, FlatMapGroupsInPandas, Project, Sort, WindowGroupLimit, "
         "Exchange, Sort, WindowGroupLimit, Window, Filter, Project, "
         "AdaptiveSparkPlan"
     ),
     "emb_ivfpq_topk": (
-        "Scan parquet, Filter, Project, Scan parquet, Filter, "
-        "ArrowEvalPython, Filter, Project, Project, Exchange, "
-        "ArrowEvalPython, Project, Scan parquet, Filter, "
-        "ArrowEvalPython, Generate, Filter, Project, "
+        "Scan parquet, Filter, Project, Scan parquet, Filter, Project, "
+        "Scan parquet, Filter, ArrowEvalPython, Filter, Project, "
+        "Project, Exchange, ArrowEvalPython, Project, Scan parquet, "
+        "Filter, ArrowEvalPython, Generate, Filter, Project, "
         "BroadcastExchange, BroadcastHashJoin, Project, Sort, "
         "WindowGroupLimit, Exchange, Sort, WindowGroupLimit, Window, "
         "Filter, Project, BroadcastExchange, BroadcastHashJoin, "
-        "Project, Sort, WindowGroupLimit, Exchange, Sort, "
-        "WindowGroupLimit, Window, Filter, Project, "
+        "Project, Union, Project, Exchange, Sort, "
+        "FlatMapGroupsInPandas, Project, Sort, WindowGroupLimit, "
+        "Exchange, Sort, WindowGroupLimit, Window, Filter, Project, "
         "AdaptiveSparkPlan"
     ),
     "emb_near_dup": (
@@ -143,14 +147,15 @@ EMB_PLAN_FINGERPRINTS = {
         "Project, AdaptiveSparkPlan"
     ),
     "emb_pq_topk": (
-        "Scan parquet, Filter, Project, Scan parquet, Filter, "
-        "Project, Exchange, Project, Scan parquet, Filter, Project, "
-        "BroadcastExchange, BroadcastNestedLoopJoin, Project, Sort, "
-        "WindowGroupLimit, Exchange, Sort, WindowGroupLimit, Window, "
-        "Filter, Project, BroadcastExchange, BroadcastHashJoin, "
-        "Project, Sort, WindowGroupLimit, Exchange, Sort, "
-        "WindowGroupLimit, Window, Filter, Project, "
-        "AdaptiveSparkPlan"
+        "Scan parquet, Filter, Project, Scan parquet, Filter, Project, "
+        "Scan parquet, Filter, Project, Exchange, Project, "
+        "Scan parquet, Filter, Project, BroadcastExchange, "
+        "BroadcastNestedLoopJoin, Project, Sort, WindowGroupLimit, "
+        "Exchange, Sort, WindowGroupLimit, Window, Filter, Project, "
+        "BroadcastExchange, BroadcastHashJoin, Project, Union, "
+        "Project, Exchange, Sort, FlatMapGroupsInPandas, Project, "
+        "Sort, WindowGroupLimit, Exchange, Sort, WindowGroupLimit, "
+        "Window, Filter, Project, AdaptiveSparkPlan"
     ),
     "emb_semdedup": (
         "Scan parquet, Filter, LocalTableScan, BroadcastExchange, "
@@ -161,8 +166,8 @@ EMB_PLAN_FINGERPRINTS = {
     ),
     "emb_srp_topk": (
         "Scan parquet, Filter, Generate, Filter, Project, "
-        "BroadcastExchange, Scan parquet, Filter, Project, "
-        "BroadcastHashJoin, Project, Sort, WindowGroupLimit, "
+        "Scan parquet, Filter, Project, Union, Project, Exchange, "
+        "Sort, FlatMapGroupsInPandas, Project, Sort, WindowGroupLimit, "
         "Exchange, Sort, WindowGroupLimit, Window, Filter, Project, "
         "AdaptiveSparkPlan"
     ),
@@ -215,8 +220,11 @@ def test_sf1_final_plan_shapes_of_top5_expensive_queries(spark):
       * rel_q5_nation_volume — 1 shuffle + all 4 dimension joins still
                              BROADCAST (at sf10 too, PLANS_sf1.md);
       * doc_minhash_sig    — 1 shuffle (explode-heavy but linear);
-      * emb_brute_topk     — 1 shuffle + the bounded broadcast side;
-      * emb_pq_topk        — 2 shuffles / 2 broadcasts (ADC + rerank).
+      * emb_brute_topk     — 2 shuffles, no broadcast (the scorer's
+                             grouping, then the rank);
+      * emb_pq_topk        — 4 shuffles / 2 broadcasts (the encode
+                             spread and the ADC rank, then the rerank's
+                             grouping and rank).
 
     Full-registry audit: PLANS_sf1.md (`tools/audit_plans.py --scale`) —
     sf1.0 final == sf0.001 static for all 69 queries; at sf10 AQE flips
@@ -229,8 +237,8 @@ def test_sf1_final_plan_shapes_of_top5_expensive_queries(spark):
         "doc_lsh_pairs": {"shuffles": 3, "cartesian": False},
         "rel_q5_nation_volume": {"shuffles": 1, "bcast": 4},
         "doc_minhash_sig": {"shuffles": 1},
-        "emb_brute_topk": {"shuffles": 1, "bcast": 1},
-        "emb_pq_topk": {"shuffles": 2, "bcast": 2},
+        "emb_brute_topk": {"shuffles": 2, "bcast": 0},
+        "emb_pq_topk": {"shuffles": 4, "bcast": 2},
     }
     for name, exp in expect.items():
         facts = plan_facts(qs[name](spark, SF1))

@@ -161,7 +161,6 @@ def test_cc_driver_gate_stages_take_coalesced_width(spark):
     # the driver-gate path persists the shuffled edge list; its cached
     # plan must coalesce like an executed one, so no stage runs at the
     # session's 512-wide initialPartitionNum ceiling
-    from ncagg_spark.pipeline.similarity import _job_group
     from tools.check_oracle import job_group_stats
 
     sc = spark.sparkContext
@@ -172,13 +171,16 @@ def test_cc_driver_gate_stages_take_coalesced_width(spark):
         [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
     ).coalesce(2)
     group = "test_cc_driver_gate_width"
-    with _job_group(sc, group, "cc driver gate width"):
+    sc.setJobGroup(group, "cc driver gate width")
+    try:
         got = {
             r["node"]: r["cluster_id"]
             for r in connected_components(
                 pairs, num_partitions=None
             ).collect()
         }
+    finally:
+        sc._jsc.clearJobGroup()
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
     jobs, _tasks, widest = job_group_stats(sc, group)
     assert jobs > 0

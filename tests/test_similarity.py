@@ -226,8 +226,8 @@ def test_kmeans_one_spark_job_per_iteration(spark, tmp_path):
     no shuffle/AQE stage-jobs. Input is a parquet scan — the production
     shape (an input plan carrying its own shuffle would add ITS
     materialization job to the first iteration, which is not the
-    loop's doing). Job count checked via the per-iteration job group
-    the loop sets."""
+    loop's doing). Job count checked via the per-iteration job tag
+    the loop adds, read from the status store's ``jobTags``."""
     from ncagg_spark.pipeline.similarity import kmeans_centroids
 
     rng = random.Random(5)
@@ -245,20 +245,63 @@ def test_kmeans_one_spark_job_per_iteration(spark, tmp_path):
     )
     from ncagg_spark.pipeline import similarity as simmod
 
-    prefix = simmod._LAST_KMEANS_JOB_GROUP_PREFIX
-    tracker = spark.sparkContext.statusTracker()
+    prefix = simmod._LAST_KMEANS_JOB_TAG_PREFIX
+    per_tag = _jobs_per_tag(spark.sparkContext, f"{prefix}_iter_")
     for it in range(3):
-        ids = tracker.getJobIdsForGroup(f"{prefix}_iter_{it}")
-        assert len(ids) == 1, (
-            f"iteration {it} ran {len(ids)} Spark jobs, expected 1"
-        )
+        n = per_tag.get(f"{prefix}_iter_{it}", 0)
+        assert n == 1, f"iteration {it} ran {n} Spark jobs, expected 1"
+    assert len(per_tag) == 3, per_tag
+
+
+def _jobs_per_tag(sc, prefix: str) -> dict[str, int]:
+    """Jobs per job tag starting with ``prefix``, from the status
+    store's ``jobTags``."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    counts: dict[str, int] = {}
+    for i in range(jobs.size()):
+        tags = jobs.apply(i).jobTags()
+        for j in range(tags.size()):
+            tag = tags.apply(j)
+            if tag.startswith(prefix):
+                counts[tag] = counts.get(tag, 0) + 1
+    return counts
+
+
+def test_kmeans_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """The per-iteration labels are job tags, which add to the caller's
+    job group instead of replacing it: a caller's group (a tracer's
+    span, a ``cancelJobGroup``) holds every kmeans job — the init
+    sample's and one per Lloyd iteration."""
+    from ncagg_spark.pipeline.similarity import kmeans_centroids
+
+    rng = random.Random(7)
+    rows = [
+        (i, [rng.gauss(0.0, 1.0) for _ in range(DIM)]) for i in range(N)
+    ]
+    src = str(tmp_path / "emb")
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"
+    ).repartition(4).write.parquet(src)
+    df = spark.read.parquet(src)
+    sc = spark.sparkContext
+    group, max_iter = "kmeans_caller_group", 3
+    sc.setJobGroup(group, "kmeans caller")
+    try:
+        kmeans_centroids(df, 4, max_iter=max_iter, tol=0.0, init="mult")
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n == max_iter + 1, n
 
 
 def test_kmeans_restores_callers_job_group(spark):
-    """kmeans_centroids labels each Lloyd iteration with its own job
-    group, then must hand the caller's group, description and
-    interrupt flag back: the caller's later jobs stay in its group (so
-    its cancelJobGroup still reaches them) and keep its label."""
+    """kmeans_centroids labels each Lloyd iteration with a job tag and
+    must leave the caller's group, description and interrupt flag as
+    they were: the caller's later jobs stay in its group (so its
+    cancelJobGroup still reaches them) and keep its label."""
     from ncagg_spark.pipeline.similarity import kmeans_centroids
 
     rng = random.Random(9)

@@ -100,6 +100,43 @@ def test_bm25_topk_plan_is_bounded(spark):
     assert "bm25-topk" in plans
     plan = _plan(plans["bm25-topk"])
     _assert_bounded_windows(plan)
+    # the single-scan plan: documents are read and tokenized once into a
+    # cache, which every later branch reads back
+    final = plan.split("== Initial Plan ==")[0]
+    assert _documents_scans(final) == 1, final
+    assert final.count("InMemoryTableScan") >= 2, final
+
+
+def _documents_scans(plan: str) -> int:
+    """Parquet scans of ``documents`` in a physical plan string: every
+    scan outside a cached relation, plus one per distinct cached
+    relation that scans it (a cache is printed under each of its
+    ``InMemoryRelation`` reads, but its scan runs once)."""
+    import re
+
+    def col(line: str) -> int:
+        return len(line) - len(re.sub(r"^[\s:|+-]*", "", line))
+
+    def is_scan(line: str) -> bool:
+        return "FileScan parquet" in line and "documents" in line
+
+    lines = plan.splitlines()
+    outside, cached = 0, set()
+    i = 0
+    while i < len(lines):
+        line = lines[i]
+        if "InMemoryRelation" in line:
+            c, j = col(line), i + 1
+            while j < len(lines) and col(lines[j]) > c:
+                j += 1
+            sub = [ln[col(ln):] for ln in lines[i + 1 : j]]
+            if any(is_scan(ln) for ln in sub):
+                cached.add("\n".join(sub))
+            i = j
+            continue
+        outside += is_scan(line)
+        i += 1
+    return outside + len(cached)
 
 
 def test_dsir_sample_plan_is_bounded(spark):
@@ -173,3 +210,232 @@ def test_one_tie_rule_spark_rank_and_numpy_truncation(spark, ascending):
         numpy_order = nids[_topk_ties_by_id(key[:, q], nids, k)].tolist()
         assert spark_order == numpy_order
         assert ni[qi == q].tolist() == numpy_order
+
+
+# ---------------------------------------------------------------------------
+# The one exact scorer (exact_cosine_topk): numpy blocks per candidate
+# group in the SQL fold's summation order must return the rows of the
+# per-pair Catalyst fold it replaced, cosines bit-equal.
+# ---------------------------------------------------------------------------
+
+
+def _fold_reference(q, c, key, k):
+    """The replaced per-pair path, kept as the spec: equi-join on the
+    candidate key, drop self-matches, score every pair with the SQL
+    fold (``cosine``), rank in Spark."""
+    from ncagg_spark.functions.vectors import l2_norm, norm_guard
+    from ncagg_spark.pipeline.topk import cosine, cosine_topk
+
+    pairs = q.withColumn("q_norm", norm_guard(l2_norm("q_vec"))).join(
+        c.withColumn("c_norm", norm_guard(l2_norm("c_vec"))), on=key
+    )
+    return cosine_topk(
+        pairs.filter(F.col("query_id") != F.col("neighbor_id")).withColumn(
+            "cosine", cosine("q_vec", "c_vec", "q_norm", "c_norm")
+        ),
+        k,
+    )
+
+
+def _with_cosine(target: float) -> list[float]:
+    """A 2-vector whose fold cosine with (1, 0) is exactly ``target``:
+    (a, b) near (target, sqrt(1 - target^2)), searched ulp by ulp."""
+    import math
+
+    for i in range(-16, 17):
+        a = target + i * math.ulp(target)
+        b0 = math.sqrt(1.0 - a * a)
+        for j in range(-16, 17):
+            b = b0 + j * math.ulp(b0)
+            if a / (1.0 * math.sqrt(0.0 + a * a + b * b)) == target:
+                return [a, b]
+    raise AssertionError(f"no 2-vector with cosine {target!r}")
+
+
+def _scorer_cases(as_str: bool):
+    """(queries, candidates) rows of every case the scorer must keep:
+    rounding boundaries, ties across k, self-matches, a short group, an
+    empty group, NULL vectors and elements, a length mismatch."""
+    ident = (lambda i: f"d{i:04d}") if as_str else (lambda i: i)
+    # cell 0: raw cosines one ulp either side of the 6-place boundary
+    # 0.5000005 (the lower one rounds down, the upper one up), with the
+    # ids running against the scores so the tie rule is exercised
+    mid = 0.5000005
+    near = [np.nextafter(mid, 0.0), mid, np.nextafter(mid, 1.0)]
+    near += [np.nextafter(near[0], 0.0), np.nextafter(near[-1], 1.0)]
+    cands = [
+        (ident(100 - i), _with_cosine(float(a)), 0)
+        for i, a in enumerate(near)
+    ]
+    cands += [(ident(50 + i), _with_cosine(0.4999995 + i * 1e-7), 0)
+              for i in range(4)]
+    # cell 1: six copies of one vector tied across k, a self-match, a
+    # NULL vector, a NULL element and a length mismatch
+    cands += [(ident(200 + i), [0.3, -0.7], 1) for i in range(6)]
+    cands += [(ident(1), [0.6, 0.8], 1), (ident(300), None, 1),
+              (ident(301), [0.5, None], 1), (ident(302), [0.1, 0.2, 0.3], 1)]
+    # cell 2: fewer candidates than k; cell 4: no queries probe it
+    cands += [(ident(400), [1.0, 1.0], 2), (ident(401), [2.0, -1.0], 2),
+              (ident(500), [1.0, 0.0], 4)]
+    queries = [
+        (ident(1), [1.0, 0.0], 0), (ident(1), [1.0, 0.0], 1),
+        (ident(2), [0.25, -0.5], 1), (ident(3), [0.2, None], 1),
+        (ident(4), None, 1), (ident(5), [1.0, 2.0, 3.0], 1),
+        (ident(6), [0.0, 1.0], 2),
+        # cell 3 holds no candidates at all
+        (ident(7), [1.0, 1.0], 3),
+    ]
+    return queries, cands
+
+
+@pytest.mark.parametrize("as_str", [False, True], ids=["long", "string"])
+@pytest.mark.parametrize("k", [1, 3, 8])
+def test_exact_scorer_matches_per_pair_fold(spark, as_str, k):
+    from ncagg_spark.pipeline.topk import exact_cosine_topk
+
+    t = "string" if as_str else "long"
+    queries, cands = _scorer_cases(as_str)
+    q = spark.createDataFrame(
+        queries, f"query_id {t}, q_vec array<double>, cell int"
+    )
+    c = spark.createDataFrame(
+        cands, f"neighbor_id {t}, c_vec array<double>, cell int"
+    )
+    got = sorted(exact_cosine_topk(q, c, "cell", k).collect(), key=repr)
+    want = sorted(_fold_reference(q, c, "cell", k).collect(), key=repr)
+    assert got == want
+    # the cases are live: boundary roundings on both sides, a NULL
+    # cosine that still takes a rank, and no self-match
+    cos = {(r["query_id"], r["neighbor_id"]): r["cosine"] for r in got}
+    one = (lambda i: f"d{i:04d}") if as_str else (lambda i: i)
+    if k == 8:
+        q1 = {v for (qid, _), v in cos.items() if qid == one(1)}
+        assert {0.5, 0.500001} <= q1
+        assert any(v is None for v in cos.values())
+        assert cos[(one(6), one(400))] is not None  # short group, all kept
+    assert (one(1), one(1)) not in cos
+    assert all(r["query_id"] != one(7) for r in got)
+
+
+def test_exact_scorer_matches_fold_on_random_groups(spark):
+    """Random 8-d vectors with replicas (exact ties) over 3 groups,
+    scored through both paths at several k."""
+    from ncagg_spark.pipeline.topk import exact_cosine_topk
+
+    rng = np.random.default_rng(11)
+    base = rng.normal(size=(60, 8)).astype("float32")
+    vecs = np.vstack([base, base[:10]])  # 10 exact replicas
+    cands = [
+        (i, [float(x) for x in v], int(i % 3)) for i, v in enumerate(vecs)
+    ]
+    queries = [(i, cands[i][1], cands[i][2]) for i in range(0, 70, 7)]
+    q = spark.createDataFrame(
+        queries, "query_id long, q_vec array<float>, cell int"
+    )
+    c = spark.createDataFrame(
+        cands, "neighbor_id long, c_vec array<float>, cell int"
+    )
+    for k in (1, 4, 30):
+        got = sorted(map(tuple, exact_cosine_topk(q, c, "cell", k).collect()))
+        want = sorted(map(tuple, _fold_reference(q, c, "cell", k).collect()))
+        assert got == want, k
+
+
+def test_fold_dots_bit_equal_to_spark_fold(spark):
+    """The raw (unrounded) cosine of the numpy fold equals Spark's
+    ``dot(q, c) / (q_norm * c_norm)`` bit for bit on 64-d float vectors,
+    where any reassociation of the sum (BLAS) shows in the last ulps."""
+    from ncagg_spark.functions.vectors import dot, l2_norm, norm_guard
+    from ncagg_spark.pipeline.topk import _fold_dots, _fold_norms
+
+    rng = np.random.default_rng(17)
+    Q = rng.normal(size=(6, 64)).astype("float32")
+    C = rng.normal(size=(40, 64)).astype("float32")
+    q = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(Q)], "qi int, q array<float>"
+    )
+    c = spark.createDataFrame(
+        [(j, v.tolist()) for j, v in enumerate(C)], "cj int, c array<float>"
+    )
+    raw = (
+        q.crossJoin(c)
+        .select(
+            "qi", "cj",
+            (
+                dot("q", "c")
+                / (norm_guard(l2_norm("q")) * norm_guard(l2_norm("c")))
+            ).alias("s"),
+        )
+        .collect()
+    )
+    want = np.empty((len(Q), len(C)))
+    for r in raw:
+        want[r["qi"], r["cj"]] = r["s"]
+    Q64, C64 = Q.astype("float64"), C.astype("float64")
+    got = _fold_dots(Q64, C64) / (
+        _fold_norms(Q64)[:, None] * _fold_norms(C64)[None, :]
+    )
+    assert np.array_equal(got, want)
+    # the order matters at this width: a pairwise (reassociated) sum
+    # differs in the last ulps
+    pairwise = np.einsum("ij,kj->ik", Q64, C64)
+    assert not np.array_equal(pairwise, _fold_dots(Q64, C64))
+
+
+def test_score_group_blocks_do_not_change_the_rows(monkeypatch):
+    """The left side is scored in bounded row blocks; a one-row block
+    must keep exactly the rows of one dense block."""
+    import pandas as pd
+
+    from ncagg_spark.pipeline import topk
+
+    rng = np.random.default_rng(3)
+    cvecs = np.vstack([rng.normal(size=(20, 5))] * 2)
+    pdf = pd.DataFrame(
+        {
+            "__q": [True] * 7 + [False] * 40,
+            "__id": np.concatenate([np.arange(7), np.arange(40)]),
+            "__vec": list(rng.normal(size=(7, 5))) + list(cvecs),
+        }
+    )
+    dense = topk._score_group(pdf, 3)
+    monkeypatch.setattr(topk, "_BLOCK_PAIRS", 1)
+    blocked = topk._score_group(pdf, 3)
+    pd.testing.assert_frame_equal(dense, blocked)
+    # replicas tie in pairs; the near-k margin keeps both of each tie
+    assert len(dense) >= 7 * 3
+
+
+def test_float_probe_matches_sql_probe(spark):
+    """The IVF float probe (a pandas UDF) against the SQL probe it
+    replaced: the same cells in the same order, for tied centroids and
+    for vectors whose dots are NULL."""
+    from ncagg_spark.functions.vectors import dot_const_sql
+    from ncagg_spark.pipeline.similarity import _unit_scale, float_probe_col
+
+    rng = np.random.default_rng(5)
+    cent_vecs = rng.normal(size=(6, 4)).tolist()
+    cent_vecs[4] = list(cent_vecs[1])  # identical centroids: a tie
+    cents = [(10 - i, v) for i, v in enumerate(cent_vecs)]
+    rows = [(i, [float(x) for x in v]) for i, v in
+            enumerate(rng.normal(size=(30, 4)))]
+    rows += [(30, None), (31, [1.0, None, 0.0, 0.0]), (32, [1.0, 2.0]),
+             (33, [float(x) for x in cent_vecs[1]])]
+    df = spark.createDataFrame(rows, "id long, v array<double>")
+    entries = ",".join(
+        f"named_struct('s', {dot_const_sql('v', _unit_scale(vec))},"
+        f" 'c', CAST({int(cell)} AS INT))"
+        for cell, vec in cents
+    )
+    sql_probe = F.expr(
+        f"transform(slice(array_sort(array({entries}), (a, b) -> "
+        "CASE WHEN a.s > b.s THEN -1 WHEN a.s < b.s THEN 1 ELSE 0 END), "
+        "1, 3), p -> p.c)"
+    )
+    out = df.select(
+        "id", float_probe_col(cents, 3, "v").alias("udf"),
+        sql_probe.alias("sql"),
+    ).collect()
+    assert len(out) == len(rows)
+    for r in out:
+        assert list(r["udf"]) == list(r["sql"]), r["id"]
