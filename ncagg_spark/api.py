@@ -435,7 +435,6 @@ def aggregate_multi(
     files: str | Sequence[str],
     grains: dict[str, GrainSpec],
     *,
-    share_scan: bool = False,
     max_records_per_file: int | None = None,
     num_files: int | None = None,
 ) -> dict[str, DataFrame]:
@@ -447,49 +446,25 @@ def aggregate_multi(
     Spark-first "single pass" is about bytes, not job count: each grain's
     write is its own action, but Catalyst column-pruning means grain G's
     scan reads only G's columns, so the N actions together read ≈ one
-    full-width pass of the file set. ``share_scan=True`` additionally
-    persists the union-projected source (MEMORY_AND_DISK) so columns
-    shared by several grains are decoded once — worth it when grains
-    overlap on heavy columns or the source is remote; at very large
-    scale prefer the default and let pruning do the work.
+    full-width pass of the file set.
 
     Returns {grain name -> scan of the rows written to that grain's
-    output}, as ``aggregate`` does. The scans do not depend on the
-    ``share_scan`` persist, so they stay usable after it is released.
+    output}, as ``aggregate`` does.
     """
     src = read_granules(spark, files)
-    if share_scan:
-        needed: set[str] = set()
-        for g in grains.values():
-            needed |= set(g.columns or src.columns)
-            needed.add(g.config.index_by)
-            # alternate source names (P3): a grain whose index/vars only
-            # materialize via copy_from_alt must keep those source
-            # columns in the shared projection, or coalesce_alternates
-            # finds nothing downstream
-            for alts in g.config.copy_from_alt.values():
-                needed |= set(alts)
-        needed &= set(src.columns)
-        needed.add(GRANULE_COL)
-        src = src.select(*sorted(needed)).persist()
-    try:
-        results: dict[str, DataFrame] = {}
-        for name, g in grains.items():
-            out = _aggregate_df(
-                spark,
-                src,
-                g.output,
-                g.config,
-                anchor=g.anchor,
-                columns=g.columns,
-                max_records_per_file=max_records_per_file,
-                num_files=num_files,
-            )
-            results[name] = out
-        return results
-    finally:
-        if share_scan:
-            src.unpersist()
+    return {
+        name: _aggregate_df(
+            spark,
+            src,
+            g.output,
+            g.config,
+            anchor=g.anchor,
+            columns=g.columns,
+            max_records_per_file=max_records_per_file,
+            num_files=num_files,
+        )
+        for name, g in grains.items()
+    }
 
 
 # ---------------------------------------------------------------------------

@@ -107,7 +107,8 @@ def build_parser() -> argparse.ArgumentParser:
         "-u", "--grain", action="append", metavar="INDEX[:HZ]",
         help="aggregate along this grain (repeatable; the reference's "
         "-u udim:ivar[:hz]). With N grains, one run writes "
-        "DST/<index>/ per grain off a shared scan",
+        "DST/<index>/ per grain; each grain's scan reads only its "
+        "own columns",
     )
     p.add_argument(
         "-b", "--bounds",

@@ -40,24 +40,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ncagg_spark import tuning
 from ncagg_spark.functions.time import epoch_us
 from ncagg_spark.operators.dedup import BUCKET_COL
 
 FILL_FLAG_COL = "is_fill"
-
-# gap_fill(anchor="previous") materializes its (deduped, O(n_buckets))
-# input once instead of letting the three consumers re-derive it — but
-# only when the optimizer's size estimate for the input subtree says the
-# re-derivations are expensive (tuning.plan_bytes gate, shared with
-# pipeline/packing.py; default 128 MiB — see tuning.MATERIALIZE_MIN_BYTES).
-from ncagg_spark.tuning import materialize_min_bytes, plan_bytes
-
-
-def _materialize_min_bytes() -> int:
-    return materialize_min_bytes("NCAGG_GAPFILL_MATERIALIZE_MIN_BYTES")
-
-
-_plan_bytes = plan_bytes
 
 
 def gap_fill(
@@ -77,12 +64,18 @@ def gap_fill(
     """Left-join deduped data onto the full slot grid; emit fill rows for
     empty slots. Returns one row per slot in [0, n_buckets), with
     ``is_fill`` marking synthesized rows.
+
+    ``anchor="previous"`` reads ``df`` three times. When the optimizer
+    estimates ``df``'s plan (``tuning.plan_bytes``) at
+    ``tuning.MATERIALIZE_MIN_BYTES`` or more, ``df`` is checkpointed
+    once, eagerly, and all three consumers read the checkpoint; below
+    the threshold, or when the estimate fails, the plan stays lazy.
     """
     if anchor not in ("grid", "previous"):
         raise ValueError(f"unknown anchor mode: {anchor}")
 
-    est = _plan_bytes(df) if anchor == "previous" else None
-    if est is not None and est >= _materialize_min_bytes():
+    est = tuning.plan_bytes(df) if anchor == "previous" else None
+    if est is not None and est >= tuning.MATERIALIZE_MIN_BYTES:
         # The "previous" mode consumes ``df`` THREE times (the grid
         # join, the per-block last-real aggregate, the first-real
         # aggregate) and Catalyst shares nothing across the branches:

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ncagg_spark.functions.time import epoch_us
 
@@ -80,7 +81,6 @@ def sessionize_two_phase(
     n_chunks: int = 32,
     tiebreak: list[str] | None = None,
     bounds: tuple[int, int] | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """``sessionize`` with the hot-key straggler removed (VERDICT r10
     #3): identical output, but no single task ever holds one key's full
@@ -118,17 +118,13 @@ def sessionize_two_phase(
     ``bounds=(lo_us, hi_us)`` skips the min/max pre-pass when the
     caller already knows the time range (e.g. a day partition).
 
-    ``cache=True`` (default) persists phase 1 (MEMORY_AND_DISK): the
-    correction branch and the main branch both consume it, so without a
-    cache the scan+window subtree evaluates TWICE (measured: the
-    double-compute erased the straggler win at 10M rows). The cache is
-    events-sized; pass ``cache=False`` where that cannot fit even on
-    disk — the operator stays correct and still removes the straggler,
-    paying 2x (balanced) compute instead, which at a truly hot key is
-    still far cheaper than one task owning 33% of the rows. Callers may
-    ``.unpersist()`` the returned DataFrame's cached ancestor via
-    ``df.sparkSession.catalog.clearCache()`` or let LRU eviction handle
-    it.
+    Phase 1 is persisted (MEMORY_AND_DISK): the correction branch and
+    the main branch both consume it, so without a cache the scan+window
+    subtree evaluates TWICE (measured: the double-compute erased the
+    straggler win at 10M rows). The cache is events-sized and outlives
+    this call, because the returned plan is lazy and reads it. Callers
+    may release it with ``df.sparkSession.catalog.clearCache()`` or let
+    LRU eviction handle it.
     """
     eus = epoch_us(ts_col)
     if bounds is not None:
@@ -151,10 +147,8 @@ def sessionize_two_phase(
         "__local_idx",
         F.sum(is_new).over(w.rowsBetween(Window.unboundedPreceding, 0)),
     )
-    if cache:
-        from pyspark import StorageLevel
-
-        local = local.persist(StorageLevel.MEMORY_AND_DISK)
+    # the cache outlives this call: the returned lazy plan reads it
+    local = local.persist(StorageLevel.MEMORY_AND_DISK)
 
     # per-(key, chunk) summaries: same hash partitioning as the window,
     # so Catalyst plans the groupBy with NO additional exchange

@@ -113,6 +113,8 @@ def clean_corpus(
     # checkpointed drop sets) has run, so repeated clean_corpus calls in
     # one session don't accumulate pinned storage; the final lazy plan
     # then recomputes the gate subtree exactly once at action time.
+    # Under keep_cached=True the cache outlives this call: the caller
+    # owns the returned handle.
     from ncagg_spark.pipeline.text import tokenize, word_ngrams
 
     kept = kept.withColumn(

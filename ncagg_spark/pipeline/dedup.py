@@ -25,8 +25,6 @@ than the cap, the standard trade-off in web-scale dedup).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -54,9 +52,7 @@ _CC_EDGES_PER_PARTITION = 64_000
 # after round 1: ~100M edge rows x 16 B is the point where heap-resident
 # caches start competing with the loop's own sorters/aggregates on
 # memory-per-core ratios like the 8 GiB local[32] gate (guide §5)
-_CC_HEAP_CACHE_MAX_EDGES = int(
-    os.environ.get("NCAGG_CC_HEAP_CACHE_MAX_EDGES", 100_000_000)
-)
+_CC_HEAP_CACHE_MAX_EDGES = 100_000_000
 
 # size-gated driver solve for connected components: when the MEASURED
 # symmetric edge list fits comfortably on the driver, one vectorized
@@ -67,15 +63,8 @@ _CC_HEAP_CACHE_MAX_EDGES = int(
 # spark.driver.maxResultSize (1g). The distributed loop remains the
 # path for every larger graph (the sf10 doc graph, ~124M edge rows,
 # stays on it — tools/verify_cc.py keeps checking that loop
-# independently at scale). Env-overridable for clusters with bigger or
-# smaller drivers.
+# independently at scale).
 _CC_DRIVER_MAX_EDGES = 4_000_000
-
-
-def _cc_driver_max_edges() -> int:
-    return int(
-        os.environ.get("NCAGG_CC_DRIVER_MAX_EDGES", _CC_DRIVER_MAX_EDGES)
-    )
 
 
 _INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
@@ -584,7 +573,7 @@ def connected_components(
     if num_partitions is None:
         raw = edges.persist()
         n_edges = raw.count()
-        if n_edges <= _cc_driver_max_edges() and all(
+        if n_edges <= _CC_DRIVER_MAX_EDGES and all(
             pairs.schema[c].dataType.simpleString() in _INTEGRAL_TYPES
             for c in (id_a, id_b)
         ):

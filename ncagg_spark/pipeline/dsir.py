@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ncagg_spark import tuning
 from ncagg_spark.functions.hashing import hash64, sql_hash64
 from ncagg_spark.pipeline.text import (
     sql_tokenize,
@@ -98,17 +99,6 @@ def hashed_ngram_logratios(
             F.sum(F.lit(1) - F.col("is_t")).alias("r_cnt"),
         )
     )
-    # `joined` (<= B rows) feeds BOTH the totals broadcast and the main
-    # select: without a persist the two branches each re-run the
-    # corpus-wide explode scans (r15, measured in the executed plan —
-    # the documents table was scanned twice per log-ratio evaluation).
-    # Persist the tiny bucket table so the corpus is scanned once per
-    # side; released below once the result is checkpointed.
-    joined = joined.persist()
-    totals = joined.agg(
-        F.sum("t_cnt").cast("double").alias("tt"),
-        F.sum("r_cnt").cast("double").alias("tr"),
-    )
     ab = F.lit(a * b)
     # ln(p_t/p_r) with both smoothed ratios composed INSIDE one ln call —
     # the exact expression the SQL twin re-renders
@@ -120,23 +110,33 @@ def hashed_ngram_logratios(
         )
     )
     backoff = F.log((F.col("tr") + ab) / (F.col("tt") + ab))
-    out = joined.crossJoin(F.broadcast(totals)).select(
-        "bucket",
-        F.floor(lr * F.lit(MICRO)).cast("long").alias("lr_micro"),
-        # sign flip: ln(a/(tt+aB) / (a/(tr+aB))) = ln((tr+aB)/(tt+aB))
-        F.floor(backoff * F.lit(MICRO)).cast("long").alias(
-            "backoff_micro"
-        ),
-    )
-    # materialize the <= B-row ratio table eagerly: every consumer uses
-    # it at least twice (dsir_weights joins it AND derives the backoff
-    # constant from it) — without this each use re-ran the full
-    # two-sided corpus count. Identical values (persist/checkpoint does
-    # not change arithmetic); storage is <= buckets rows and the
-    # checkpointed RDD is released by the context cleaner on GC.
-    out = out.localCheckpoint(eager=True)
-    joined.unpersist()
-    return out
+    # `joined` (<= B rows) feeds BOTH the totals broadcast and the main
+    # select: without a persist the two branches each re-run the
+    # corpus-wide explode scans (r15, measured in the executed plan —
+    # the documents table was scanned twice per log-ratio evaluation).
+    # Persist the tiny bucket table so the corpus is scanned once per
+    # side; released once the result is checkpointed.
+    with tuning.materialized(joined) as joined:
+        totals = joined.agg(
+            F.sum("t_cnt").cast("double").alias("tt"),
+            F.sum("r_cnt").cast("double").alias("tr"),
+        )
+        out = joined.crossJoin(F.broadcast(totals)).select(
+            "bucket",
+            F.floor(lr * F.lit(MICRO)).cast("long").alias("lr_micro"),
+            # sign flip: ln(a/(tt+aB) / (a/(tr+aB))) = ln((tr+aB)/(tt+aB))
+            F.floor(backoff * F.lit(MICRO)).cast("long").alias(
+                "backoff_micro"
+            ),
+        )
+        # materialize the <= B-row ratio table eagerly: every consumer
+        # uses it at least twice (dsir_weights joins it AND derives the
+        # backoff constant from it) — without this each use re-ran the
+        # full two-sided corpus count. Identical values (persist and
+        # checkpoint do not change arithmetic); storage is <= buckets
+        # rows and the checkpointed RDD is released by the context
+        # cleaner on GC.
+        return out.localCheckpoint(eager=True)
 
 
 def dsir_weights(

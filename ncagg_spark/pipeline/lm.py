@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ncagg_spark import tuning
 from ncagg_spark.pipeline.text import (
     sql_tokenize,
     sql_word_ngrams,
@@ -76,6 +77,7 @@ def ngram_lm(
     """
     counts = ngram_counts(ref, n=n, text_col=text_col)
     a = float(alpha)
+    denom = F.col("t") + F.lit(a) * F.col("v")
     # `counts` feeds BOTH the totals broadcast and the main select, and
     # every scoring consumer uses the returned model at least twice (the
     # gram join AND the backoff-constant agg) — without materialization
@@ -85,29 +87,26 @@ def ngram_lm(
     # checkpoint below, which then serves every consumer; identical
     # values (materialization does not change arithmetic), and the
     # checkpointed RDD is released by the context cleaner on GC.
-    counts = counts.persist()
-    totals = counts.agg(
-        F.sum("cnt").cast("double").alias("t"),
-        F.count(F.lit(1)).cast("double").alias("v"),
-    )
-    denom = F.col("t") + F.lit(a) * F.col("v")
-    out = (
-        counts.crossJoin(F.broadcast(totals))
-        .select(
-            "gram",
-            F.floor(
-                F.log((F.col("cnt").cast("double") + F.lit(a)) / denom)
-                * F.lit(MICRO)
-            )
-            .cast("long")
-            .alias("lp_micro"),
-            F.floor(F.log(F.lit(a) / denom) * F.lit(MICRO))
-            .cast("long")
-            .alias("backoff_micro"),
+    with tuning.materialized(counts) as counts:
+        totals = counts.agg(
+            F.sum("cnt").cast("double").alias("t"),
+            F.count(F.lit(1)).cast("double").alias("v"),
         )
-    ).localCheckpoint(eager=True)
-    counts.unpersist()
-    return out
+        return (
+            counts.crossJoin(F.broadcast(totals))
+            .select(
+                "gram",
+                F.floor(
+                    F.log((F.col("cnt").cast("double") + F.lit(a)) / denom)
+                    * F.lit(MICRO)
+                )
+                .cast("long")
+                .alias("lp_micro"),
+                F.floor(F.log(F.lit(a) / denom) * F.lit(MICRO))
+                .cast("long")
+                .alias("backoff_micro"),
+            )
+        ).localCheckpoint(eager=True)
 
 
 def lm_score(

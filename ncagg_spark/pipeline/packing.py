@@ -34,8 +34,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ncagg_spark.tuning import materialize_min_bytes, plan_bytes
-
 from .text import token_count
 
 
@@ -56,9 +54,8 @@ def token_offsets(
     Zero-token documents keep a well-defined ``start`` and occupy no
     stream positions. The two collects are one-row aggregates (id range
     + nothing else); the bucket-offset window runs over <= n_buckets
-    rows. At corpus scale the narrow (id, n_tok) projection is
-    materialized once (size-gated ``localCheckpoint``, see below) so
-    the tokenize pass runs once regardless of how many downstream
+    rows. The narrow (id, n_tok) projection is checkpointed once,
+    eagerly, so the tokenize pass runs once however many downstream
     branches consume the counts.
     """
     if n_buckets < 1:
@@ -81,26 +78,11 @@ def token_offsets(
     # rows": the tokenize pass is the heavy step; everything after it
     # needs only the narrow proxy). Eager and per-invocation: nothing
     # survives this call, every invocation recomputes from its input.
-    #
-    # Size gate shared with gap_fill(anchor="previous")
-    # (tuning.plan_bytes) but with a 0 default — materialize at every
-    # size: unlike gap_fill's post-shuffle dedup subtree (where the
-    # unconditional checkpoint REGRESSED at sf0.1), the duplicated work
-    # here is the corpus tokenize expression, and the checkpointed arm
-    # won or washed at EVERY measured size (same-session ABAB medians:
-    # sf0.01 1.14->0.90 / 0.77->0.76, sf0.1 1.26->1.06 / 1.02->0.78,
-    # sf30 13.7->3.8 / 84.3->23.1 s lazy->ckpt for pack_sequences /
-    # pack_bpeish) — fewer jobs even when the corpus is tiny. The env
-    # override remains for clusters where executor storage is tighter
-    # than compute; the gate reads the estimate of the SOURCE subtree
-    # (with the text column), not the narrow projection — what the
-    # re-derivations cost is the source pass.
-    # (a failed estimate, None, still materializes)
-    est = plan_bytes(docs)
-    if est is None or est >= materialize_min_bytes(
-        "NCAGG_PACK_MATERIALIZE_MIN_BYTES", default=0
-    ):
-        counts = counts.localCheckpoint(eager=True)
+    # Unconditional: in same-session ABAB medians (r16, lazy ->
+    # checkpointed, pack_sequences / pack_bpeish) the checkpoint won or
+    # washed at every measured size: sf0.01 1.14->0.90 / 0.77->0.76 s,
+    # sf0.1 1.26->1.06 / 1.02->0.78 s, sf30 13.7->3.8 / 84.3->23.1 s.
+    counts = counts.localCheckpoint(eager=True)
     rng = counts.agg(
         F.min(id_col).alias("lo"), F.max(id_col).alias("hi")
     ).first()

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ncagg_spark import tuning
 from ncagg_spark.functions.binding import bind_once
 from ncagg_spark.pipeline.text import sql_tokenize, tokenize
 
@@ -203,8 +204,8 @@ def bm25_topk(
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
     terms = sorted(set(query_terms))
-    narrow = _bm25_narrow(docs, terms, id_col, text_col).persist()
-    try:
+    narrow = _bm25_narrow(docs, terms, id_col, text_col)
+    with tuning.materialized(narrow) as narrow:
         scores = bm25_scores(
             docs,
             query_terms,
@@ -225,8 +226,6 @@ def bm25_topk(
         # frame is filled once and read by all three consumers (tf for
         # scoring, tf under dfreq, consts)
         return out.localCheckpoint(eager=True)
-    finally:
-        narrow.unpersist()
 
 
 def sql_bm25_scores(

@@ -622,15 +622,22 @@ def quantized_probe_col(
     ``assign_cells(method="quantized")`` (same floor(x*1e6) quantization,
     exact integer scores in any summation order, so any SQL engine
     replicates the ranking bit-for-bit; ties -> smaller cell). Shared by
-    ``ivf_topk`` and the IVF+PQ composition (pipeline/pq.py)."""
+    ``ivf_topk`` and the IVF+PQ composition (pipeline/pq.py). A NULL
+    vector, or one whose length is not the centroids', ties every cell
+    and probes the first ``n_probe`` cells in ascending id order."""
     pids, Cq = _centroid_matrix(cents, quantized=True)
+    dim = Cq.shape[0] if Cq.size else -1
     npr = int(n_probe)
 
     def _probes(v: pd.Series) -> pd.Series:
-        scores = _cell_scores(_stack(v), Cq, quantized=True)
-        # stable argsort of -scores: ties keep ascending cell order
-        order = np.argsort(-scores, axis=1, kind="stable")[:, :npr]
-        return pd.Series(list(pids[order].astype("int32")))
+        order = np.tile(np.arange(len(pids)), (len(v), 1))
+        ok = np.flatnonzero(_vec_lengths(v) == dim)
+        if len(ok):
+            X = _stack(v.to_numpy()[ok])
+            scores = _cell_scores(X, Cq, quantized=True)
+            # stable argsort of -scores: ties keep ascending cell order
+            order[ok] = np.argsort(-scores, axis=1, kind="stable")
+        return pd.Series(list(pids[order[:, :npr]].astype("int32")))
 
     _probes.__annotations__ = {"v": pd.Series, "return": pd.Series}
     probe_udf = F.pandas_udf(T.ArrayType(T.IntegerType()))(_probes)

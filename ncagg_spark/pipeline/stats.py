@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ncagg_spark import plan_probe
+from ncagg_spark import plan_probe, tuning
 
 
 def exact_quantiles(
@@ -38,7 +38,6 @@ def exact_quantiles(
     *,
     n_bins: int = 1024,
     max_passes: int | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """(q double, value long) — the exact PERCENTILE_DISC of each q in
     ``qs`` over the non-null values of ``col``; duplicate qs collapse
@@ -50,15 +49,14 @@ def exact_quantiles(
     the returned frame is a local relation — each internal DataFrame is
     reported through ``ncagg_spark.plan_probe`` so audits/tests see the
     real plans (VERDICT r12 #3). The single-column projection is
-    persisted (MEMORY_AND_DISK) across the passes by default, which
-    avoids <= 7 re-scans of the source and pins the multiset across
-    passes for non-deterministic input — best-effort, not absolute: a
-    persisted block lost to executor failure is recomputed from
-    lineage, re-evaluating the source (ADVICE r13; ``.checkpoint()``
-    the input first when a hard guarantee is required). Without it, an
-    unstable input could strand a rank between passes even on a
-    healthy cluster. ``persist=False`` opts out when the input is a
-    deterministic scan and cluster storage is tighter than a re-read.
+    persisted (``tuning.materialized``, MEMORY_AND_DISK) across the
+    passes, which avoids <= 7 re-scans of the source and pins the
+    multiset across passes for non-deterministic input — best-effort,
+    not absolute: a persisted block lost to executor failure is
+    recomputed from lineage, re-evaluating the source (ADVICE r13;
+    ``.checkpoint()`` the input first when a hard guarantee is
+    required). Without it, an unstable input could strand a rank
+    between passes even on a healthy cluster.
     """
     if not qs:
         raise ValueError("qs must be non-empty")
@@ -74,13 +72,8 @@ def exact_quantiles(
     vals = df.select(c.cast("long").alias("x")).filter(
         F.col("x").isNotNull()
     )
-    if persist:
-        vals = vals.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with tuning.materialized(vals, StorageLevel.MEMORY_AND_DISK) as vals:
         return _refine(spark, vals, qs, n_bins, max_passes)
-    finally:
-        if persist:
-            vals.unpersist()
 
 
 def _refine(

@@ -1,4 +1,9 @@
-"""Scoped session tuning shared by iterative/streaming operators.
+"""Scoped session tuning and materialization shared by operators.
+
+``materialized`` is the one persist/unpersist lifecycle for an
+intermediate read by several consumers inside one call;
+``plan_bytes`` and ``MATERIALIZE_MIN_BYTES`` size-gate the gap-fill
+checkpoint.
 
 ``scoped_shuffle_partitions`` brackets ``spark.sql.shuffle.partitions``
 around a region of EAGER work (an iterative loop's jobs, a streaming
@@ -31,39 +36,41 @@ brackets with a lock) before doing that.
 from __future__ import annotations
 
 import logging
-import os
 from contextlib import contextmanager
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 _KEY = "spark.sql.shuffle.partitions"
 
 _log = logging.getLogger("ncagg_spark")
 
-# Size gate shared by the "materialize a multiply-consumed subtree once"
-# optimizations (operators/gapfill.py anchor="previous",
-# pipeline/packing.py token_offsets): only when the optimizer's size
-# estimate for the re-derived input subtree says the duplicate
-# evaluations are expensive (default 128 MiB, the session's scan
+# Size gate of the "materialize a multiply-consumed subtree once"
+# optimization in operators/gapfill.py anchor="previous": only when the
+# optimizer's size estimate for the re-derived input subtree says the
+# duplicate evaluations are expensive (128 MiB, the session's scan
 # partition size: at least one full task of redundant scan per extra
 # consumer). Below that the extra eager job costs more than it saves
-# (measured r16 on agg_regularize_anchored at sf0.1). Env-overridable
-# per call site for clusters where storage is tighter than compute.
+# (measured r16 on agg_regularize_anchored at sf0.1).
 MATERIALIZE_MIN_BYTES = 128 * 1024 * 1024
 
 
-def materialize_min_bytes(
-    env_var: str, default: int = MATERIALIZE_MIN_BYTES
-) -> int:
-    """Per-call-site gate threshold. ``default`` is the call site's
-    measured crossover: gap_fill keeps 128 MiB (its duplicated subtree
-    is a post-shuffle dedup whose re-derivation is cheap below one scan
-    task — an unconditional checkpoint REGRESSED at sf0.1), packing
-    passes 0 (its duplicated subtree is the corpus tokenize pass; the
-    checkpointed arm won or washed at every measured size, 65 KB to
-    179 MB source estimate — see OPTIMIZATION_r16.md)."""
-    return int(os.environ.get(env_var, default))
+@contextmanager
+def materialized(
+    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER
+) -> Iterator[DataFrame]:
+    """Persist ``df`` at ``level`` for the block and yield it; unpersist
+    on exit, errors included. The one lifecycle for an intermediate
+    that several consumers inside one call read: nothing survives the
+    block, so every invocation recomputes from its inputs. The default
+    level is ``DataFrame.persist()``'s own (PySpark's
+    ``StorageLevel.MEMORY_AND_DISK`` is the serialized form)."""
+    df = df.persist(level)
+    try:
+        yield df
+    finally:
+        df.unpersist()
 
 
 def plan_bytes(df: DataFrame) -> int | None:

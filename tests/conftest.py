@@ -43,6 +43,23 @@ def written_lineage(monkeypatch) -> list:
     return seen
 
 
+
+@pytest.fixture()
+def checkpoints(spark, monkeypatch) -> list:
+    """Record every frame ``localCheckpoint`` is called on, in call
+    order, while still checkpointing it. Patches the session's concrete
+    DataFrame class: ``pyspark.sql.DataFrame`` is only its base."""
+    seen: list = []
+    frame_cls = type(spark.range(1))
+    real = frame_cls.localCheckpoint
+
+    def recording(df, *args, **kwargs):
+        seen.append(df)
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
+    return seen
+
 def assert_scan_of(df, output: str) -> None:
     """``df`` plans to exactly one Parquet scan of ``output`` and none of
     the build's operators."""

@@ -194,37 +194,36 @@ def _grain_cfgs():
     )
 
 
-@pytest.mark.parametrize("share_scan", [False, True])
 def test_aggregate_multi_matches_per_grain_runs(
-    spark, two_grain_dir, tmp_path, share_scan
+    spark, two_grain_dir, tmp_path
 ):
-    """One aggregate_multi call == N independent aggregate() runs."""
+    """One aggregate_multi call == N independent aggregate() runs, and
+    each grain's result is a scan of that grain's output."""
     from ncagg_spark.api import GrainSpec, aggregate_multi
 
     files = [f"{two_grain_dir}/g{i}.parquet" for i in range(2)]
     cfg_a, cfg_b = _grain_cfgs()
-    multi = str(tmp_path / f"multi_{share_scan}")
-    aggregate_multi(
+    multi = str(tmp_path / "multi")
+    got = aggregate_multi(
         spark,
         files,
         {
             "a": GrainSpec(f"{multi}/a", cfg_a, columns=["ts_a", "val_a"]),
             "b": GrainSpec(f"{multi}/b", cfg_b, columns=["ts_b", "val_b"]),
         },
-        share_scan=share_scan,
     )
-    solo_a = str(tmp_path / f"solo_a_{share_scan}")
-    solo_b = str(tmp_path / f"solo_b_{share_scan}")
+    solo_a = str(tmp_path / "solo_a")
+    solo_b = str(tmp_path / "solo_b")
     aggregate(spark, files, solo_a, cfg_a, columns=["ts_a", "val_a"])
     aggregate(spark, files, solo_b, cfg_b, columns=["ts_b", "val_b"])
 
-    for multi_out, solo_out, n in ((f"{multi}/a", solo_a, 60), (f"{multi}/b", solo_b, 30)):
-        got = spark.read.parquet(multi_out)
+    for name, solo_out, n in (("a", solo_a, 60), ("b", solo_b, 30)):
+        assert_scan_of(got[name], f"{multi}/{name}")
         want = spark.read.parquet(solo_out)
-        assert got.count() == n
-        assert sorted(got.columns) == sorted(want.columns)
-        assert got.exceptAll(want).count() == 0
-        assert want.exceptAll(got).count() == 0
+        assert got[name].count() == n
+        assert sorted(got[name].columns) == sorted(want.columns)
+        assert got[name].exceptAll(want).count() == 0
+        assert want.exceptAll(got[name]).count() == 0
 
 
 def test_cli_multi_grain(spark, two_grain_dir, tmp_path):
@@ -289,11 +288,9 @@ def test_alt_named_index_still_aggregates(spark, tmp_path):
     assert got.filter(~F.col("is_fill")).count() == 10
 
 
-@pytest.mark.parametrize("share_scan", [False, True])
-def test_alt_named_index_under_share_scan(spark, tmp_path, share_scan):
-    """share_scan's union projection must keep copy_from_alt alternates:
-    a grain whose index only materializes via an alternate source name
-    must aggregate identically with share_scan on and off."""
+def test_alt_named_index_under_aggregate_multi(spark, tmp_path):
+    """A grain whose index only materializes via a copy_from_alt
+    alternate source name aggregates under aggregate_multi."""
     from ncagg_spark.api import GrainSpec, aggregate_multi
 
     d = tmp_path / "altg"
@@ -309,12 +306,11 @@ def test_alt_named_index_under_share_scan(spark, tmp_path, share_scan):
         max_bound=(T0_US + 10 * 1_000_000) / 1e6,
         copy_from_alt={"ts": ["old_time"]},
     )
-    out = str(tmp_path / f"alt_multi_{share_scan}")
+    out = str(tmp_path / "alt_multi")
     aggregate_multi(
         spark,
         [str(d / "g0.parquet")],
         {"g": GrainSpec(f"{out}/g", cfg, columns=["ts", "value"])},
-        share_scan=share_scan,
     )
     got = spark.read.parquet(f"{out}/g")
     assert got.count() == 10
@@ -373,28 +369,3 @@ def test_aggregate_partition_by_date_scan_has_no_dt(
     assert_scan_of(got, out_path)
     assert_same_columns(got, written_lineage[0])
     assert got.count() == 60
-
-
-def test_aggregate_multi_share_scan_results_outlive_unpersist(
-    spark, two_grain_dir, tmp_path
-):
-    """The share_scan persist is released in aggregate_multi's finally;
-    the returned scans read the written grains, not the released cache."""
-    from ncagg_spark.api import GrainSpec, aggregate_multi
-
-    cfg_a, cfg_b = _grain_cfgs()
-    multi = str(tmp_path / "multi_scan")
-    got = aggregate_multi(
-        spark,
-        [f"{two_grain_dir}/g{i}.parquet" for i in range(2)],
-        {
-            "a": GrainSpec(f"{multi}/a", cfg_a, columns=["ts_a", "val_a"]),
-            "b": GrainSpec(f"{multi}/b", cfg_b, columns=["ts_b", "val_b"]),
-        },
-        share_scan=True,
-    )
-    for name, n in (("a", 60), ("b", 30)):
-        assert_scan_of(got[name], f"{multi}/{name}")
-        rows = got[name].collect()
-        assert len(rows) == n
-        assert sum(not r["is_fill"] for r in rows) == n

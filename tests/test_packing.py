@@ -148,3 +148,39 @@ class TestPackSequences:
         toks = [r["n_tok"] for r in rows]
         assert toks == [1, 2, 3, 4, 5, 6]
         assert starts == [0, 1, 3, 6, 10, 15]
+
+    def test_pack_sequences_materialized_rows_unchanged(
+        self, spark, checkpoints
+    ):
+        # the per-document counts are checkpointed once, eagerly, at
+        # every size; the manifest is exact row for row. Mixed doc
+        # lengths so sequences cross document boundaries, plus a
+        # zero-token doc (occupies no stream positions) and a dropped
+        # trailing partial sequence.
+        docs = _docs(
+            spark,
+            [
+                (1, "a b c d e"),          # 5 tokens
+                (2, ""),                   # 0 tokens -> no stream positions
+                (3, "f g h"),              # 3 tokens
+                (4, "i j k l m n o"),      # 7 tokens
+                (5, "p q"),                # 2 tokens -> 17 total, seq_len 4
+            ],
+        )
+        out = pack_sequences(docs, seq_len=4, drop_incomplete=True)
+        assert [c.columns for c in checkpoints] == [["doc_id", "n_tok"]]
+        rows = sorted(
+            (r.seq_id, r.doc_id, r.doc_offset, r.seq_offset, r.seg_len)
+            for r in out.collect()
+        )
+        # 17 tokens // 4 = 4 complete sequences; doc 1 spans seqs 0-1,
+        # doc 3 spans 1-2, doc 4 spans 2-3, doc 5 starts at offset 15
+        # (seq 3) and its tail falls in the dropped partial seq 4
+        assert rows == [
+            (0, 1, 0, 0, 4),
+            (1, 1, 4, 0, 1),
+            (1, 3, 0, 1, 3),
+            (2, 4, 0, 0, 4),
+            (3, 4, 4, 0, 3),
+            (3, 5, 0, 3, 1),
+        ]

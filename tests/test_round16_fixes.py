@@ -1,72 +1,30 @@
 """Round-16 pins (optimization round 2 of 2):
 
-1. CC seam (VERDICT r15 #6): the same pair graph solved just UNDER the
-   driver gate (vectorized numpy path) and just OVER it (distributed
-   loop) produces identical clusterings — the gate is a pure
-   performance switch.
-2. NULL edge ids (ADVICE r15): the driver path declines graphs with
-   NULL ids and the gate falls back to the distributed loop instead of
-   raising from ``to_numpy``.
-3. bm25 single-tokenize restructure (VERDICT r15 #2): the r16 narrow
+1. bm25 single-tokenize restructure (VERDICT r15 #2): the r16 narrow
    (one corpus pass) form returns exactly the rows of the r15
    three-subtree form, reconstructed inline here as the spec.
-4. ``clean_corpus(keep_cached=True)`` (VERDICT r15 #3) returns the same
+2. ``clean_corpus(keep_cached=True)`` (VERDICT r15 #3) returns the same
    survivors as the default hygiene path, plus the cache handle.
-5. ``gap_fill(anchor="previous")`` input materialization returns
-   identical rows (leading fills included) — pinned on a case with a
-   leading gap, an interior gap and a trailing gap.
+3. The simhash combination-scheme candidates return exactly the
+   quadratic-scan pair set.
+
+The CC driver-gate seam pins live in test_sessionize_cc.py, the
+gap-fill checkpoint pin in test_tuning.py and the packing checkpoint
+pin in test_packing.py.
 """
 
 from __future__ import annotations
 
 import sys
 
-import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
-from ncagg_spark.operators.dedup import cadence_bucket, dedup_cadence  # noqa: E402
-from ncagg_spark.operators.gapfill import gap_fill  # noqa: E402
 from ncagg_spark.pipeline.corpus import clean_corpus  # noqa: E402
-from ncagg_spark.pipeline.dedup import connected_components  # noqa: E402
 from ncagg_spark.pipeline.search import bm25_topk  # noqa: E402
 from ncagg_spark.pipeline.text import token_count, tokenize  # noqa: E402
 from ncagg_spark.pipeline.topk import bounded_topk  # noqa: E402
-
-
-def _cc_rows(spark, pairs, gate, monkeypatch):
-    monkeypatch.setenv("NCAGG_CC_DRIVER_MAX_EDGES", str(gate))
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    out = connected_components(df, num_partitions=None, unique_pairs=True)
-    return sorted((r.node, r.cluster_id) for r in out.collect())
-
-
-def test_cc_seam_driver_vs_loop_identical(spark, monkeypatch):
-    # chain (diameter > 1 round), a triangle-ish clique and singles —
-    # 12 pairs -> 24 symmetric edge rows
-    pairs = (
-        [(i, i + 1) for i in range(6)]  # chain 0..6
-        + [(10, 11), (11, 12), (10, 12)]  # clique
-        + [(20, 21), (30, 31), (40, 41)]
-    )
-    n_edges = 2 * len(pairs)
-    under = _cc_rows(spark, pairs, n_edges, monkeypatch)  # gate fits -> driver
-    over = _cc_rows(spark, pairs, n_edges - 1, monkeypatch)  # too big -> loop
-    assert under == over
-    # and the clustering is the min-label spec
-    assert (6, 0) in under and (12, 10) in under and (41, 40) in under
-
-
-def test_cc_null_ids_fall_back_to_loop(spark, monkeypatch):
-    monkeypatch.setenv("NCAGG_CC_DRIVER_MAX_EDGES", "1000000")
-    df = spark.createDataFrame(
-        [(1, 2), (2, 3), (None, 5)], "id_a long, id_b long"
-    )
-    # must not raise (driver path declines, loop runs)
-    out = connected_components(df, num_partitions=None, unique_pairs=True)
-    got = {(r.node, r.cluster_id) for r in out.collect() if r.node is not None}
-    assert {(1, 1), (2, 1), (3, 1)} <= got
 
 
 def _bm25_topk_r15_spec(docs, terms, *, k, k1=1.2, b=0.75):
@@ -159,102 +117,6 @@ def test_clean_corpus_keep_cached_same_survivors(spark):
     cached.unpersist()
     want = sorted((r.doc_id, r.n_members) for r in base.collect())
     assert got == want
-
-
-@pytest.mark.parametrize("materialize", [False, True])
-def test_gap_fill_previous_materialized_rows_unchanged(
-    spark, monkeypatch, materialize
-):
-    # 1-min cadence over 12 slots; real records at slots 3, 4, 8 with
-    # off-grid phases -> leading fills (back-computed), interior fills
-    # (continue-from-previous) and trailing fills all exercised
-    # size-gate override: 0 forces the materialized path, a huge value
-    # forces the lazy (shared-subtree) path — rows must be identical
-    monkeypatch.setenv(
-        "NCAGG_GAPFILL_MATERIALIZE_MIN_BYTES",
-        "0" if materialize else str(1 << 60),
-    )
-    origin = 1_700_000_000_000_000
-    step = 60_000_000
-    data = [
-        (1, origin + 3 * step + 7_000_000),
-        (2, origin + 4 * step + 11_000_000),
-        (3, origin + 8 * step + 2_000_000),
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in data], "event_id long, us long"
-    ).select("event_id", F.timestamp_micros(F.col("us")).alias("ts"))
-    df = cadence_bucket(df, "ts", origin_us=origin, step_us=step)
-    df = dedup_cadence(df, "ts", tiebreak=["event_id"])
-    out = gap_fill(
-        spark, df, "ts",
-        origin_us=origin, step_us=step, n_buckets=12,
-        anchor="previous", keep_bucket=True,
-    )
-    rows = {r["__bucket"]: r for r in out.collect()}
-    assert len(rows) == 12
-    lead_us = origin + 3 * step + 7_000_000
-    import datetime as _dt
-
-    def us_of(ts: _dt.datetime) -> int:
-        return int(ts.replace(tzinfo=_dt.timezone.utc).timestamp() * 1e6)
-
-    for b in (0, 1, 2):
-        assert us_of(rows[b].ts) == lead_us - (3 - b) * step
-    # interior fills continue from the previous real record (slot 4)
-    for b in (5, 6, 7):
-        assert rows[b].is_fill
-        assert us_of(rows[b].ts) == us_of(rows[4].ts) + (b - 4) * step
-    # trailing fills continue from slot 8
-    for b in (9, 10, 11):
-        assert rows[b].is_fill
-        assert us_of(rows[b].ts) == us_of(rows[8].ts) + (b - 8) * step
-    # real records untouched
-    for b, (_eid, us) in zip((3, 4, 8), data):
-        assert not rows[b].is_fill and us_of(rows[b].ts) == us
-
-
-@pytest.mark.parametrize("materialize", [False, True])
-def test_pack_sequences_materialized_rows_unchanged(
-    spark, monkeypatch, materialize
-):
-    # size-gate override: 0 forces the checkpointed-counts path, a huge
-    # value forces the lazy (re-derived-counts) path — the manifest must
-    # be identical row for row. Mixed doc lengths so sequences cross
-    # document boundaries, plus a zero-token doc (occupies no stream
-    # positions) and a dropped trailing partial sequence.
-    from ncagg_spark.pipeline.packing import pack_sequences
-
-    monkeypatch.setenv(
-        "NCAGG_PACK_MATERIALIZE_MIN_BYTES",
-        "0" if materialize else str(1 << 60),
-    )
-    docs = spark.createDataFrame(
-        [
-            (1, "a b c d e"),          # 5 tokens
-            (2, ""),                   # 0 tokens -> no stream positions
-            (3, "f g h"),              # 3 tokens
-            (4, "i j k l m n o"),      # 7 tokens
-            (5, "p q"),                # 2 tokens -> 17 total, seq_len 4
-        ],
-        "doc_id long, text string",
-    )
-    out = pack_sequences(docs, seq_len=4, drop_incomplete=True)
-    rows = sorted(
-        (r.seq_id, r.doc_id, r.doc_offset, r.seq_offset, r.seg_len)
-        for r in out.collect()
-    )
-    # 17 tokens // 4 = 4 complete sequences; doc 1 spans seqs 0-1,
-    # doc 3 spans 1-2, doc 4 spans 2-3, doc 5 starts at offset 15
-    # (seq 3) and its tail falls in the dropped partial seq 4
-    assert rows == [
-        (0, 1, 0, 0, 4),
-        (1, 1, 4, 0, 1),
-        (1, 3, 0, 1, 3),
-        (2, 4, 0, 0, 4),
-        (3, 4, 4, 0, 3),
-        (3, 5, 0, 3, 1),
-    ]
 
 
 # ---------------------------------------------------------------------------

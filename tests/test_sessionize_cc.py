@@ -187,6 +187,49 @@ def test_cc_driver_gate_stages_take_coalesced_width(spark):
     assert widest <= sc.defaultParallelism, widest
 
 
+def _cc_rows(spark, pairs, gate, monkeypatch):
+    import ncagg_spark.pipeline.dedup as dd
+
+    monkeypatch.setattr(dd, "_CC_DRIVER_MAX_EDGES", gate)
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    out = connected_components(df, num_partitions=None, unique_pairs=True)
+    return sorted((r.node, r.cluster_id) for r in out.collect())
+
+
+def test_cc_seam_driver_vs_loop_identical(spark, monkeypatch):
+    # the same pair graph solved just UNDER the driver gate (vectorized
+    # numpy path) and just OVER it (distributed loop) clusters
+    # identically: the gate is a pure performance switch. A chain
+    # (diameter > 1 round), a triangle-ish clique and singles —
+    # 12 pairs -> 24 symmetric edge rows
+    pairs = (
+        [(i, i + 1) for i in range(6)]  # chain 0..6
+        + [(10, 11), (11, 12), (10, 12)]  # clique
+        + [(20, 21), (30, 31), (40, 41)]
+    )
+    n_edges = 2 * len(pairs)
+    under = _cc_rows(spark, pairs, n_edges, monkeypatch)  # fits -> driver
+    over = _cc_rows(spark, pairs, n_edges - 1, monkeypatch)  # too big -> loop
+    assert under == over
+    # and the clustering is the min-label spec
+    assert (6, 0) in under and (12, 10) in under and (41, 40) in under
+
+
+def test_cc_null_ids_fall_back_to_loop(spark, monkeypatch):
+    # the driver path declines a graph with NULL ids and the gate falls
+    # back to the distributed loop instead of raising from to_numpy
+    import ncagg_spark.pipeline.dedup as dd
+
+    monkeypatch.setattr(dd, "_CC_DRIVER_MAX_EDGES", 1_000_000)
+    df = spark.createDataFrame(
+        [(1, 2), (2, 3), (None, 5)], "id_a long, id_b long"
+    )
+    # must not raise (driver path declines, loop runs)
+    out = connected_components(df, num_partitions=None, unique_pairs=True)
+    got = {(r.node, r.cluster_id) for r in out.collect() if r.node is not None}
+    assert {(1, 1), (2, 1), (3, 1)} <= got
+
+
 def test_cc_agrees_with_union_find_oracle(spark):
     """Third-implementation agreement (round 6): the Spark pointer-
     jumping CC and a driver-side union-find must produce identical

@@ -439,3 +439,30 @@ def test_float_probe_matches_sql_probe(spark):
     assert len(out) == len(rows)
     for r in out:
         assert list(r["udf"]) == list(r["sql"]), r["id"]
+
+
+def test_quantized_probe_ranks_null_and_short_vectors(spark):
+    """A NULL or wrong-length vector ties every cell under the quantized
+    probe and gets the first n_probe cells in ascending id order, as
+    the float probe does; a valid vector is ranked by its scores."""
+    from ncagg_spark.pipeline.similarity import quantized_probe_col
+
+    cents = [
+        (5, [1.0, 0.0, 0.0]),
+        (2, [0.0, 1.0, 0.0]),
+        (9, [0.0, 0.0, 1.0]),
+        (1, [1.0, 1.0, 0.0]),
+    ]
+    df = spark.createDataFrame(
+        [(0, [0.1, 0.9, 0.2]), (1, None), (2, [1.0, 2.0])],
+        "id long, v array<double>",
+    )
+    got = {
+        r["id"]: list(r["p"])
+        for r in df.select(
+            "id", quantized_probe_col(cents, 3, "v").alias("p")
+        ).collect()
+    }
+    # quantized dots of row 0: cell 2 9.0e11, cell 1 7.07e11,
+    # cell 9 2.0e11, cell 5 1.0e11
+    assert got == {0: [2, 1, 9], 1: [1, 2, 5], 2: [1, 2, 5]}

@@ -1,5 +1,6 @@
-"""Size-estimate gates: a failed ``plan_bytes`` estimate keeps every
-caller on its default path instead of forcing the gate on."""
+"""``tuning``: the ``materialized`` lifecycle, and the size-estimate
+gates — a failed ``plan_bytes`` estimate keeps every caller on its
+default path instead of forcing the gate on."""
 
 from __future__ import annotations
 
@@ -8,8 +9,8 @@ import logging
 from types import SimpleNamespace
 
 import pytest
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 import ncagg_spark.operators.gapfill as gapfill
 import ncagg_spark.tuning as tuning
@@ -30,7 +31,6 @@ def failed_estimate(monkeypatch, caplog):
         return real(SimpleNamespace())  # no query execution to ask
 
     monkeypatch.setattr(tuning, "plan_bytes", failing)
-    monkeypatch.setattr(gapfill, "_plan_bytes", failing)
     caplog.set_level(logging.WARNING, logger="ncagg_spark")
     return caplog
 
@@ -54,16 +54,8 @@ def test_failed_estimate_keeps_simhash_session_width(spark, failed_estimate):
 
 
 def test_failed_estimate_skips_gap_fill_checkpoint(
-    spark, monkeypatch, failed_estimate
+    spark, failed_estimate, checkpoints
 ):
-    calls = []
-    real_checkpoint = DataFrame.localCheckpoint
-
-    def recording(self, *args, **kwargs):
-        calls.append(self)
-        return real_checkpoint(self, *args, **kwargs)
-
-    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
     origin = 1_700_000_000_000_000
     step = 60_000_000
     df = spark.createDataFrame(
@@ -81,5 +73,93 @@ def test_failed_estimate_skips_gap_fill_checkpoint(
     )
     assert out.count() == 8
     assert out.filter(F.col("is_fill")).count() > 0
-    assert not calls
+    assert not checkpoints
     assert _warned(failed_estimate)
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.mark.parametrize(
+    "level", [None, StorageLevel.DISK_ONLY], ids=["default", "disk_only"]
+)
+def test_materialized_persists_then_releases(spark, level):
+    df = spark.range(100).groupBy((F.col("id") % 3).alias("k")).count()
+    before = _persistent_rdds(spark)
+    args = () if level is None else (level,)
+    with tuning.materialized(df, *args) as m:
+        want = StorageLevel.MEMORY_AND_DISK_DESER if level is None else level
+        assert m.storageLevel == want
+        assert m.count() == 3
+        assert _persistent_rdds(spark) == before + 1
+    assert df.storageLevel == StorageLevel.NONE
+    assert _persistent_rdds(spark) == before
+
+
+def test_materialized_releases_when_the_body_raises(spark):
+    df = spark.range(100).groupBy((F.col("id") % 3).alias("k")).count()
+    before = _persistent_rdds(spark)
+    with pytest.raises(RuntimeError, match="body failed"):
+        with tuning.materialized(df) as m:
+            assert m.count() == 3
+            assert _persistent_rdds(spark) == before + 1
+            raise RuntimeError("body failed")
+    assert df.storageLevel == StorageLevel.NONE
+    assert _persistent_rdds(spark) == before
+
+
+@pytest.mark.parametrize("materialize", [False, True])
+def test_gap_fill_previous_materialized_rows_unchanged(
+    spark, monkeypatch, checkpoints, materialize
+):
+    # 1-min cadence over 12 slots; real records at slots 3, 4, 8 with
+    # off-grid phases -> leading fills (back-computed), interior fills
+    # (continue-from-previous) and trailing fills all exercised.
+    # Gate threshold: 0 forces the checkpointed path, a huge value the
+    # lazy (shared-subtree) path — rows must be identical. The estimate
+    # of this plan over a local Python list is above 2^63 (Spark sizes
+    # an RDD-backed relation at 2^63 - 1 bytes), so "huge" has to be
+    # larger still.
+    monkeypatch.setattr(
+        tuning, "MATERIALIZE_MIN_BYTES", 0 if materialize else 1 << 128
+    )
+    origin = 1_700_000_000_000_000
+    step = 60_000_000
+    data = [
+        (1, origin + 3 * step + 7_000_000),
+        (2, origin + 4 * step + 11_000_000),
+        (3, origin + 8 * step + 2_000_000),
+    ]
+    df = spark.createDataFrame(
+        [(i, t) for i, t in data], "event_id long, us long"
+    ).select("event_id", F.timestamp_micros(F.col("us")).alias("ts"))
+    df = cadence_bucket(df, "ts", origin_us=origin, step_us=step)
+    df = dedup_cadence(df, "ts", tiebreak=["event_id"])
+    out = gapfill.gap_fill(
+        spark, df, "ts",
+        origin_us=origin, step_us=step, n_buckets=12,
+        anchor="previous", keep_bucket=True,
+    )
+    # the gate checkpoints the input frame itself
+    assert any(c is df for c in checkpoints) == materialize
+    rows = {r["__bucket"]: r for r in out.collect()}
+    assert len(rows) == 12
+    lead_us = origin + 3 * step + 7_000_000
+
+    def us_of(ts: dt.datetime) -> int:
+        return int(ts.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6)
+
+    for b in (0, 1, 2):
+        assert us_of(rows[b].ts) == lead_us - (3 - b) * step
+    # interior fills continue from the previous real record (slot 4)
+    for b in (5, 6, 7):
+        assert rows[b].is_fill
+        assert us_of(rows[b].ts) == us_of(rows[4].ts) + (b - 4) * step
+    # trailing fills continue from slot 8
+    for b in (9, 10, 11):
+        assert rows[b].is_fill
+        assert us_of(rows[b].ts) == us_of(rows[8].ts) + (b - 8) * step
+    # real records untouched
+    for b, (_eid, us) in zip((3, 4, 8), data):
+        assert not rows[b].is_fill and us_of(rows[b].ts) == us

@@ -317,7 +317,7 @@ def main() -> None:
             hot_tbl,
             lambda ev: sessionize_two_phase(
                 ev, "ts", "user_id", gap_us=gap_us, n_chunks=32,
-                tiebreak=["event_id"], cache=False,
+                tiebreak=["event_id"],
             ),
         )
     )
