@@ -1,21 +1,16 @@
-from ncagg_spark.functions.hashing import hash64, minhash_signature, simhash64
+from ncagg_spark.functions.hashing import hash64
 from ncagg_spark.functions.time import (
     cf_to_timestamp,
-    iso_ms,
     parse_partial_datetime,
     timestamp_to_cf,
 )
-from ncagg_spark.functions.vectors import cosine_similarity, dot, l2_norm
+from ncagg_spark.functions.vectors import dot, l2_norm
 
 __all__ = [
     "hash64",
-    "minhash_signature",
-    "simhash64",
     "cf_to_timestamp",
     "timestamp_to_cf",
-    "iso_ms",
     "parse_partial_datetime",
-    "cosine_similarity",
     "dot",
     "l2_norm",
 ]

@@ -25,7 +25,6 @@ import random
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ncagg_spark.functions.binding import bind_once
 
 MERSENNE31 = (1 << 31) - 1
 SIMHASH_BITS = 32
@@ -46,31 +45,6 @@ def minhash_perms(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
     ]
 
 
-def _perm_expr(h: Column, a: int, b: int) -> Column:
-    return (F.lit(a) * (h % F.lit(MERSENNE31)) + F.lit(b)) % F.lit(MERSENNE31)
-
-
-def minhash_signature(
-    tokens: Column, num_perm: int = 16, seed: int = 42
-) -> Column:
-    """MinHash signature (array<long>, length num_perm) of a string-array
-    column. Pure higher-order functions — no UDF, stays in codegen.
-    """
-    def sig_of(hashes: Column) -> Column:
-        return F.array(
-            *[
-                F.array_min(
-                    F.transform(hashes, lambda h: _perm_expr(h, a, b))
-                )
-                for a, b in minhash_perms(num_perm, seed)
-            ]
-        )
-
-    # bind the per-token hash array once — the inline form re-hashed
-    # every token num_perm times (see functions/binding.py)
-    return bind_once(F.transform(tokens, lambda t: hash64(t)), sig_of)
-
-
 def band_hashes(sig: Column, num_bands: int, rows_per_band: int) -> Column:
     """LSH banding: array of num_bands hashes, band i hashing signature
     values [i*r, (i+1)*r). Two docs sharing any band hash are candidates.
@@ -83,39 +57,6 @@ def band_hashes(sig: Column, num_bands: int, rows_per_band: int) -> Column:
         ]
         bands.append(hash64(F.concat_ws("_", *parts)))
     return F.array(*bands)
-
-
-def simhash64(tokens: Column, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash (long, low `bits` bits) of a string-array column.
-
-    bit_j(doc) = 1 iff sum over tokens of (2*bit_j(hash(token)) - 1) > 0.
-    """
-    def sig_of(hashes: Column) -> Column:
-        def bit_vote(j: int) -> Column:
-            # closure (not default-arg capture): pyspark inspects lambda
-            # arity
-            return F.aggregate(
-                hashes,
-                F.lit(0).cast("long"),
-                lambda a, h: a
-                + (F.shiftright(h, j).bitwiseAND(F.lit(1)) * 2 - 1),
-            )
-
-        acc = F.lit(0).cast("long")
-        for j in range(bits):
-            acc = acc + F.when(
-                bit_vote(j) > 0, F.lit(1 << j).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-        return acc
-
-    # bind the per-token hash array once — the inline form re-hashed
-    # every token once per signature bit (32x; see functions/binding.py)
-    return bind_once(F.transform(tokens, lambda t: hash64(t)), sig_of)
-
-
-def hamming_distance64(a: Column, b: Column) -> Column:
-    """Hamming distance between two long bit-signatures (bit_count of xor)."""
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 # ---------------------------------------------------------------------------
@@ -136,7 +77,9 @@ def sql_perm(hexpr: str, a: int, b: int) -> str:
 def sql_minhash_signature(
     tokens_expr: str, num_perm: int = 16, seed: int = 42
 ) -> str:
-    """DuckDB SQL list expression mirroring minhash_signature()."""
+    """DuckDB SQL list expression: per permutation, the minimum of
+    ``sql_perm`` over the token hashes (``pipeline.dedup.minhash_signatures``
+    computes the same values relationally)."""
     h = sql_hash64("t")
     mins = [
         f"list_min(list_transform({tokens_expr}, t -> {sql_perm(h, a, b)}))"
@@ -146,7 +89,9 @@ def sql_minhash_signature(
 
 
 def sql_simhash64(tokens_expr: str, bits: int = SIMHASH_BITS) -> str:
-    """DuckDB SQL mirroring simhash64()."""
+    """DuckDB SQL SimHash: bit j is set iff the token hashes vote it
+    positive (``pipeline.dedup.simhash_signatures`` computes the same
+    values relationally)."""
     h = sql_hash64("t")
     hashes = f"list_transform({tokens_expr}, t -> {h})"
     terms = []

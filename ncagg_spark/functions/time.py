@@ -115,14 +115,6 @@ def timestamp_to_cf(col: Column | str, units: str) -> Column:
     return (epoch_us(c) - F.lit(epoch_off_us)) / F.lit(scale * 1e6)
 
 
-def iso_ms(col: Column | str) -> Column:
-    """ISO-8601 millisecond format, reference's attribute timestamp format
-    (ncagg/attributes.py:13-22): 2020-01-01T00:00:00.000Z
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(c, "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
-
-
 def parse_partial_datetime(s: str) -> tuple[datetime, datetime]:
     """Parse YYYY[MM[DD[HH[MM]]]] -> (start, exclusive_end).
 

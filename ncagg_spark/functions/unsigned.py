@@ -13,8 +13,6 @@ load time. Values >= 2^63 appear negative, but the 64 bits round-trip
 exactly, bitwise flag tests (`&`, `|`, `shiftright`) work natively, and
 joins/sorts on the column stay in the primitive fast path — at 100 TB
 that beats dragging a 16-byte decimal through every flag predicate.
-``long_bits_to_uint64`` converts back (to decimal) for display or for
-DuckDB-oracle parity, where UBIGINT is native.
 """
 
 from __future__ import annotations
@@ -44,14 +42,6 @@ def uint64_to_long_bits(col: Column) -> Column:
     c = col.cast("decimal(20,0)")
     return F.when(c >= _two63(), (c - _two64()).cast("long")).otherwise(
         c.cast("long")
-    )
-
-
-def long_bits_to_uint64(col: Column) -> Column:
-    """LongType bit-pattern -> decimal(20,0) with the uint64 value."""
-    c = col.cast("decimal(20,0)")
-    return (
-        F.when(col < 0, c + _two64()).otherwise(c).cast("decimal(20,0)")
     )
 
 

@@ -52,23 +52,6 @@ def norm_guard(c: Column) -> Column:
     return F.greatest(c, F.lit(1e-300))
 
 
-def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    return dot(a, b) / (norm_guard(l2_norm(a)) * norm_guard(l2_norm(b)))
-
-
-def lit_double_array(values) -> Column:
-    """Constant array<double> literal built with ONE py4j call.
-
-    ``F.array(*[F.lit(x) ...])`` costs one JVM round-trip per element —
-    ~1.3s of driver time for 32 dim-64 centroid vectors, pure plan-build
-    overhead before any data moves. Rendering the values into a single
-    parsed expression is ~50x faster and bit-identical: ``repr`` is
-    Python's shortest round-trip form and the SQL parser's ``D`` suffix
-    parses it back to the same IEEE double.
-    """
-    return F.expr(_array_sql(values))
-
-
 def _array_sql(values) -> str:
     return "array(" + ",".join(repr(float(x)) + "D" for x in values) + ")"
 

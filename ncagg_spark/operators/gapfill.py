@@ -69,7 +69,9 @@ def gap_fill(
     estimates ``df``'s plan (``tuning.plan_bytes``) at
     ``tuning.MATERIALIZE_MIN_BYTES`` or more, ``df`` is checkpointed
     once, eagerly, and all three consumers read the checkpoint; below
-    the threshold, or when the estimate fails, the plan stays lazy.
+    the threshold, or when the estimate fails or the size is unknown
+    (a plan over an RDD-backed relation such as a local
+    ``createDataFrame``), the plan stays lazy.
     """
     if anchor not in ("grid", "previous"):
         raise ValueError(f"unknown anchor mode: {anchor}")

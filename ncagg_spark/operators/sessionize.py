@@ -13,14 +13,15 @@ functions (lag + running sum) then run per partition with no further
 exchange — Catalyst plans both windows plus the session aggregation over
 the SAME partitioning, so a billion-user event log costs exactly one
 exchange. Skewed keys (one bot user with 10^9 events) are the failure
-mode; cap per-key history upstream or pre-split with a salt + re-merge.
+mode of that one window: ``sessionize_skew`` splits only the hot keys'
+histories into time chunks and stitches their session numbers back with
+a broadcast correction join, so normal keys keep the one-exchange plan.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ncagg_spark.functions.time import epoch_us
 
@@ -72,117 +73,6 @@ def session_summary(
     return s.groupBy(key_col, SESSION_COL).agg(*aggs)
 
 
-def sessionize_two_phase(
-    df: DataFrame,
-    ts_col: str,
-    key_col: str,
-    *,
-    gap_us: int,
-    n_chunks: int = 32,
-    tiebreak: list[str] | None = None,
-    bounds: tuple[int, int] | None = None,
-) -> DataFrame:
-    """``sessionize`` with the hot-key straggler removed (VERDICT r10
-    #3): identical output, but no single task ever holds one key's full
-    history.
-
-    The plain operator's window partitions by key — a key owning 33% of
-    all rows serializes onto one task, and AQE can never split a window
-    partition. Here each key's timeline is cut into ``n_chunks``
-    fixed-width TIME buckets (contiguous by construction, so sessions
-    can only be split at known boundaries):
-
-      phase 1 (parallel): window over (key, chunk) — local lag/gap,
-        provisional new-session flag (a chunk's first row can't see the
-        previous chunk yet), local running session index. The hot key
-        now spreads over up to n_chunks tasks.
-      boundary merge (tiny): one summary row per (key, chunk) — first/
-        last event time and local session count; a per-key window over
-        THESE resolves each chunk's first row (real new session iff the
-        cross-boundary gap exceeds gap_us) and the cumulative session
-        offset. Data volume is keys x chunks rows, not events.
-      phase 2 (free): join the corrections back and add — rows in a
-        chunk whose first session continues the previous chunk shift
-        down by one.
-
-    Exchanges: one shuffle on (key, chunk) — phase 1's window, the
-    summary groupBy AND the big side of the correction join all reuse
-    it (the join is on the same keys, so EnsureRequirements adds no
-    exchange on the event side; only the keys x chunks correction side
-    moves, and AQE broadcasts it when it is small — no broadcast HINT,
-    because at a billion keys it must stay a shuffle). Plus a
-    keys x chunks-sized shuffle for the merge window. The plain
-    operator's single shuffle is cheaper per byte; use this form when
-    key skew, not byte volume, bounds the wall clock.
-
-    ``bounds=(lo_us, hi_us)`` skips the min/max pre-pass when the
-    caller already knows the time range (e.g. a day partition).
-
-    Phase 1 is persisted (MEMORY_AND_DISK): the correction branch and
-    the main branch both consume it, so without a cache the scan+window
-    subtree evaluates TWICE (measured: the double-compute erased the
-    straggler win at 10M rows). The cache is events-sized and outlives
-    this call, because the returned plan is lazy and reads it. Callers
-    may release it with ``df.sparkSession.catalog.clearCache()`` or let
-    LRU eviction handle it.
-    """
-    eus = epoch_us(ts_col)
-    if bounds is not None:
-        lo, hi = bounds
-    else:
-        lo, hi = df.agg(F.min(eus), F.max(eus)).first()
-    if lo is None or hi == lo:
-        return sessionize(
-            df, ts_col, key_col, gap_us=gap_us, tiebreak=tiebreak
-        )
-    width = max((int(hi) - int(lo)) // int(n_chunks) + 1, 1)
-    chunk = ((eus - F.lit(int(lo))) / F.lit(width)).cast("long")
-    order = [F.col(ts_col)] + [F.col(c) for c in (tiebreak or [])]
-
-    w = Window.partitionBy(key_col, "__chunk").orderBy(*order)
-    staged = df.withColumn("__chunk", chunk)
-    gap = epoch_us(ts_col) - F.lag(epoch_us(ts_col)).over(w)
-    is_new = F.when(gap.isNull() | (gap > gap_us), 1).otherwise(0)
-    local = staged.withColumn(
-        "__local_idx",
-        F.sum(is_new).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    # the cache outlives this call: the returned lazy plan reads it
-    local = local.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # per-(key, chunk) summaries: same hash partitioning as the window,
-    # so Catalyst plans the groupBy with NO additional exchange
-    summaries = local.groupBy(key_col, "__chunk").agg(
-        F.min(epoch_us(ts_col)).alias("__first_us"),
-        F.max(epoch_us(ts_col)).alias("__last_us"),
-        F.max("__local_idx").alias("__n_sessions"),
-    )
-    wk = Window.partitionBy(key_col).orderBy("__chunk")
-    prev_last = F.lag("__last_us").over(wk)
-    first_is_new = prev_last.isNull() | (
-        F.col("__first_us") - prev_last > gap_us
-    )
-    adjusted = F.col("__n_sessions") - 1 + first_is_new.cast("long")
-    offset = F.coalesce(
-        F.sum(adjusted).over(
-            wk.rowsBetween(Window.unboundedPreceding, -1)
-        ),
-        F.lit(0),
-    )
-    corrections = summaries.select(
-        key_col,
-        "__chunk",
-        (offset + F.when(first_is_new, 0).otherwise(-1)).alias("__corr"),
-    )
-
-    out = (
-        local.join(corrections, on=[key_col, "__chunk"], how="inner")
-        .withColumn(SESSION_COL, F.col("__local_idx") + F.col("__corr"))
-        .drop("__chunk", "__local_idx", "__corr")
-    )
-    return out
-
-
 def sessionize_skew(
     df: DataFrame,
     ts_col: str,
@@ -199,10 +89,11 @@ def sessionize_skew(
     """``sessionize`` that survives hot keys WITHOUT taxing normal ones
     (VERDICT r10 #3, second iteration — the measured fix).
 
-    ``sessionize_two_phase`` chunks EVERY key, which at 2M distinct
-    keys makes the correction table keys x chunks rows (measured 3.6M —
-    its window and join back cost more than the straggler it removed).
-    Here only detected hot keys pay the two-phase machinery:
+    Chunking EVERY key (the first iteration, since deleted) made the
+    correction table keys x chunks rows at 2M distinct keys (measured
+    3.6M — its window and join back cost more than the straggler it
+    removed; SCALE.md "Hot-key sessionize"). Here only detected hot
+    keys pay the two-phase machinery:
 
       0. detection (one cheap agg): per-key count + time bounds,
          ``count >= hot_min_rows`` -> a driver-side hot-key list

@@ -171,8 +171,8 @@ def clean_corpus(
     if lm_reference is not None and max_avg_nll is not None:
         # CCNet fluency cut on the dedup survivors (running it after
         # dedup scores each retained doc once, never its duplicates);
-        # gram-less docs drop (no evidence -> not kept), matching
-        # pipeline/lm.py's perplexity_filter
+        # gram-less docs drop (no evidence -> not kept), CCNet's length
+        # floor
         from ncagg_spark.pipeline.lm import lm_score, ngram_lm
 
         lm = ngram_lm(lm_reference, n=lm_n, text_col=text_col)

@@ -477,8 +477,8 @@ def simhash_signatures(
     Relational formulation (same rationale as minhash_signatures): explode
     tokens -> one md5 per token occurrence -> groupBy(id) with 32 bit-vote
     sums (map-side combine) -> assemble the signature from the vote signs.
-    Duplicate tokens vote multiple times, matching the expression-level
-    simhash64() and the DuckDB oracle. Empty docs get simhash 0.
+    Duplicate tokens vote multiple times, matching the DuckDB oracle
+    (functions/hashing.py:sql_simhash64). Empty docs get simhash 0.
     """
     bits = 32
     base = _spread_small_input(df.select(id_col, text_col), id_col)

@@ -182,33 +182,6 @@ def lm_score(
     )
 
 
-def perplexity_filter(
-    docs: DataFrame,
-    lm: DataFrame,
-    *,
-    max_avg_nll: float,
-    n: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_model: bool = True,
-) -> DataFrame:
-    """Keep documents scoring at or below ``max_avg_nll`` — the CCNet
-    head/middle cut. Inner-joins the scores back, so gram-less docs drop
-    (no evidence -> not kept), matching CCNet's length floor."""
-    scores = lm_score(
-        docs,
-        lm,
-        n=n,
-        id_col=id_col,
-        text_col=text_col,
-        broadcast_model=broadcast_model,
-    )
-    keep = scores.filter(F.col("avg_nll") <= float(max_avg_nll)).select(
-        id_col, "avg_nll"
-    )
-    return docs.join(keep, on=id_col, how="inner")
-
-
 # --- DuckDB oracle fragments (string SQL twins of the expressions above)
 
 

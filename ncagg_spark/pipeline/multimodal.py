@@ -1,5 +1,5 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed via Arrow-batched mapInPandas.
+"""Multimodal column plumbing: image/audio/video as opaque binary columns,
+processed via Arrow-batched mapInPandas.
 
 The Spark-side architecture is real and tested — schemas, partitioning,
 UDF signatures, batch shapes. The actual media decoding is STUBBED
@@ -10,9 +10,7 @@ nothing about the distributed plan changes.
 
 Scale notes: media blobs are large and skewed — the iterator-of-batches
 mapInPandas shape keeps memory bounded to one Arrow batch;
-``spark.sql.execution.arrow.maxRecordsPerBatch`` caps batch size, and
-repartition by a content-hash prevents one task from holding all the big
-blobs.
+``spark.sql.execution.arrow.maxRecordsPerBatch`` caps batch size.
 """
 
 from __future__ import annotations
@@ -23,19 +21,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-# media metadata carried alongside every blob
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType()),  # image|audio|video
-        T.StructField("format", T.StringType()),  # png|jpeg|wav|mp4|...
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-    ]
-)
 
 IMAGE_FEATURE_SCHEMA = T.StructType(
     [
@@ -97,102 +83,4 @@ def extract_features(
 
     return df.select(id_col, blob_col).mapInPandas(
         run, schema=IMAGE_FEATURE_SCHEMA
-    )
-
-
-def balance_by_content(
-    df: DataFrame, blob_col: str = "content", partitions: int | None = None
-) -> DataFrame:
-    """Repartition by content hash so large blobs spread evenly (media
-    sizes are heavy-tailed; path- or id-ordered layout concentrates them).
-    """
-    h = F.xxhash64(F.col(blob_col))
-    return df.repartition(partitions or df.sparkSession.sparkContext.defaultParallelism, h)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
-
-def _fake_resize(blob: bytes, w: int, h: int) -> bytes:
-    """Deterministic stand-in for a real image resize: the bytes pass
-    through untouched (identity transform) — stable and unit-testable;
-    only the metadata changes."""
-    return blob
-
-
-def _real_resize(blob: bytes, w: int, h: int) -> bytes:
-    raise NotImplementedError(
-        "image resizing requires an imaging library not present in this "
-        "environment; plug a real resizer in here (signature: "
-        "(bytes, width, height) -> bytes)"
-    )
-
-
-def resize_images(
-    df: DataFrame,
-    *,
-    target: tuple[int, int] = (224, 224),
-    id_col: str = "media_id",
-    blob_col: str = "content",
-    resizer: str = "fake",
-) -> DataFrame:
-    """mapInPandas image resize over binary media columns: every blob is
-    rewritten to the target (width, height). Same bounded-memory Arrow
-    iterator shape as extract_features; the pixel transform itself is the
-    stubbed step (``resizer="real"`` raises until an imaging library is
-    plugged in)."""
-    resize = {"fake": _fake_resize, "real": _real_resize}[resizer]
-    w, h = int(target[0]), int(target[1])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        resize(bytes(b), w, h) for b in pdf[blob_col]
-                    ],
-                    "width": w,
-                    "height": h,
-                }
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(
-        run, schema=RESIZED_SCHEMA
-    )
-
-
-def frame_sample_plan(
-    df: DataFrame,
-    *,
-    id_col: str = "media_id",
-    meta_col: str = "meta",
-    every_ms: int = 1000,
-) -> DataFrame:
-    """Video frame-sampling *plan*: explode each video into (media_id,
-    frame_ts_ms) rows at a fixed stride using the duration metadata — the
-    distributed fan-out is real; the per-frame decode is the stubbed step.
-
-    A frame is planned at every t = k*every_ms with t < duration (the
-    final partial interval is sampled too); zero/negative/null duration
-    yields no frames for that row.
-    """
-    n = F.ceil(
-        F.col(f"{meta_col}.duration_ms") / F.lit(float(every_ms))
-    ).cast("long")
-    starts = F.when(
-        n > 0, F.sequence(F.lit(0).cast("long"), n - 1)
-    ).otherwise(F.array().cast("array<long>"))
-    return df.select(
-        F.col(id_col),
-        F.explode(
-            F.transform(starts, lambda i: i * every_ms)
-        ).alias("frame_ts_ms"),
     )

@@ -1712,9 +1712,8 @@ def granule_parse_fn(
     record_dim: str | None = None,
     canon_units: dict[str, str] | None = None,
 ):
-    """The (path, content) -> rows decode closure — shared by the batch
-    reader above and the streaming source
-    (streaming/regularize.py:incremental_aggregate_nc).
+    """The (path, content) -> rows decode closure of the batch reader
+    above.
 
     ``canon_units`` maps CF time columns to the canonical units string
     the caller will decode with; granules declaring different units are

@@ -176,22 +176,3 @@ def load_table(
             if hi_us is not None:
                 df = df.filter(c < F.timestamp_micros(F.lit(hi_us)))
     return normalize_ntz_cols(convert_nanos_cols(df, nanos))
-
-
-def load_sf_tables(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> dict[str, DataFrame]:
-    """Load the driver's star-schema tables from an sf directory."""
-    names = names or [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    return {n: load_table(spark, f"{sf_dir}/{n}.parquet") for n in names}

@@ -159,30 +159,3 @@ def write_aggregate(
             sidecar = sidecar["global"]
         with open(os.path.join(path, "_attributes.json"), "w") as f:
             json.dump(sidecar, f, indent=2, default=str)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    *,
-    n_buckets: int = 32,
-    sort_by: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist a table hash-bucketed by the join key — the co-located-join
-    layout for 100 TB fact tables: two tables bucketed the same way join
-    with NO Exchange on either side (the shuffle is paid once at write
-    time, then amortized over every subsequent join/aggregation on the
-    key). ``sort_by`` additionally sorts within buckets, enabling
-    sort-merge joins without a per-query sort.
-
-    Uses the session catalog's managed-table path (bucket metadata lives
-    in the catalog; plain parquet files cannot carry it).
-    """
-    w = df.write.mode(mode).format("parquet")
-    if sort_by:
-        w = w.bucketBy(n_buckets, key).sortBy(sort_by)
-    else:
-        w = w.bucketBy(n_buckets, key)
-    w.saveAsTable(table)

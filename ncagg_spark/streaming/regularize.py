@@ -17,16 +17,15 @@ Two composable layers:
     streaming aggregation (state = one row per open slot).
   * ``incremental_aggregate`` — foreachBatch merge: every micro-batch
     re-runs the BATCH regularizer over (existing real records + new
-    granule rows) and rewrites the output. At 100 TB you partition the
-    output by day and rewrite only touched days (dynamic partition
-    overwrite); here the whole bounded window is one day, so the rewrite
-    is the day.
+    granule rows) and rewrites the whole output, so per-batch work is
+    O(window). The bounded window here is one day, so the rewrite is
+    the day; a longer window would want a per-day layout that rewrites
+    only the days a batch touches.
 """
 
 from __future__ import annotations
 
 from dataclasses import replace
-from datetime import datetime, timezone
 from typing import Any
 
 from pyspark.errors import AnalysisException
@@ -37,7 +36,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ncagg_spark.config import AggregationConfig
 from ncagg_spark.functions.time import epoch_us
-from ncagg_spark.operators.dedup import BUCKET_COL, cadence_bucket
+from ncagg_spark.operators.dedup import BUCKET_COL
 from ncagg_spark.operators.gapfill import FILL_FLAG_COL
 from ncagg_spark.operators.normalize import normalize_fills
 from ncagg_spark.operators.projection import (
@@ -205,82 +204,6 @@ def incremental_aggregate(
     )
 
 
-def incremental_aggregate_nc(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    cfg: AggregationConfig,
-    *,
-    schema_sample: str,
-    anchor: str = "grid",
-    decoder: str = "auto",
-    available_now: bool = True,
-    extra_stream_options: dict[str, Any] | None = None,
-) -> StreamingQuery:
-    """``incremental_aggregate`` over a directory NATIVE `.nc` granules
-    land in — the reference's actual operational pattern (a cron drops a
-    new granule; the day aggregate gets rebuilt; ncagg/README.md's NCEI
-    workflow).
-
-    Each new `.nc` file is one micro-batch input: the binaryFile stream
-    hands (path, bytes) to the same mapInPandas decode as the batch
-    source, CF time decodes to TimestampType using the sample granule's
-    units attribute, then the standard merge runs. The sample granule
-    (one header read) fixes the schema for the whole stream.
-    """
-    from ncagg_spark.functions.time import cf_to_timestamp
-    from ncagg_spark.sources.nc_granules import (
-        granule_parse_fn,
-        nc_attributes,
-        nc_schema,
-    )
-
-    schema = nc_schema(schema_sample, decoder=decoder)
-    # binaryFile's schema is fixed but the streaming source requires it
-    # stated explicitly
-    bin_schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("modificationTime", T.TimestampType()),
-            T.StructField("length", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    stream = (
-        spark.readStream.format("binaryFile")
-        .schema(bin_schema)
-        .option("pathGlobFilter", "*.nc")
-        .load(input_path)
-        .select("path", "content")
-        .mapInPandas(granule_parse_fn(schema, decoder), schema=schema)
-    )
-    units = (
-        nc_attributes(schema_sample, decoder=decoder)["variables"]
-        .get(cfg.index_by, {})
-        .get("units")
-    )
-    if (
-        units
-        and isinstance(units, str)
-        and " since " in units
-        and schema[cfg.index_by].dataType.typeName() != "timestamp"
-    ):
-        stream = stream.withColumn(
-            cfg.index_by, cf_to_timestamp(cfg.index_by, units)
-        )
-    return _run_incremental(
-        spark,
-        stream,
-        output_path,
-        checkpoint_path,
-        cfg,
-        anchor=anchor,
-        available_now=available_now,
-        extra_stream_options=extra_stream_options,
-    )
-
-
 def _run_incremental(
     spark: SparkSession,
     stream: DataFrame,
@@ -323,137 +246,6 @@ def _run_incremental(
         ).sortWithinPartitions(cfg.index_by).write.mode("overwrite").parquet(
             output_path
         )
-
-    writer = stream.writeStream.foreachBatch(merge_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    for k, v in (extra_stream_options or {}).items():
-        writer = writer.option(k, v)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def incremental_aggregate_partitioned(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    schema: T.StructType,
-    cfg: AggregationConfig,
-    *,
-    available_now: bool = True,
-    extra_stream_options: dict[str, Any] | None = None,
-) -> StreamingQuery:
-    """The 100 TB form of ``incremental_aggregate``: output is laid out
-    under ``dt=YYYY-MM-DD/`` and each micro-batch rewrites ONLY the days
-    its new records touch (dynamic partition overwrite) — per-batch work
-    is O(touched days), not O(window).
-
-    Grid-anchored only, and the cadence step must divide a day evenly:
-    under those conditions every slot is day-local, so per-day
-    regularization is exactly the whole-window result restricted to that
-    day. Reading back a touched day's REAL records is partition-pruned
-    by ``dt``; untouched day partitions are never read or written.
-    """
-    from ncagg_spark.sources.writer import DATE_PARTITION_COL
-
-    ix = cfg.index_by
-    if cfg.min_us is None or cfg.max_us is None:
-        raise ValueError("partitioned incremental aggregation needs bounds")
-    day_us = 86_400_000_000
-    if day_us % cfg.step_us != 0:
-        raise ValueError(
-            "cadence step must divide a day evenly for day-local rewrite "
-            f"(step_us={cfg.step_us})"
-        )
-    if cfg.min_us % day_us != 0:
-        raise ValueError("min_bound must align to a UTC day boundary")
-    if getattr(cfg, "bucket_phase", 0.0):
-        # nearest-slot rounding can carry a record across the day
-        # boundary (t near midnight rounds into the NEXT day's slot 0);
-        # day-local regularization would clamp it into the wrong slot
-        raise ValueError(
-            "day-local rewrite requires bucket_phase=0 (floor slots)"
-        )
-
-    stream = stream_granules(spark, input_path, schema)
-
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        batch, merge_cfg = _project_new_rows(batch, cfg)
-        # derive touched days from raw epoch micros, NOT to_date (which
-        # applies the session timezone and would mis-bucket records near
-        # midnight on non-UTC sessions while bounds below are UTC)
-        day_idx = [
-            r["d"]
-            for r in batch.select(
-                F.floor(epoch_us(ix) / F.lit(day_us))
-                .cast("long")
-                .alias("d")
-            )
-            .distinct()
-            .collect()
-            if r["d"] is not None
-        ]
-        days = [
-            datetime.fromtimestamp(i * 86_400, tz=timezone.utc).strftime(
-                "%Y-%m-%d"
-            )
-            for i in day_idx
-        ]
-        if not days:
-            return
-        try:
-            existing = spark.read.parquet(output_path).filter(
-                F.col(DATE_PARTITION_COL).isin(days)
-            )
-            prev = (
-                existing.filter(~F.col(FILL_FLAG_COL))
-                .drop(FILL_FLAG_COL, DATE_PARTITION_COL, BUCKET_COL)
-                .localCheckpoint(eager=True)
-            )
-        except AnalysisException as e:
-            # ONLY path-not-found means "first batch"; other failures
-            # must abort rather than overwrite accumulated partitions
-            if not _is_path_not_found(e):
-                raise
-            prev = None
-        data = batch if prev is None else prev.unionByName(
-            batch.select(*prev.columns)
-        )
-        if len(days) > 1:
-            # the per-day loop filters `data` once per touched day —
-            # materialize it once instead of re-evaluating the
-            # union + batch source D times
-            data = data.localCheckpoint(eager=True)
-        for day in sorted(days):
-            lo = int(
-                datetime.strptime(day, "%Y-%m-%d")
-                .replace(tzinfo=timezone.utc)
-                .timestamp()
-                * 1_000_000
-            )
-            day_cfg = replace(
-                merge_cfg,
-                min_bound=max(lo, cfg.min_us) / 1e6,
-                max_bound=min(lo + day_us, cfg.max_us) / 1e6,
-            )
-            day_rows = data.filter(
-                (F.col(ix) >= F.timestamp_micros(F.lit(day_cfg.min_us)))
-                & (F.col(ix) < F.timestamp_micros(F.lit(day_cfg.max_us)))
-            )
-            out = regularize(spark, day_rows, day_cfg, anchor="grid")
-            (
-                out.withColumn(DATE_PARTITION_COL, F.lit(day))
-                .repartitionByRange(
-                    max(spark.sparkContext.defaultParallelism // 8, 1), ix
-                )
-                .sortWithinPartitions(ix)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(DATE_PARTITION_COL)
-                .parquet(output_path)
-            )
 
     writer = stream.writeStream.foreachBatch(merge_batch).option(
         "checkpointLocation", checkpoint_path

@@ -1,114 +1,31 @@
 """Custom stateful streaming operators via applyInPandasWithState —
 the piece SURVEY.md §7.4 flags as the only genuinely non-built-in
-capability: reacting to the ABSENCE of data (gap detection / empty-window
-emission) online.
+capability: reacting to the ABSENCE of data (empty-window emission)
+online.
 
-``detect_gaps`` maintains, per stream key, the timestamp of the last
-record seen; whenever the next record arrives more than ``dt_max`` after
-it (the reference's gap trigger, ncagg/aggregator.py:164-195 applied
-online), it emits one gap row describing the missing span. State is one
-row per key — bounded. A ProcessingTimeTimeout flushes the trailing gap
-when a key goes quiet: the timeout branch emits an OPEN gap row
-(``gap_end``/``missing_slots`` null — the span has no observed end) and
-drops the key's state.
-
-``fill_gaps_online`` goes one step further — the batch
-``gap_fill(anchor="previous")`` rule online: real records pass through
-and missed cadence slots are emitted as synthetic ``is_fill`` rows as
-soon as the record closing the gap arrives (the "streaming empty
-windows" capability SURVEY §7.5 deferred).
+``fill_gaps_online`` is the batch ``gap_fill(anchor="previous")`` rule
+online. Per stream key it keeps the last record's timestamp; whenever
+the next record arrives more than ``dt_max`` after it (the reference's
+gap trigger, ncagg/aggregator.py:164-195 applied online), the missed
+cadence slots are emitted as synthetic ``is_fill`` rows as soon as that
+record arrives (the "streaming empty windows" capability SURVEY §7.5
+deferred). Real records pass through. State is one row per key in
+arrival order (``make_gap_filler``), or that row plus the records still
+above the watermark in event-time order (``make_ordered_gap_filler``).
 
 Arrow-batched (pandas in/out); no row-at-a-time Python.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+from typing import Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-GAP_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.StringType()),
-        T.StructField("gap_start", T.TimestampType()),
-        T.StructField("gap_end", T.TimestampType()),
-        T.StructField("missing_slots", T.LongType()),
-    ]
-)
-
 STATE_SCHEMA = T.StructType([T.StructField("last_us", T.LongType())])
-
-
-def make_gap_detector(
-    step_us: int, dt_max_s: float, *, use_timeout: bool = True
-):
-    """Returns the applyInPandasWithState function for a given cadence.
-
-    Emits (key, gap_start, gap_end, missing_slots) whenever consecutive
-    records within a key are more than dt_max apart; gap_start/gap_end
-    are the last-seen and next-seen record timestamps. When the key times
-    out (quiet for > dt_max processing time) the pending trailing gap is
-    flushed as an open row: gap_start = last seen, gap_end and
-    missing_slots null, and the key's state is removed.
-    """
-    dt_max_us = int(round(dt_max_s * 1_000_000))
-    timeout_ms = max(1, dt_max_us // 1000)
-
-    def detect(
-        key: Tuple[str],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            last_us = state.get[0] if state.exists else None
-            state.remove()
-            if last_us is not None:
-                yield pd.DataFrame(
-                    [
-                        {
-                            "key": key[0],
-                            "gap_start": pd.Timestamp(last_us * 1000),
-                            "gap_end": None,
-                            "missing_slots": None,
-                        }
-                    ]
-                )
-            return
-        last_us = state.get[0] if state.exists else None
-        out: list[dict[str, Any]] = []
-        ts_all = []
-        for pdf in pdfs:
-            ts_all.append(pdf["ts"])
-        if ts_all:
-            ts = pd.concat(ts_all).dropna().sort_values()
-            us = (ts.astype("int64") // 1000).tolist()
-            for u in us:
-                if last_us is not None and u - last_us > dt_max_us:
-                    out.append(
-                        {
-                            "key": key[0],
-                            "gap_start": pd.Timestamp(last_us * 1000),
-                            "gap_end": pd.Timestamp(u * 1000),
-                            # floor(x+0.5) to match the batch gap_fill
-                            # slot rule (round() is half-to-even)
-                            "missing_slots": max(
-                                1,
-                                int((u - last_us) / step_us + 0.5) - 1,
-                            ),
-                        }
-                    )
-                last_us = u if last_us is None else max(last_us, u)
-            state.update((last_us,))
-            if use_timeout:
-                state.setTimeoutDuration(timeout_ms)
-        if out:
-            yield pd.DataFrame(out)
-
-    return detect
-
 
 FILL_SCHEMA = T.StructType(
     [
@@ -145,8 +62,7 @@ def make_gap_filler(
     ``max_fill_per_gap`` bounds the rows a single pathological gap can
     emit into one micro-batch (a key silent for a month at 1 Hz would
     otherwise synthesize 2.6M rows in one task). Trailing fills for a
-    quiet key are NOT synthesized — online they are unbounded; pair with
-    ``detect_gaps`` whose timeout reports the open gap instead. State is
+    quiet key are NOT synthesized — online they are unbounded. State is
     one row per key.
     """
     dt_max_us = int(round(dt_max_s * 1_000_000))
@@ -488,45 +404,4 @@ def fill_gaps_online(
             if timeout == "processing"
             else GroupStateTimeout.NoTimeout
         ),
-    )
-
-
-def detect_gaps(
-    grouped_stream: DataFrame,
-    *,
-    key_col: str = "event_type",
-    step_us: int = 1_000_000,
-    dt_max_s: float = 1.2,
-    output_mode: str = "append",
-    timeout: str = "processing",
-) -> DataFrame:
-    """Wire the gap detector onto a (possibly streaming) DataFrame with
-    columns (key_col, ts). Returns the gap-event DataFrame.
-
-    ``timeout`` as in ``fill_gaps_online``: "processing" (default) emits
-    open trailing gaps for quiet keys via ProcessingTimeTimeout — but a
-    query with that timeout registered NEVER self-terminates under
-    trigger(availableNow) (Spark keeps scheduling empty state-cleanup
-    batches); use "none" for bounded runs that don't need the trailing
-    flush, or stop the query explicitly once the sink has what you need.
-    """
-    if timeout not in ("processing", "none"):
-        raise ValueError(f"unknown timeout mode: {timeout!r}")
-    fn = make_gap_detector(
-        step_us, dt_max_s, use_timeout=timeout == "processing"
-    )
-    return (
-        grouped_stream.selectExpr(f"{key_col} AS key", "ts")
-        .groupBy("key")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=GAP_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode=output_mode,
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout == "processing"
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
     )

@@ -12,8 +12,11 @@ a handful of keys) gets zero extra parallelism from partitions beyond
 the key count, only extra per-batch fixed cost — at ANY scale, 100 TB
 included, because the cost is per-partition-per-batch, not per-row.
 
-``stream_shuffle_partitions`` scopes the conf to one streaming run and
-restores the session value afterwards, so batch queries in the same
+``stream_shuffle_partitions`` scopes the conf to one streaming run
+through ``tuning.scoped_shuffle_partitions``, which also pins AQE's
+initial width (so every micro-batch's STATELESS exchanges are planned
+at the same key-sized width, not at the session's high adaptive
+ceiling) and restores both afterwards, so batch queries in the same
 session keep the engine's scale-adaptive default. The default (8) is
 sized to the engine's granule streams (<= 5 distinct keys, next power
 of two above, headroom for skew); production streams with large key
@@ -30,8 +33,7 @@ from typing import Iterator
 
 from pyspark.sql import SparkSession
 
-_KEY = "spark.sql.shuffle.partitions"
-_INITIAL_KEY = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+from ncagg_spark.tuning import scoped_shuffle_partitions
 
 
 def default_stream_state_partitions() -> int:
@@ -49,20 +51,5 @@ def stream_shuffle_partitions(
     bracket). Restores the prior session value on exit, error included.
     """
     n = int(n or default_stream_state_partitions())
-    old = spark.conf.get(_KEY)
-    old_initial = spark.conf.get(_INITIAL_KEY, None)
-    spark.conf.set(_KEY, str(n))
-    # pin AQE's initial width too (r16): state partitioning reads
-    # spark.sql.shuffle.partitions directly, but the STATELESS
-    # exchanges of every micro-batch would otherwise be planned at the
-    # session's high adaptive ceiling, paying plan/coalesce overhead
-    # per batch for key-sized data
-    spark.conf.set(_INITIAL_KEY, str(n))
-    try:
+    with scoped_shuffle_partitions(spark, n):
         yield n
-    finally:
-        spark.conf.set(_KEY, old)
-        if old_initial is None:
-            spark.conf.unset(_INITIAL_KEY)
-        else:
-            spark.conf.set(_INITIAL_KEY, old_initial)

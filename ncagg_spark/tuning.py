@@ -75,16 +75,32 @@ def materialized(
 
 def plan_bytes(df: DataFrame) -> int | None:
     """Optimizer size estimate for ``df``'s plan (bytes), or ``None``
-    with one logged warning when the estimate fails. Callers keep their
-    default path on ``None``: a failed estimate must not read as "huge"
-    and switch every size gate on."""
+    with one logged warning when the estimate fails or the size is
+    unknown. Spark sizes a relation it cannot measure (an RDD-backed
+    ``createDataFrame``, say) at ``spark.sql.defaultSizeInBytes``
+    (2^63 - 1 by default), so a plan over one estimates at or above
+    that conf however few rows it holds; such an estimate is unknown.
+    Callers keep their default path on ``None``: a failed or unknown
+    estimate must not read as "huge" and switch every size gate on."""
     try:
-        return int(
+        est = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+        unknown = int(
+            df.sparkSession._jsparkSession.sessionState()
+            .conf()
+            .defaultSizeInBytes()
         )
     except Exception as e:
         _log.warning("plan_bytes: size estimate failed: %s", e)
         return None
+    if est >= unknown:
+        _log.warning(
+            "plan_bytes: size unknown (estimate %d >= "
+            "spark.sql.defaultSizeInBytes)", est
+        )
+        return None
+    return est
 
 
 _INITIAL_KEY = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"

@@ -1,6 +1,6 @@
-"""Multimodal plumbing: Arrow mapInPandas feature extraction, resize,
-frame-sample fan-out — the Spark-side architecture is real (schemas,
-batching, partitioning); the codec steps are stubbed.
+"""Multimodal plumbing: Arrow mapInPandas feature extraction — the
+Spark-side architecture is real (schemas, batching); the decoder is
+stubbed.
 """
 
 from __future__ import annotations
@@ -8,16 +8,8 @@ from __future__ import annotations
 import hashlib
 
 import pytest
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ncagg_spark.pipeline.multimodal import (
-    FEATURE_DIM,
-    balance_by_content,
-    extract_features,
-    frame_sample_plan,
-    resize_images,
-)
+from ncagg_spark.pipeline.multimodal import FEATURE_DIM, extract_features
 
 
 @pytest.fixture()
@@ -44,60 +36,3 @@ def test_extract_features_deterministic_and_shaped(media):
 def test_real_decoder_raises_not_implemented(media):
     with pytest.raises(Exception, match="NotImplementedError|media decoding"):
         extract_features(media, decoder="real").collect()
-
-
-def test_resize_images_rewrites_metadata(media):
-    out = resize_images(media, target=(224, 160))
-    assert out.schema["content"].dataType == T.BinaryType()
-    got = {r["media_id"]: r for r in out.collect()}
-    assert len(got) == 8
-    for i in range(8):
-        assert (got[i]["width"], got[i]["height"]) == (224, 160)
-        # fake resizer is the identity on bytes
-        assert bytes(got[i]["content"]) == bytes([i] * (100 + i))
-
-
-def test_real_resizer_raises(media):
-    with pytest.raises(Exception, match="NotImplementedError|image resizing"):
-        resize_images(media, resizer="real").collect()
-
-
-def test_frame_sample_plan_fanout(spark):
-    rows = [
-        # every t = k*1000 < 3500, incl. the final partial interval
-        (1, ("video", "mp4", 1920, 1080, 3500)),
-        (2, ("video", "mp4", 640, 480, 500)),     # short clip: 1 frame
-        (3, ("video", "mp4", 640, 480, 0)),       # empty media: no frames
-        (4, ("video", "mp4", 640, 480, None)),    # no duration: no frames
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField(
-                "meta",
-                T.StructType(
-                    [
-                        T.StructField("media_type", T.StringType()),
-                        T.StructField("format", T.StringType()),
-                        T.StructField("width", T.IntegerType()),
-                        T.StructField("height", T.IntegerType()),
-                        T.StructField("duration_ms", T.LongType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-    df = spark.createDataFrame(rows, schema)
-    got = frame_sample_plan(df, every_ms=1000).collect()
-    by_id = {}
-    for r in got:
-        by_id.setdefault(r["media_id"], []).append(r["frame_ts_ms"])
-    assert sorted(by_id[1]) == [0, 1000, 2000, 3000]
-    assert by_id[2] == [0]
-    assert 3 not in by_id and 4 not in by_id
-
-
-def test_balance_by_content_spreads_blobs(media):
-    out = balance_by_content(media, partitions=4)
-    assert out.rdd.getNumPartitions() == 4
-    assert out.count() == 8

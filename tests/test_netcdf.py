@@ -274,49 +274,6 @@ def test_cli_nc_single_file_output(spark, tmp_path):
     assert f.numrecs == 86400
 
 
-@pytest.mark.slow
-def test_incremental_aggregate_nc_stream(spark, tmp_path):
-    """Streaming .nc ingestion — the reference's operational pattern:
-    granules land in a directory over time, the day aggregate is kept
-    current. Restart resumes from the checkpoint without double-counting."""
-    import shutil
-
-    from ncagg_spark.streaming.regularize import incremental_aggregate_nc
-
-    inp = tmp_path / "incoming"
-    inp.mkdir()
-    out = str(tmp_path / "agg")
-    ckpt = str(tmp_path / "ckpt")
-    sample = _granule(tmp_path / "sample.nc", T0, 1)
-    cfg = AggregationConfig(
-        index_by="time",
-        cadence_hz=1.0,
-        min_bound=T0,
-        max_bound=T0 + 30,
-    )
-
-    _granule(inp / "g0.nc", T0, 10)
-    q = incremental_aggregate_nc(
-        spark, str(inp), out, ckpt, cfg, schema_sample=sample
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    assert got.count() == 30
-    assert got.filter(~F.col("is_fill")).count() == 10
-
-    _granule(inp / "g1.nc", T0 + 20, 5)
-    q2 = incremental_aggregate_nc(
-        spark, str(inp), out, ckpt, cfg, schema_sample=sample
-    )
-    q2.awaitTermination(120)
-    rows = spark.read.parquet(out).orderBy("time").collect()
-    assert len(rows) == 30
-    real = [i for i, r in enumerate(rows) if not r["is_fill"]]
-    assert real == list(range(0, 10)) + list(range(20, 25))
-    assert rows[22]["value"] == 2.0  # second granule's values merged
-    shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def test_write_nc_granules_distributed_export(spark, tmp_path):
     """Re-granulation: a 3-day aggregate exports to one .nc per UTC day,
     each written by its own task; reading the granules back reproduces

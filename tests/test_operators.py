@@ -119,37 +119,6 @@ def test_dedup_deterministic_under_shuffle(spark):
     assert out[0]["id"] == best[1]
 
 
-def test_salted_join_matches_plain_join(spark):
-    from ncagg_spark.operators.skew import salted_join
-
-    # one hot key (90% of rows) + a long tail
-    left = spark.createDataFrame(
-        [(0 if i % 10 else i, i) for i in range(200)], "k long, lid long"
-    )
-    right = spark.createDataFrame([(i, i * 10.0) for i in range(20)], "k long, v double")
-    plain = {(r["lid"], r["v"]) for r in left.join(right, "k").collect()}
-    salted = {
-        (r["lid"], r["v"])
-        for r in salted_join(left, right, "k", n_salts=4).collect()
-    }
-    assert salted == plain
-
-    # left join keeps unmatched rows exactly once
-    plain_l = sorted(
-        (r["lid"], r["v"]) for r in left.join(right, "k", "left").collect()
-    )
-    salted_l = sorted(
-        (r["lid"], r["v"])
-        for r in salted_join(left, right, "k", n_salts=4, how="left").collect()
-    )
-    assert salted_l == plain_l
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        salted_join(left, right, "k", how="full")
-
-
 def test_promote_fixed_dim(spark):
     from ncagg_spark.operators.projection import promote_fixed_dim
 
@@ -209,61 +178,3 @@ def test_cadence_bucket_phase_nearest_slot(spark):
     ]
     assert floor_b == [0, 1, 2, 2]
     assert near_b == [1, 1, 2, 3]
-
-
-def test_salted_join_bounds_hot_key_partitions(spark):
-    """VERDICT r9 #2: the salted layout must BOUND the straggler, pinned
-    deterministically. pmod(hash(keys), P) replicates Spark's
-    HashPartitioning exactly (same Murmur3), so the per-partition row
-    counts below are the rows each shuffle task would receive. On a
-    fixture where one key owns 30% of all rows: the plain layout's
-    hottest partition is >5x the median (the straggler the skew tool
-    measures — 16.7x records / 8.5s wall at sf10 scale, SCALE.md); the
-    salted layout must keep every partition under 2x the median, and
-    the bound must TIGHTEN as n_salts grows (hot share per (key, salt)
-    group shrinks, so salt-group collisions cost less — measured
-    max/median 2.7 -> 1.76 -> 1.45 -> 1.21 for 16/64/128/256 salts;
-    size n_salts to the skew, not a constant). Wall-time evidence lives
-    in tools/skew_stress.py + SCALE.md; this pins the layout property
-    that produces it."""
-    from pyspark.sql import functions as F
-
-    n, p = 100_000, 32
-    ev = spark.range(n).select(
-        F.col("id").alias("event_id"),
-        F.when(F.col("id") % 10 < 3, F.lit(777))
-        .otherwise(F.col("id") % 5000)
-        .alias("user_id"),
-    )
-
-    def partition_counts(df, cols):
-        return [
-            r["c"]
-            for r in df.groupBy(
-                F.pmod(F.hash(*[F.col(c) for c in cols]), F.lit(p)).alias(
-                    "pid"
-                )
-            )
-            .agg(F.count("*").alias("c"))
-            .collect()
-        ]
-
-    plain = sorted(partition_counts(ev, ["user_id"]))
-    med_plain = plain[len(plain) // 2]
-    assert plain[-1] > 5 * med_plain, (plain[-1], med_plain)
-
-    from ncagg_spark.operators.skew import SALT_COL
-
-    maxima = {}
-    for n_salts in (16, 64):
-        salted = ev.withColumn(
-            SALT_COL, (F.rand(seed=42) * n_salts).cast("int")
-        )
-        s_counts = sorted(partition_counts(salted, ["user_id", SALT_COL]))
-        med_s = s_counts[len(s_counts) // 2]
-        maxima[n_salts] = (s_counts[-1], med_s)
-    # at 64 salts every partition is within 2x the median (no straggler)
-    mx, med = maxima[64]
-    assert mx <= 2 * med, maxima
-    # and the bound tightens with the salt count
-    assert maxima[64][0] < maxima[16][0], maxima

@@ -1,8 +1,7 @@
 """Regression tests for the core-operator review findings: watermarked
 append-mode streaming dedup, incremental-merge schema projection,
 unique_list null-skip, integer-index epoch floor, tie-broken global
-positions, multidim cadence validation, and the partitioned-merge
-bucket_phase guard.
+positions and multidim cadence validation.
 """
 
 from __future__ import annotations
@@ -17,7 +16,6 @@ from ncagg_spark.operators.multidim import regularize_multidim
 from ncagg_spark.operators.normalize import drop_invalid_index
 from ncagg_spark.streaming.regularize import (
     incremental_aggregate,
-    incremental_aggregate_partitioned,
     stream_dedup_cadence,
     stream_granules,
 )
@@ -133,24 +131,6 @@ def test_incremental_merge_with_rename_and_alt(spark, tmp_path):
     # full slot -> value mapping: values in the WRONG slots must fail
     assert real == {0: 1.0, 2: 3.0}
     assert out.count() == 10  # full grid with fills
-
-
-def test_partitioned_merge_rejects_phase(spark, tmp_path):
-    with pytest.raises(ValueError, match="bucket_phase"):
-        incremental_aggregate_partitioned(
-            spark,
-            str(tmp_path / "in"),
-            str(tmp_path / "out"),
-            str(tmp_path / "ck"),
-            SCHEMA,
-            AggregationConfig(
-                index_by="ts",
-                cadence_hz=1.0,
-                min_bound=T0_US / 1e6,
-                max_bound=(T0_US + 86_400 * 1_000_000) / 1e6,
-                bucket_phase=0.5,
-            ),
-        )
 
 
 def test_unique_list_skips_missing_files(spark):

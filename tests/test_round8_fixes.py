@@ -71,18 +71,6 @@ def test_gap_filler_half_step_gap_uses_floor_rule():
     ]
 
 
-def test_gap_detector_half_step_missing_slots_floor_rule():
-    from ncagg_spark.streaming.stateful import make_gap_detector
-
-    detect = make_gap_detector(1_000_000, 1.2)
-    st = _FakeState(value=(T0_US,))
-    pdf = pd.DataFrame(
-        {"ts": pd.to_datetime([(T0_US + 2_500_000) * 1000])}
-    )
-    (out,) = list(detect(("A",), iter([pdf]), st))
-    assert int(out.iloc[0]["missing_slots"]) == 2
-
-
 def test_queries_window_overflow_raises_not_assert(monkeypatch):
     import __spark_entry__ as entry
 

@@ -14,7 +14,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from ncagg_spark.pipeline.lm import lm_score, ngram_lm, perplexity_filter
+from ncagg_spark.pipeline.lm import lm_score, ngram_lm
 from ncagg_spark.pipeline.search import bm25_scores, bm25_topk
 from ncagg_spark.pipeline.semdedup import (
     semantic_dedup,
@@ -252,10 +252,9 @@ def test_perplexity_filter_keeps_fluent_docs(spark):
         r["doc_id"]: r["avg_nll"]
         for r in lm_score(docs, lm, n=2).collect()
     }
-    assert scores[0] < scores[1]  # in-domain text scores better
-    cut = (scores[0] + scores[1]) / 2
-    kept = perplexity_filter(docs, lm, max_avg_nll=cut)
-    assert [r["doc_id"] for r in kept.collect()] == [0]
+    # in-domain text scores better, so an avg_nll cut keeps it (the cut
+    # itself runs in clean_corpus, see test_corpus.py)
+    assert scores[0] < scores[1]
 
 
 def test_lm_score_partition_invariant(spark):

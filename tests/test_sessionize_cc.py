@@ -7,7 +7,11 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from ncagg_spark.operators.sessionize import session_summary, sessionize
+from ncagg_spark.operators.sessionize import (
+    session_summary,
+    sessionize,
+    sessionize_skew,
+)
 from ncagg_spark.pipeline.dedup import connected_components
 
 UTC = dt.timezone.utc
@@ -256,9 +260,11 @@ def test_cc_agrees_with_union_find_oracle(spark):
     assert got == expect
 
 
-def _cmp_two_phase(spark, rows, gap_us, n_chunks, tiebreak=None):
-    from ncagg_spark.operators.sessionize import sessionize_two_phase
-
+def _cmp_two_phase(
+    spark, rows, gap_us, n_chunks, tiebreak=None, bounds=None
+):
+    """``sessionize_skew`` with EVERY key routed hot (so every key takes
+    the chunk-local + correction-join path) == plain ``sessionize``."""
     df = spark.createDataFrame(
         rows, "user_id long, event_id long, ts timestamp"
     )
@@ -273,13 +279,15 @@ def _cmp_two_phase(spark, rows, gap_us, n_chunks, tiebreak=None):
     got = sorted(
         map(
             tuple,
-            sessionize_two_phase(
+            sessionize_skew(
                 df,
                 "ts",
                 "user_id",
                 gap_us=gap_us,
                 n_chunks=n_chunks,
                 tiebreak=tiebreak,
+                hot_keys=sorted({r[0] for r in rows}),
+                bounds=bounds,
             )
             .select(*[f.name for f in df.schema.fields], "session_idx")
             .collect(),
@@ -289,10 +297,11 @@ def _cmp_two_phase(spark, rows, gap_us, n_chunks, tiebreak=None):
 
 
 def test_two_phase_equals_plain_randomized(spark):
-    """VERDICT r10 #3: chunk-local sessionization + boundary merge is
-    EQUAL to the single-window operator on randomized event streams —
-    sessions spanning chunk boundaries, multi-chunk sessions, single-
-    event keys, and every chunk-count including degenerate n_chunks=1."""
+    """VERDICT r10 #3: chunk-local sessionization + boundary merge (the
+    hot-key path of ``sessionize_skew``) is EQUAL to the single-window
+    operator on randomized event streams — sessions spanning chunk
+    boundaries, multi-chunk sessions, single-event keys, and every
+    chunk-count including degenerate n_chunks=1."""
     import random
 
     rng = random.Random(31)
@@ -323,13 +332,12 @@ def test_two_phase_boundary_continuation(spark):
     ]
     for n_chunks in (2, 5, 16):
         _cmp_two_phase(spark, rows, 60_000_000, n_chunks)
-    from ncagg_spark.operators.sessionize import sessionize_two_phase
-
     df = spark.createDataFrame(
         rows, "user_id long, event_id long, ts timestamp"
     )
-    out = sessionize_two_phase(
-        df, "ts", "user_id", gap_us=60_000_000, n_chunks=8
+    out = sessionize_skew(
+        df, "ts", "user_id", gap_us=60_000_000, n_chunks=8,
+        hot_keys=[1, 2],
     )
     per_user = {
         r["user_id"]: r["mx"]
@@ -344,6 +352,8 @@ def test_two_phase_ties_and_explicit_bounds(spark):
     """Tied timestamps resolve via the tiebreak column identically in
     both forms; passing explicit bounds skips the min/max pre-pass and
     still matches."""
+    from ncagg_spark.functions.time import epoch_us
+
     rows = [
         (1, 3, _ts(1)),
         (1, 1, _ts(1)),
@@ -352,54 +362,32 @@ def test_two_phase_ties_and_explicit_bounds(spark):
         (2, 5, _ts(2)),
     ]
     _cmp_two_phase(spark, rows, 60_000_000, 4, tiebreak=["event_id"])
-    from ncagg_spark.functions.time import epoch_us
-    from ncagg_spark.operators.sessionize import sessionize_two_phase
-
     df = spark.createDataFrame(
         rows, "user_id long, event_id long, ts timestamp"
     )
     lo, hi = df.agg(
         F.min(epoch_us("ts")), F.max(epoch_us("ts"))
     ).first()
-    want = sorted(
-        map(
-            tuple,
-            sessionize(
-                df, "ts", "user_id", gap_us=60_000_000,
-                tiebreak=["event_id"],
-            ).collect(),
-        )
+    _cmp_two_phase(
+        spark, rows, 60_000_000, 4, tiebreak=["event_id"],
+        bounds=(int(lo), int(hi)),
     )
-    got = sorted(
-        map(
-            tuple,
-            sessionize_two_phase(
-                df, "ts", "user_id", gap_us=60_000_000, n_chunks=4,
-                tiebreak=["event_id"], bounds=(int(lo), int(hi)),
-            )
-            .select("user_id", "event_id", "ts", "session_idx")
-            .collect(),
-        )
-    )
-    assert got == want
 
 
 def test_two_phase_spreads_hot_key_over_tasks(spark):
-    """The point of the operator: phase 1 partitions by (key, chunk), so
-    one hot key's rows land in MANY window partitions instead of one.
-    Pinned structurally: distinct (key, chunk) pairs for the hot key >
-    1, and the executed plan's first window is over (key, chunk)."""
-    from ncagg_spark.functions.time import epoch_us
-    from ncagg_spark.operators.sessionize import sessionize_two_phase
-
+    """The point of the hot-key path: the window partitions by (key,
+    chunk), so one hot key's rows land in MANY window partitions instead
+    of one. Pinned structurally: the optimized plan's first window is
+    over (key, chunk), and the one session is resolved across chunks."""
     rows = [
         (7, i, _ts(0) + dt.timedelta(seconds=i * 3)) for i in range(3000)
     ]
     df = spark.createDataFrame(
         rows, "user_id long, event_id long, ts timestamp"
     )
-    out = sessionize_two_phase(
-        df, "ts", "user_id", gap_us=60_000_000, n_chunks=16
+    out = sessionize_skew(
+        df, "ts", "user_id", gap_us=60_000_000, n_chunks=16,
+        hot_keys=[7],
     )
     # one continuous session, resolved across all 16 chunks
     assert out.agg(F.max("session_idx")).first()[0] == 1
@@ -413,8 +401,6 @@ def test_sessionize_skew_equals_plain(spark):
     with one dominant key, under auto-detection, caller-known hot keys,
     and the no-hot-keys fast path."""
     import random
-
-    from ncagg_spark.operators.sessionize import sessionize_skew
 
     rng = random.Random(77)
     rows = []
@@ -467,8 +453,6 @@ def test_sessionize_skew_guards_and_routing(spark):
     """max_hot_keys guard raises; non-hot keys keep chunk 0 (their
     window partition is the whole key — identical to plain)."""
     import pytest as _pytest
-
-    from ncagg_spark.operators.sessionize import sessionize_skew
 
     rows = [
         (u, u * 100 + i, _ts(0) + dt.timedelta(seconds=i * 9000))

@@ -63,57 +63,3 @@ def test_incremental_aggregate_catches_up_and_updates(spark, tmp_path):
     assert got[22]["value"] == 22.0
     # gap 10..19 and tail 25..29 are fills
     assert all(got[i]["value"] is None for i in range(10, 20))
-
-
-@pytest.mark.slow
-def test_partitioned_incremental_rewrites_only_touched_days(spark, tmp_path):
-    import glob
-    import os
-
-    from ncagg_spark.streaming.regularize import (
-        incremental_aggregate_partitioned,
-    )
-
-    inp = str(tmp_path / "p_incoming")
-    out = str(tmp_path / "p_agg")
-    ckpt = str(tmp_path / "p_ckpt")
-    day_us = 86_400_000_000
-    cfg = AggregationConfig(
-        index_by="ts",
-        cadence_hz=1.0,
-        min_bound=T0_US / 1e6,
-        max_bound=(T0_US + 2 * day_us) / 1e6,
-    )
-
-    def day_files(day):
-        return {
-            f: os.path.getmtime(f)
-            for f in glob.glob(f"{out}/dt={day}/*.parquet")
-        }
-
-    # batch 1: records on day 1 only
-    _write_granule(spark, inp, 0, 10)
-    q = incremental_aggregate_partitioned(spark, inp, out, ckpt, SCHEMA, cfg)
-    q.awaitTermination(120)
-
-    d1, d2 = "2024-01-02", "2024-01-03"
-    assert spark.read.parquet(out).count() == 86400  # only day 1 exists
-    snap = day_files(d1)
-    assert snap and not day_files(d2)
-
-    # batch 2: records on day 2 only -> day 1 partition must be untouched
-    rows = [(T0_US + day_us + i * 1_000_000, 100.0 + i) for i in range(5)]
-    spark.createDataFrame(rows, "us long, value double").select(
-        F.timestamp_micros(F.col("us")).alias("ts"), "value"
-    ).coalesce(1).write.mode("append").parquet(inp)
-    q2 = incremental_aggregate_partitioned(spark, inp, out, ckpt, SCHEMA, cfg)
-    q2.awaitTermination(120)
-
-    assert day_files(d1) == snap  # byte-identical file set, same mtimes
-    assert day_files(d2)
-    got = spark.read.parquet(out)
-    assert got.count() == 2 * 86400
-    day2_real = got.filter(
-        (~F.col("is_fill")) & (F.col("dt") == d2)
-    ).orderBy("ts").collect()
-    assert [r["value"] for r in day2_real] == [100.0 + i for i in range(5)]

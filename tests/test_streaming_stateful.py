@@ -1,5 +1,5 @@
-"""applyInPandasWithState gap detector: state persists across
-micro-batches — a gap spanning two batches is still detected.
+"""applyInPandasWithState gap filler: state persists across
+micro-batches — a gap spanning two batches is still filled.
 """
 
 from __future__ import annotations
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ncagg_spark.streaming.regularize import stream_granules
-from ncagg_spark.streaming.stateful import detect_gaps
 
 T0_US = 1_704_153_600_000_000
 
@@ -53,32 +52,6 @@ class _FakeState:
 
     def setTimeoutDuration(self, ms):
         self.timeout_set = ms
-
-
-def test_timeout_flushes_open_trailing_gap():
-    from ncagg_spark.streaming.stateful import make_gap_detector
-
-    detect = make_gap_detector(1_000_000, 1.2)
-    st = _FakeState(value=(T0_US,), timed_out=True)
-    out = list(detect(("A",), iter([]), st))
-    assert st.removed
-    assert len(out) == 1
-    row = out[0].iloc[0]
-    assert row["key"] == "A"
-    assert row["gap_end"] is None and row["missing_slots"] is None
-    assert int(row["gap_start"].value) // 1000 == T0_US
-
-
-def test_data_batch_arms_timeout():
-    import pandas as pd
-
-    from ncagg_spark.streaming.stateful import make_gap_detector
-
-    detect = make_gap_detector(1_000_000, 1.2)
-    st = _FakeState()
-    pdf = pd.DataFrame({"ts": pd.to_datetime([T0_US * 1000], utc=None)})
-    list(detect(("A",), iter([pdf]), st))
-    assert st.exists and st.timeout_set == 1200
 
 
 def test_gap_filler_emits_missing_slots():
@@ -176,48 +149,6 @@ def test_gap_filler_state_spans_batches(spark, tmp_path):
         (5, True),
         (6, False),
     ]
-
-
-@pytest.mark.slow
-def test_gap_detector_state_spans_batches(spark, tmp_path):
-    inp = str(tmp_path / "in")
-    # batch 1 file: key A seconds 0..3, then nothing
-    _write(spark, inp, [("A", T0_US + i * 1_000_000) for i in range(4)])
-    # batch 2 file: key A resumes at second 10 (gap of 6 slots),
-    # key B appears fresh (no gap — no previous state)
-    _write(
-        spark,
-        inp,
-        [("A", T0_US + 10 * 1_000_000), ("B", T0_US + 11 * 1_000_000)],
-    )
-
-    stream = stream_granules(spark, inp, SCHEMA, max_files_per_trigger=1)
-    # timeout="none": see test_gap_filler_state_spans_batches — the
-    # open-trailing-gap flush is unit-tested with _FakeState above
-    gaps = detect_gaps(
-        stream, key_col="event_type", step_us=1_000_000, dt_max_s=1.2,
-        timeout="none",
-    )
-    q = (
-        gaps.writeStream.format("memory")
-        .queryName("gap_sink")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert not q.isActive, "availableNow query failed to self-terminate"
-
-    got = spark.sql("SELECT * FROM gap_sink").collect()
-    closed = [g for g in got if g["gap_end"] is not None]
-    assert len(closed) == 1
-    g = closed[0]
-    assert g["key"] == "A"
-    assert g["missing_slots"] == 6
-    assert (g["gap_end"] - g["gap_start"]).total_seconds() == 7.0
-    # with timeout="none" no open trailing rows can appear
-    assert not [g for g in got if g["gap_end"] is None]
 
 
 @pytest.mark.slow

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from ncagg_spark.functions.time import (
     cf_to_timestamp,
-    iso_ms,
     parse_partial_datetime,
     timestamp_to_cf,
 )
@@ -53,14 +52,6 @@ def test_cf_bad_units():
         cf_to_timestamp(F.lit(0.0), "fortnights since 2000-01-01")
     with pytest.raises(ValueError):
         cf_to_timestamp(F.lit(0.0), "not a units string")
-
-
-def test_iso_ms_format(spark):
-    df = spark.createDataFrame([(1_704_153_600_123_456,)], "us long")
-    got = df.select(
-        iso_ms(F.timestamp_micros(F.col("us"))).alias("s")
-    ).collect()[0]["s"]
-    assert got == "2024-01-02T00:00:00.123Z"
 
 
 # --- partial datetime: the reference's YYYY[MM[DD[HH[MM]]]] sweep ---

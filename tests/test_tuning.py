@@ -1,6 +1,6 @@
 """``tuning``: the ``materialized`` lifecycle, and the size-estimate
-gates — a failed ``plan_bytes`` estimate keeps every caller on its
-default path instead of forcing the gate on."""
+gates — a failed or unknown ``plan_bytes`` estimate keeps every caller
+on its default path instead of forcing the gate on."""
 
 from __future__ import annotations
 
@@ -77,6 +77,28 @@ def test_failed_estimate_skips_gap_fill_checkpoint(
     assert _warned(failed_estimate)
 
 
+def test_unknown_size_skips_gap_fill_checkpoint(spark, checkpoints, caplog):
+    # a one-row local frame: Spark sizes its RDD-backed relation at
+    # spark.sql.defaultSizeInBytes, so the estimate is "unknown", not
+    # above the 128 MiB gate
+    caplog.set_level(logging.WARNING, logger="ncagg_spark")
+    origin = 1_700_000_000_000_000
+    step = 60_000_000
+    df = spark.createDataFrame(
+        [(1, origin + 3 * step)], "event_id long, us long"
+    ).select("event_id", F.timestamp_micros(F.col("us")).alias("ts"))
+    df = cadence_bucket(df, "ts", origin_us=origin, step_us=step)
+    df = dedup_cadence(df, "ts", tiebreak=["event_id"])
+    assert tuning.plan_bytes(df) is None
+    out = gapfill.gap_fill(
+        spark, df, "ts",
+        origin_us=origin, step_us=step, n_buckets=8, anchor="previous",
+    )
+    assert out.count() == 8
+    assert not checkpoints
+    assert any("size unknown" in r.getMessage() for r in caplog.records)
+
+
 def _persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
@@ -111,18 +133,16 @@ def test_materialized_releases_when_the_body_raises(spark):
 
 @pytest.mark.parametrize("materialize", [False, True])
 def test_gap_fill_previous_materialized_rows_unchanged(
-    spark, monkeypatch, checkpoints, materialize
+    spark, monkeypatch, checkpoints, tmp_path, materialize
 ):
     # 1-min cadence over 12 slots; real records at slots 3, 4, 8 with
     # off-grid phases -> leading fills (back-computed), interior fills
     # (continue-from-previous) and trailing fills all exercised.
     # Gate threshold: 0 forces the checkpointed path, a huge value the
-    # lazy (shared-subtree) path — rows must be identical. The estimate
-    # of this plan over a local Python list is above 2^63 (Spark sizes
-    # an RDD-backed relation at 2^63 - 1 bytes), so "huge" has to be
-    # larger still.
+    # lazy (shared-subtree) path — rows must be identical. The input is
+    # Parquet-backed, so the gate sees a known size estimate.
     monkeypatch.setattr(
-        tuning, "MATERIALIZE_MIN_BYTES", 0 if materialize else 1 << 128
+        tuning, "MATERIALIZE_MIN_BYTES", 0 if materialize else 1 << 40
     )
     origin = 1_700_000_000_000_000
     step = 60_000_000
@@ -131,9 +151,13 @@ def test_gap_fill_previous_materialized_rows_unchanged(
         (2, origin + 4 * step + 11_000_000),
         (3, origin + 8 * step + 2_000_000),
     ]
-    df = spark.createDataFrame(
+    path = str(tmp_path / "events")
+    spark.createDataFrame(
         [(i, t) for i, t in data], "event_id long, us long"
-    ).select("event_id", F.timestamp_micros(F.col("us")).alias("ts"))
+    ).write.parquet(path)
+    df = spark.read.parquet(path).select(
+        "event_id", F.timestamp_micros(F.col("us")).alias("ts")
+    )
     df = cadence_bucket(df, "ts", origin_us=origin, step_us=step)
     df = dedup_cadence(df, "ts", tiebreak=["event_id"])
     out = gapfill.gap_fill(

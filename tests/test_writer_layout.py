@@ -156,38 +156,3 @@ def test_partition_by_date_requires_order(three_days, tmp_path):
         write_aggregate(
             three_days, str(tmp_path / "x"), partition_by_date=True
         )
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """The 100 TB co-located-join contract: two tables bucketed on the
-    join key must sort-merge join with NO Exchange on either side."""
-    import io
-    from contextlib import redirect_stdout
-
-    from ncagg_spark.sources.writer import write_bucketed
-
-    left = spark.range(0, 10_000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("a")
-    )
-    right = spark.range(0, 10_000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("b")
-    )
-    write_bucketed(left, "bt_left", "k", n_buckets=8, sort_by="k")
-    write_bucketed(right, "bt_right", "k", n_buckets=8, sort_by="k")
-    # at real scale neither side broadcasts; force the same situation so
-    # the bucketed sort-merge path is what gets planned
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = spark.table("bt_left").join(spark.table("bt_right"), "k")
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            j.explain("formatted")
-        plan = buf.getvalue()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-        assert j.count() == 10_000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bt_left")
-        spark.sql("DROP TABLE IF EXISTS bt_right")

@@ -1,11 +1,15 @@
-"""Dump .explain("formatted") for driver queries to plans/r16/<q>_<tag>.txt.
+"""Dump .explain("formatted") for driver queries to
+plans/<round>/<q>_<tag>.txt.
 
 Usage:
-    python tools/dump_plans_r16.py <tag> [query ...]     # default: all queries
+    python tools/dump_plans.py <round> <tag> [query ...]  # default: all queries
 
-The optimization-round evidence artifact: a _before and _after file per
-touched query so plan claims (Exchange counts, join strategies, pushed
-filters) are checkable without running Spark.
+e.g. ``python tools/dump_plans.py r17 before q1 q2``. The optimization
+evidence artifact: a _before and _after file per touched query so plan
+claims (Exchange counts, join strategies, pushed filters) are checkable
+without running Spark. Each file also carries the plans of the internal
+frames that eager-at-construction operators execute (``plan_probe``).
+Reads the sf directory from ``$SPARK_GRAFT_SF_DIR``.
 """
 
 from __future__ import annotations
@@ -23,10 +27,11 @@ from ncagg_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:]
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    rnd, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    out_dir = os.path.join(REPO, "plans", "r16")
+    out_dir = os.path.join(REPO, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
 
     spark = get_spark(app_name="ncagg-plan-dump")

@@ -1,10 +1,9 @@
 """Skew stress with MEASUREMENT, not just result equality (VERDICT r9 #2).
 
 The brief's scale-killer list names "full shuffle on a skewed key" as
-the classic 100-TB failure; `operators/skew.py` was only ever
-result-equality-tested. This tool builds a deliberately skewed events
-variant — ONE hot user_id owning >=30% of all rows — and measures the
-three join strategies under a FORCED sort-merge join (broadcast
+the classic 100-TB failure. This tool builds a deliberately skewed
+events variant — ONE hot user_id owning >=30% of all rows — and
+measures the plain join under a FORCED sort-merge join (broadcast
 disabled, simulating a dimension side too big to broadcast on a real
 cluster):
 
@@ -14,9 +13,6 @@ cluster):
                 partition (OptimizeSkewedJoin CAN split a single hot
                 key for SMJ: it divides the partition by size and
                 replicates the matching build-side partition)
-  salted      : operators/skew.salted_join n_salts=16 — the explicit
-                remedy for the shapes AQE cannot fix (it only rewrites
-                SMJ stages; window/groupBy partitions are untouchable)
 
 Per scenario it records wall time and the max/median TASK duration of
 the heaviest stage (Spark UI REST API — the straggler is a task-level
@@ -45,7 +41,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from ncagg_spark.operators.skew import salted_join
 from ncagg_spark.session import get_spark
 from ncagg_spark.sources.tables import load_table
 
@@ -143,7 +138,7 @@ def build_fixture(spark, src: str, hot_frac: float) -> None:
     print(f"fixture: {n} events, hot key owns {h} ({h / n:.1%})")
 
 
-def run_join(spark, name: str, conf: dict, salted: bool) -> dict:
+def run_join(spark, name: str, conf: dict) -> dict:
     ev = load_table(spark, f"{SKEW_DIR}/events.parquet")
     users = load_table(spark, f"{SKEW_DIR}/users.parquet")
     saved = {k: spark.conf.get(k, None) for k in conf}
@@ -151,10 +146,7 @@ def run_join(spark, name: str, conf: dict, salted: bool) -> dict:
         spark.conf.set(k, v)
     try:
         t0 = time.time() * 1000
-        if salted:
-            joined = salted_join(ev, users, "user_id", n_salts=16)
-        else:
-            joined = ev.join(users, on="user_id")
+        joined = ev.join(users, on="user_id")
         # aggregate to force full evaluation of every joined row
         out = joined.groupBy("segment").agg(
             F.count("*").alias("n"),
@@ -222,7 +214,6 @@ def main() -> None:
             spark,
             "plain-noAQE",
             {**force_smj, "spark.sql.adaptive.enabled": "false"},
-            salted=False,
         )
     )
     # default AQE: skewedPartitionThresholdInBytes=256m is sized for
@@ -234,7 +225,6 @@ def main() -> None:
             "plain-AQE-dflt",
             {**force_smj, "spark.sql.adaptive.enabled": "true",
              "spark.sql.adaptive.skewJoin.enabled": "true"},
-            salted=False,
         )
     )
     # thresholds scaled down by the same factor the fixture is scaled
@@ -250,15 +240,6 @@ def main() -> None:
                  "4m",
              "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
              "spark.sql.adaptive.advisoryPartitionSizeInBytes": "2m"},
-            salted=False,
-        )
-    )
-    results.append(
-        run_join(
-            spark,
-            "salted",
-            {**force_smj, "spark.sql.adaptive.enabled": "true"},
-            salted=True,
         )
     )
 
@@ -271,16 +252,10 @@ def main() -> None:
         results.append(run_window_query(spark, qname, qs[qname]))
 
     # VERDICT r10 #3: remove the one-task window residual. Rows: the
-    # straggler (one-phase on the HOT fixture), the naive fix
-    # (two-phase on EVERY key — measured counterproductive at 2M keys:
-    # corrections = keys x chunks rows), the real fix (hot-key-routed
+    # straggler (one-phase on the HOT fixture), the fix (hot-key-routed
     # sessionize_skew, auto-detected and with caller-known hot keys),
     # and the no-skew floor (one-phase on the original UNIFORM events).
-    from ncagg_spark.operators.sessionize import (
-        sessionize,
-        sessionize_skew,
-        sessionize_two_phase,
-    )
+    from ncagg_spark.operators.sessionize import sessionize, sessionize_skew
 
     gap_us = 12 * 3600 * 1_000_000
     print("sessionize one-phase vs two-phase (33%-hot key vs uniform):")
@@ -308,16 +283,6 @@ def main() -> None:
             hot_tbl,
             lambda ev: sessionize(
                 ev, "ts", "user_id", gap_us=gap_us, tiebreak=["event_id"]
-            ),
-        )
-    )
-    results.append(
-        run_sess(
-            "sess-2p-all-keys",
-            hot_tbl,
-            lambda ev: sessionize_two_phase(
-                ev, "ts", "user_id", gap_us=gap_us, n_chunks=32,
-                tiebreak=["event_id"],
             ),
         )
     )
